@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, LongType
 
+from gis_scripts_spark.cachescope import persist, scoped
 from gis_scripts_spark.geom import core as geom
 from gis_scripts_spark.geom import wkb as wkb_mod
 from gis_scripts_spark.index import cells as cells_mod
@@ -54,6 +55,7 @@ def _coverage_udf(wkb_col: pd.Series, x0: pd.Series, y0: pd.Series, x1: pd.Serie
     return pd.Series(out)
 
 
+@scoped
 def coverage_join(
     footprints_df: DataFrame,
     rects_df: DataFrame,
@@ -90,13 +92,8 @@ def coverage_join(
     setting. Pass True for known-small dims (zero extra jobs, the
     queries.py pattern) or False to force the shuffle path.
 
-    The persisted candidate frame is deliberately NOT auto-unpersisted
-    (r4 advice: a weakref.finalize on the returned frame unpersisted the
-    cache as soon as a caller dropped the parent after deriving a child,
-    silently recomputing the dedup shuffle). MEMORY_AND_DISK blocks are
-    evicted LRU by Spark when space is needed; callers wanting immediate
-    release can unpersist via the returned frame's `_coverage_join_cand`
-    attribute."""
+    The persisted candidate frame lives as long as the returned frame
+    (cachescope)."""
     cov = _cover_wkb_udf(z)
     fp_src = footprints_df.select(
         F.col(fp_id).alias("_fid"), F.col(wkb_col).alias("_wkb")
@@ -147,12 +144,11 @@ def coverage_join(
         .select("_fid", "_rid", "x_min", "y_min", "x_max", "y_max")
         .dropDuplicates(["_fid", "_rid"])  # ids+bbox only in this Exchange
     )
-    cand_cached = None
     if broadcast_candidates == "auto":
         # exact gate: persist the ids-only candidate frame and count it —
         # the count is the real quantity the broadcast decision needs, and
         # the persisted result feeds the join so the pipeline runs once
-        cand = cand_cached = cand.persist()
+        cand = persist(cand)
         do_broadcast = cand.count() <= max_broadcast_candidates
     else:
         do_broadcast = bool(broadcast_candidates)
@@ -162,10 +158,7 @@ def coverage_join(
         "coverage",
         _coverage_udf(F.col("_wkb"), F.col("x_min"), F.col("y_min"), F.col("x_max"), F.col("y_max")),
     )
-    res = (
+    return (
         out.filter(F.col("coverage") > min_coverage)
         .select(F.col("_fid").alias(fp_id), F.col("_rid").alias(rect_id), "coverage")
     )
-    # explicit release handle; no weakref auto-unpersist (see docstring)
-    res._coverage_join_cand = cand_cached
-    return res

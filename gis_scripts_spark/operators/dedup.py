@@ -21,9 +21,6 @@ Scale shapes:
 from __future__ import annotations
 
 import hashlib
-import itertools
-import os
-import weakref
 
 import numpy as np
 import pandas as pd
@@ -31,36 +28,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
+from gis_scripts_spark.cachescope import persist, scoped
+
 _MERSENNE = (1 << 61) - 1
-
-# Invocation counter for plan-salting internal persists (the knn.py
-# CacheManager-aliasing lesson): Spark's CacheManager is PLAN-keyed, so two
-# calls of the same operator over the same input would alias one cache
-# entry — the second call would silently read the first call's
-# materialization (a cross-run result cache the bench rules forbid) and a
-# deferred release from call 1 could drop call 2's data. A per-invocation
-# literal column makes every persist plan unique; a weakref finalizer on
-# the RETURNED frame unpersists as soon as the caller drops it.
-_INVOKE_COUNTER = itertools.count()
-
-
-def _salted_persist(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    tok = int((os.getpid() << 20) ^ next(_INVOKE_COUNTER))
-    salted = df.withColumn("_salt", F.lit(tok)).persist()
-    return salted.drop("_salt"), salted
-
-
-def _finalize_unpersist(out: DataFrame, handles: list[DataFrame]) -> DataFrame:
-    def _release(hs=tuple(reversed(handles))):
-        for h in hs:
-            try:
-                h.unpersist(False)
-            except Exception:
-                pass  # session already stopped
-
-    weakref.finalize(out, _release)
-    return out
-
 
 _TOKEN_CACHE: dict[str, int] = {}
 
@@ -141,6 +111,7 @@ def minhash_signature_udf(n_perm: int = 128, shingle_n: int = 3, seed: int = 13)
     return sig
 
 
+@scoped
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -192,26 +163,17 @@ def minhash_lsh_pairs(
     ]
     # ids-only band table: the only thing the LSH self-join shuffles.
     # persist: both self-join sides read it, so the (expensive) signature
-    # UDF runs ONCE per document; the cache is released when the caller
-    # drops the returned DataFrame (weakref finalizer, as in knn_join) —
-    # it holds only (id, band, bhash) rows, never text
-    banded = base.withColumn("_band", F.explode(F.array(*band_cols))).select(
+    # UDF runs ONCE per document; it holds only (id, band, bhash) rows,
+    # never text
+    banded = persist(base.withColumn("_band", F.explode(F.array(*band_cols))).select(
         "_id", F.col("_band.band").alias("band"), F.col("_band.bhash").alias("bhash")
-    ).persist()
+    ))
 
     left = banded.select(F.col("_id").alias("id_a"), "band", "bhash")
     right = banded.select(F.col("_id").alias("id_b"), "band", "bhash")
     cand = left.join(right, ["band", "bhash"]).filter(F.col("id_a") < F.col("id_b"))
     # report-once by min band: groupBy aggregates map-side (no window sort)
     pairs = cand.groupBy("id_a", "id_b").agg(F.min("band").alias("_first_band")).drop("_first_band")
-
-    import weakref
-
-    def _release(h=banded):
-        try:
-            h.unpersist(False)
-        except Exception:
-            pass  # session already stopped
 
     if not verify:
         # estimated jaccard from signature agreement (JVM-side zip_with);
@@ -227,9 +189,7 @@ def minhash_lsh_pairs(
             ).cast("double")
             / F.lit(n_perm)
         ).alias("est_jaccard")
-        out = pairs.select("id_a", "id_b", est)
-        weakref.finalize(out, _release)
-        return out
+        return pairs.select("id_a", "id_b", est)
 
     # texts joined back once per surviving pair (never through the explode)
     txt = df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t"))
@@ -248,9 +208,7 @@ def minhash_lsh_pairs(
         return pd.Series(out)
 
     out = pairs.select("id_a", "id_b", jaccard(F.col("_ta"), F.col("_tb")).alias("jaccard"))
-    out = out.filter(F.col("jaccard") >= threshold)
-    weakref.finalize(out, _release)
-    return out
+    return out.filter(F.col("jaccard") >= threshold)
 
 
 # ----------------------------------------------------------------- simhash
@@ -297,6 +255,7 @@ def simhash_udf(shingle_n: int = 1, hash_fn: str = "blake2b"):
     return sim
 
 
+@scoped
 def simhash_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -321,9 +280,8 @@ def simhash_pairs(
     # - persist the signatures: the band self-join's two sides are separate
     #   subtrees, so without materialization the plan evaluates the UDF
     #   TWICE (the captured physical plan showed two Scan->ArrowEvalPython
-    #   branches). 50k (id, int64) rows — KBs of storage, released by the
-    #   caller dropping the frame (ContextCleaner), never crosses runs.
-    base, _base_handle = _salted_persist(
+    #   branches). 50k (id, int64) rows — KBs of storage.
+    base = persist(
         spread(df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t")), id_col)
         .select("_id", sim(F.col("_t")).alias("_sh"))
     )
@@ -356,8 +314,7 @@ def simhash_pairs(
     )
     # report-once via groupBy (map-side partial agg), NOT a window
     # row_number (which would shuffle AND sort every candidate).
-    out = pairs.groupBy("id_a", "id_b").agg(F.min("hamming").alias("hamming"))
-    return _finalize_unpersist(out, [_base_handle])
+    return pairs.groupBy("id_a", "id_b").agg(F.min("hamming").alias("hamming"))
 
 
 def hamming_neardup_pairs(
@@ -859,6 +816,7 @@ def minhash_sql_constants(n_perm: int = 64, seed: int = 101):
     return [int(x) for x in a], [int(x) for x in b]
 
 
+@scoped
 def minhash_lsh_pairs_sql(
     df: DataFrame,
     text_col: str = "text",
@@ -897,9 +855,12 @@ def minhash_lsh_pairs_sql(
     # spread BEFORE the shingle build (optimization-round stage capture at
     # 50k docs: a single-file scan plans the whole per-doc pipeline on 1-2
     # tasks). The keyed repartition is AQE-exempt; at real scale (many
-    # input splits) spread is a no-op.
+    # input splits) spread is a no-op. A NULL text has no shingles (the
+    # oracle's STRING_SPLIT(NULL)), so it gets no signature and no pair.
     docs = spread(
-        df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t")), id_col
+        df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t"))
+        .filter(F.col("_t").isNotNull()),
+        id_col,
     )
     # ONE Python stage for shingle + hash + signature (optimization round):
     # every JVM formulation measured worse at 50k docs — the exploded
@@ -940,11 +901,7 @@ def minhash_lsh_pairs_sql(
     # separate subtrees (the planner broadcasts one), so without
     # materialization the signature UDF runs twice — and unlike the old
     # multi-million-row shingle cache this is one 64-long array per doc.
-    # Released when the caller drops the returned frame (see _pin in
-    # queries.py for why wrappers must keep it alive).
-    with_sig, _sig_handle = _salted_persist(
-        docs.select("_id", sig_udf(F.col("_t")).alias("_sig"))
-    )
+    with_sig = persist(docs.select("_id", sig_udf(F.col("_t")).alias("_sig")))
     band_structs = F.array(*[
         F.struct(
             F.lit(b).alias("band"),
@@ -1000,13 +957,12 @@ def minhash_lsh_pairs_sql(
             out[i] = inter / (len(sa) + len(sb) - inter)
         return pd.Series(out)
 
-    out = (
+    return (
         cand.join(ta, "id_a")
         .join(tb, "id_b")
         .select("id_a", "id_b", jac_udf(F.col("_ta"), F.col("_tb")).alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
-    return _finalize_unpersist(out, [_sig_handle])
 
 
 def cluster_pairs_distributed(

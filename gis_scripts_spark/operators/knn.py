@@ -25,10 +25,6 @@ oracles) or haversine meters ("haversine").
 
 from __future__ import annotations
 
-import itertools
-import os
-import weakref
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -42,21 +38,11 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from gis_scripts_spark.cachescope import persist, scoped
 from gis_scripts_spark.index import cells as cells_mod
 
 EARTH_R = 6371000.0
 
-# Spark's CacheManager keys cache entries by (canonicalized) LOGICAL PLAN.
-# Two knn_join invocations over identical inputs therefore produce
-# IDENTICAL persisted plans: the second invocation's persist() aliases the
-# first's live entry, and the first's deferred cache release (the GC
-# finalizer on its returned frame) then plan-matches and KILLS the second
-# run's caches mid-flight — measured as 6 s vs 106 s final-action swings on
-# back-to-back identical 4M runs. Every persisted frame is salted with a
-# per-invocation literal column so plans can never alias across calls; the
-# salt is dropped immediately after persist (InMemoryTableScan prunes it,
-# and a constant column RLE-compresses to nothing in the cache).
-_INVOKE_COUNTER = itertools.count(1)
 
 
 def _haversine(qlon, qlat, plon, plat):
@@ -67,6 +53,7 @@ def _haversine(qlon, qlat, plon, plat):
     return 2.0 * EARTH_R * np.arcsin(np.sqrt(a))
 
 
+@scoped
 def knn_join(
     points_df: DataFrame,
     queries_df: DataFrame,
@@ -115,15 +102,6 @@ def knn_join(
     cell_h = cells_mod.cell_size_deg(z)[1]
     grid_n = 1 << z
     wrap = metric == "haversine"
-    # unique per invocation (see _INVOKE_COUNTER above)
-    _salt_tok = int((os.getpid() << 20) ^ next(_INVOKE_COUNTER))
-
-    def _persist_salted(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-        """Persist `df` under an invocation-unique plan; returns
-        (usable frame with the salt projected away, unpersist handle)."""
-        salted = df.withColumn("_salt", F.lit(_salt_tok)).persist()
-        return salted.drop("_salt"), salted
-
     # (A spread() of these scans was measured here in the optimization
     # round and REVERTED: with the premature-unpersist fix in place the
     # cache fills already parallelize through the first shuffle, and the
@@ -252,7 +230,7 @@ def knn_join(
 
         return topk
 
-    pts, _pts_handle = _persist_salted(pts)  # re-joined every round
+    pts = persist(pts)  # re-joined every round
     if initial_r is None:
         n_pts = n_points_hint if n_points_hint is not None else pts.count()
         density = max(n_pts, 1) / (360.0 * 180.0)  # rows per deg^2 (global)
@@ -263,8 +241,6 @@ def knn_join(
         telemetry["initial_r"] = int(initial_r)
         telemetry["rounds"] = []
     resolved_parts: list[DataFrame] = []
-    scored_caches: list[DataFrame] = []   # back the returned frame's lineage
-    transient_caches: list[DataFrame] = []  # per-round survivors: dead at return
     unresolved = qry
     r = initial_r
     use_jvm = metric == "euclid2"
@@ -297,8 +273,7 @@ def knn_join(
             unresolved = unresolved.withColumn("_r", rlit)
         # referenced by both the probe groupBy and the candidate join each
         # round — persist so the cnts-join lineage runs once
-        unresolved, _h = _persist_salted(unresolved)
-        transient_caches.append(_h)
+        unresolved = persist(unresolved)
     # max_rounds + 1 passes: if the doubling budget runs out before the
     # clamped disk covers the grid, the LAST pass forces r = grid_n so every
     # remaining query resolves (covers_grid) — no query ever silently drops
@@ -419,7 +394,7 @@ def knn_join(
             resolved = (F.col("_cr") >= F.lit(int(grid_n))) | (
                 (n_top >= k) & (kth <= bound_col * bound_col)
             )
-            scored, _scored_handle = _persist_salted(
+            scored = persist(
                 top.select(
                     F.col("_qid").alias("query_id"),
                     F.col("_pid").alias("neighbor_id"),
@@ -436,14 +411,12 @@ def knn_join(
             ).select("_qcell", "_pid", "_plon", "_plat")
             # persist: scored is consumed twice per round and by the final
             # union (per-round localCheckpoint measured 8x slower — it
-            # defeats AQE and re-materializes). The cache is released by
-            # the finalizer below.
-            scored, _scored_handle = _persist_salted(
+            # defeats AQE and re-materializes).
+            scored = persist(
                 unresolved.groupBy("_qcell")
                 .cogroup(cand.groupBy("_qcell"))
                 .applyInPandas(make_topk(r), result_schema)
             )
-        scored_caches.append(_scored_handle)
         done = scored.filter(F.col("_resolved") & F.col("neighbor_id").isNotNull()).drop("_resolved")
         resolved_parts.append(done)
         import time as _time
@@ -471,10 +444,7 @@ def knn_join(
             # chain of prior anti-joins — measured as a ~6s FIXED cost per
             # round even with 4 surviving queries (r5 material-size bench).
             glong = F.lit(int(grid_n)).cast("long")
-            undone, _h = _persist_salted(
-                unresolved.join(done_q, "_qid", "left_anti")
-            )
-            transient_caches.append(_h)
+            undone = persist(unresolved.join(done_q, "_qid", "left_anti"))
             cw = cells_mod.cell_size_deg(z)[0]
             r_dbl = F.least(F.col("_r") * 2, glong)
             rx_dbl = F.greatest(
@@ -537,35 +507,4 @@ def knn_join(
     out = resolved_parts[0]
     for part in resolved_parts[1:]:
         out = out.unionByName(part)
-    # ALL caches (pts, per-round survivors, scored) are released together
-    # when the caller drops the returned DataFrame — a GC finalizer, the
-    # same reclamation model as Spark's own ContextCleaner. (Eager
-    # localCheckpoint instead measured 8x slower per round and +50% even
-    # once at the end.) Two hard-won rules are encoded here:
-    #
-    # 1. NOTHING is unpersisted eagerly at return. Spark's NON-CASCADING
-    #    cache invalidation (SPARK-24596) handles an unpersist of a plan
-    #    that other cache entries depend on by RE-CACHING the dependents
-    #    UNMATERIALIZED — so eagerly dropping `pts` here de-materialized
-    #    the already-computed `scored` entries and the caller's first
-    #    action silently re-ran the whole round-1 join (measured: 1 s vs
-    #    45-136 s final-action swings at 4M; the REST stage dump showed the
-    #    join stage executing twice with identical shuffle signatures).
-    # 2. The finalizer releases in REVERSE creation order (leaf frames
-    #    before the roots they depend on), so no unpersist ever finds a
-    #    still-live dependent to de-materialize.
-    #
-    # The per-invocation plan salt makes the deferred release race-free: a
-    # finalizer firing mid-way through a LATER identical call can only
-    # match its own invocation's entries (plan-keyed CacheManager).
-    handles = [_pts_handle] + transient_caches + scored_caches
-
-    def _release(hs=tuple(reversed(handles))):
-        for h in hs:
-            try:
-                h.unpersist(False)
-            except Exception:
-                pass  # session already stopped
-
-    weakref.finalize(out, _release)
     return out

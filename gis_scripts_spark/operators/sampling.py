@@ -48,14 +48,16 @@ def balance_classes(
 
             acc = None
             for pdf in batches:
+                # a NULL key hashes to NULL, which the window's ascending
+                # sort puts first; a NULL label is a class of its own
                 md5s = [
-                    hashlib.md5(str(int(k)).encode()).hexdigest()
+                    None if pd.isna(k) else hashlib.md5(str(int(k)).encode()).hexdigest()
                     for k in pdf[key].to_numpy()
                 ]
                 pdf = pdf.assign(_h=md5s)
                 both = pdf if acc is None else pd.concat((acc, pdf))
-                both = both.sort_values(["_h", key], kind="mergesort")
-                acc = both.groupby(lbl, sort=False).head(npc)
+                both = both.sort_values(["_h", key], kind="mergesort", na_position="first")
+                acc = both.groupby(lbl, sort=False, dropna=False).head(npc)
             if acc is not None:
                 yield acc.drop(columns=["_h"])
 

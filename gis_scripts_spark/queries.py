@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from pyspark.sql import Window
 
+from gis_scripts_spark.cachescope import persist, scoped
 from gis_scripts_spark.geom import wkb as wkb_mod
 from gis_scripts_spark.index import cells as cells_mod
 from gis_scripts_spark.index import hex7 as hex7_mod
@@ -51,38 +52,6 @@ _SQL_LAT = f"-60.0 + (({{k}} * {LAT_MULT}) % {LAT_MOD}) / 1000.0"
 
 def _pq(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{table}.parquet")
-
-
-def _pin_cache(child: DataFrame, *cached: DataFrame) -> DataFrame:
-    """Release `cached` persists when `child` is dropped (weakref
-    finalizer) — the query-side twin of the operators' salted-persist
-    pattern, for frames a query function itself caches."""
-    import weakref
-
-    def _release(hs=tuple(reversed(cached))):
-        for h in hs:
-            try:
-                h.unpersist(False)
-            except Exception:
-                pass
-
-    weakref.finalize(child, _release)
-    return child
-
-
-def _pin(child: DataFrame, *parents: DataFrame) -> DataFrame:
-    """Keep operator-returned frames alive for the lifetime of a wrapper
-    projection built on top of them. Operators (knn_join, simhash_pairs,
-    minhash_lsh_pairs_sql, ...) release their internal persists via a
-    weakref finalizer on the frame THEY return; a wrapper's `.select(...)`
-    produces a new DataFrame with no Python reference to that parent, so
-    without this pin the finalizer fires the moment the wrapper returns and
-    every internal cache is dropped BEFORE the query executes (measured:
-    the minhash shingle table recomputed 3x per run, knn's points cache
-    rebuilt every round). The pin defers the release to when the caller
-    drops the wrapped frame — caches still never outlive one invocation."""
-    child._gss_pinned = parents
-    return child
 
 
 def derived_lonlat(df: DataFrame, key: str) -> DataFrame:
@@ -535,7 +504,7 @@ def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         metric="euclid2", exclude_self=True,
         n_points_hint=int(n_pts) if n_pts is not None else None,
     )
-    return _pin(out.select("query_id", "neighbor_id", "rank"), out)
+    return out.select("query_id", "neighbor_id", "rank")
 
 
 SQL_KNN = f"""
@@ -725,7 +694,7 @@ def q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     blake2b 128-perm variant keeps its recall>=0.9 pytest."""
     docs = _pq(spark, sf_dir, "documents")
     out = dedup.minhash_lsh_pairs_sql(docs, n_perm=64, bands=16, shingle_n=3, threshold=0.5)
-    return _pin(out.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard")), out)
+    return out.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
 
 def _sql_minhash() -> str:
@@ -784,9 +753,7 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hamming join."""
     docs = _pq(spark, sf_dir, "documents")
     out = dedup.simhash_pairs(docs, max_hamming=3, shingle_n=1, hash_fn="md5")
-    return _pin(
-        out.select("id_a", "id_b", F.col("hamming").cast("int").alias("hamming")), out
-    )
+    return out.select("id_a", "id_b", F.col("hamming").cast("int").alias("hamming"))
 
 
 SQL_SIMHASH = """
@@ -1359,23 +1326,11 @@ def q_coverage_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist the built-WKB frame: both the candidate pipeline (cell cover)
     # and the final clip join consume it, and without materialization each
     # job re-runs the WKB-build UDF stage (stage capture: 3 UDF stage
-    # evaluations per run). Salted per invocation; released when the
-    # returned frame is dropped.
-    import itertools as _it
-    import os as _os
-
-    global _Q_SALT_COUNTER
-    try:
-        _Q_SALT_COUNTER
-    except NameError:
-        _Q_SALT_COUNTER = _it.count()
-    _fp_salt = int(_os.getpid() << 20) ^ next(_Q_SALT_COUNTER)
-    _fp_cached = boxes.select(
+    # evaluations per run).
+    fp_df = persist(boxes.select(
         F.concat(F.lit("fp_"), F.lpad(F.col("id").cast("string"), 4, "0")).alias("image_id"),
         bbox_wkb("x_min", "y_min", "x_max", "y_max").alias("wkb"),
-        F.lit(_fp_salt).alias("_salt"),
-    ).persist()
-    fp_df = _fp_cached.drop("_salt")
+    ))
     nations = _pq(spark, sf_dir, "nation").select("n_nationkey").collect()
     rects = pd.DataFrame(
         [
@@ -1390,10 +1345,7 @@ def q_coverage_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # answer we already know. Library callers keep the safe "auto".
     out = cj.coverage_join(fp_df, spark.createDataFrame(rects), z=6,
                            rect_id="aoi_id", broadcast_candidates=True)
-    return _pin_cache(
-        out.select("image_id", "aoi_id", F.round("coverage", 4).alias("coverage")),
-        _fp_cached,
-    )
+    return out.select("image_id", "aoi_id", F.round("coverage", 4).alias("coverage"))
 
 
 SQL_COVERAGE = f"""
@@ -2769,6 +2721,8 @@ FROM pairs GROUP BY 1, 2
 """
 
 
+# Every entry runs in one cache scope (cachescope): the persists of the
+# operators it calls live until the caller drops the frame it returns.
 QUERIES: dict = {
     "pricing_summary": q_pricing_summary,
     "revenue_by_nation": q_revenue_by_nation,
@@ -2826,6 +2780,7 @@ QUERIES: dict = {
     # the final table is event-time-determined, so DuckDB replays it
     "streaming_windowed_zonal": q_streaming_windowed_zonal,
 }
+QUERIES = {name: scoped(fn) for name, fn in QUERIES.items()}
 
 ORACLES: dict[str, str] = {
     "pricing_summary": SQL_PRICING,

@@ -72,9 +72,10 @@ def get_spark(
         cores = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if master is None:
         master = f"local[{cores}]"
+    # "*" means every core of this host
+    n_slots = (os.cpu_count() or 1) if cores == "*" else max(int(cores), 1)
     if shuffle_partitions is None:
-        n = 32 if cores == "*" else max(int(cores), 4)
-        shuffle_partitions = 2 * n
+        shuffle_partitions = 2 * max(n_slots, 4)
 
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(_DEFAULTS)
@@ -87,7 +88,6 @@ def get_spark(
     # at 20k vectors), while data-sized exchanges keep the 2x shuffle
     # width + AQE coalescing (the flagship pip_join measured 0.35 s WORSE
     # when default.parallelism itself was dropped to 1x).
-    n_slots = 32 if cores == "*" else max(int(cores), 1)
     conf["spark.graft.slots"] = str(n_slots)
     if extra_conf:
         conf.update(extra_conf)

@@ -44,3 +44,31 @@ def test_balance_classes_pretopk_equals_plain_window(spark):
     got = sorted(map(tuple, fast.select("event_type", "event_id").collect()))
     want = sorted(map(tuple, plain.select("event_type", "event_id").collect()))
     assert got == want
+
+
+def test_balance_classes_null_keys_match_plain_window(spark):
+    """NULL keys hash to NULL, which the window's ascending sort ranks
+    first; a NULL label is a class of its own. The prefilter must agree."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    # every 40th key NULL (fewer NULL rows than n per class, so the window's
+    # choice among tied NULL keys is not arbitrary), every 50th label NULL
+    ev = ev.select(
+        F.when(F.col("event_id") % 40 == 0, F.lit(None)).otherwise(F.col("event_id"))
+        .cast("long").alias("event_id"),
+        F.when(F.col("event_id") % 50 == 0, F.lit(None)).otherwise(F.col("event_type"))
+        .alias("event_type"),
+    ).repartition(5)
+    fast = sampling.balance_classes(ev, "event_type", "event_id", 20)
+    h = F.md5(F.col("event_id").cast("string"))
+    w = Window.partitionBy("event_type").orderBy(h, F.col("event_id"))
+    plain = ev.withColumn("_rk", F.row_number().over(w)).filter(F.col("_rk") <= 20).drop("_rk")
+
+    def rows(df):
+        return sorted(map(tuple, df.select("event_type", "event_id").collect()), key=repr)
+
+    got, want = rows(fast), rows(plain)
+    assert got == want
+    assert any(k is None for _, k in want) and any(t is None for t, _ in want)
