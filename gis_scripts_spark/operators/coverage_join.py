@@ -38,8 +38,7 @@ def _cover_wkb_udf(z: int):
     return cover
 
 
-@F.pandas_udf(DoubleType())
-def _coverage_udf(wkb_col: pd.Series, x0: pd.Series, y0: pd.Series, x1: pd.Series, y1: pd.Series) -> pd.Series:
+def _coverage(wkb_col: pd.Series, x0: pd.Series, y0: pd.Series, x1: pd.Series, y1: pd.Series) -> pd.Series:
     out = np.empty(len(wkb_col))
     cache: dict[bytes, list] = {}
     for i, buf in enumerate(wkb_col):
@@ -53,6 +52,12 @@ def _coverage_udf(wkb_col: pd.Series, x0: pd.Series, y0: pd.Series, x1: pd.Serie
         total = sum(geom.polygon_area(rings) for rings in polys)
         out[i] = inter / total if total > 0 else 0.0
     return pd.Series(out)
+
+
+# Marked nondeterministic only so the optimizer keeps the `coverage >
+# min_coverage` filter above the projection: pushed below it, the filter
+# re-derives the clip and the plan runs it in a second ArrowEvalPython.
+_coverage_udf = F.pandas_udf(_coverage, DoubleType()).asNondeterministic()
 
 
 @scoped

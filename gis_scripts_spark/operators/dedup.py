@@ -2,20 +2,21 @@
 SimHash, n-gram Jaccard (task-mandated first-class ops; the reference has
 no text surface — its nearest analogue is the skip-if-done anti-join J7).
 
-All hashing is derived from blake2b of the token bytes — deterministic
-across partitions, parallelism levels and runs (no Python hash()
-randomization, no partition-index dependence).
+All hashing is derived from md5 of the token or shingle bytes —
+deterministic across partitions, parallelism levels and runs (no Python
+hash() randomization, no partition-index dependence) and reproducible in
+SQL, so every text dedup query has a DuckDB oracle.
 
 Scale shapes:
 - exact: md5 groupBy — one shuffle, partial agg map-side.
-- minhash: per-doc signature in one vectorized pandas UDF; LSH bands ->
-  (id, band, band_hash) explode — IDS ONLY, the text/signature payload
-  never rides the band explode or the self-join shuffle; candidates =
-  self-join on the band key (equi-join, AQE-skew-safe) deduped report-once
-  by min shared band (map-side partial agg); texts re-joined exactly once
-  per surviving candidate pair for the exact-Jaccard verify.
-- simhash: 64-bit signature; Hamming<=3 via 4x16-bit band blocking
-  (pigeonhole: any pair within distance 3 shares an exact 16-bit quarter).
+- minhash (minhash_lsh_pairs_sql): per-doc signature in one vectorized
+  pandas UDF; LSH bands -> (id, band, band_hash) explode — IDS ONLY, the
+  text/signature payload never rides the band explode or the self-join
+  shuffle; texts re-joined exactly once per surviving candidate pair for
+  the exact-Jaccard verify.
+- simhash / pHash: one 64-bit hash per row into hamming_neardup_pairs,
+  the banded self-join (max_hamming + 1 bands; pigeonhole: any pair within
+  the distance shares one band exactly).
 """
 
 from __future__ import annotations
@@ -24,47 +25,11 @@ import hashlib
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
 from gis_scripts_spark.cachescope import persist, scoped
-
-_MERSENNE = (1 << 61) - 1
-
-_TOKEN_CACHE: dict[str, int] = {}
-
-
-def _token_hash(t: str) -> int:
-    h = _TOKEN_CACHE.get(t)
-    if h is None:
-        h = _TOKEN_CACHE[t] = (
-            int.from_bytes(hashlib.blake2b(t.encode(), digest_size=8).digest(), "big") >> 3
-        )
-        if len(_TOKEN_CACHE) > 1_000_000:  # bound worker memory
-            _TOKEN_CACHE.clear()
-    return h
-
-
-def _token_hashes(tokens: list[str]) -> np.ndarray:
-    """Stable 64-bit hashes of tokens (blake2b, partition-independent;
-    per-worker vocabulary cache — web text has Zipfian vocab, so the cache
-    hit rate is near 1)."""
-    return np.fromiter((_token_hash(t) for t in tokens), dtype=np.int64, count=len(tokens))
-
-
-def _shingle_hashes(text: str, n: int) -> np.ndarray:
-    """Hashes of word n-gram shingles: per-token blake2b (cached) combined
-    with a polynomial roll — vectorized, equivalent to hashing each shingle
-    string but O(distinct tokens) in hashlib calls."""
-    th = _token_hashes(text.split(" "))
-    if n <= 1 or len(th) < n:
-        return th
-    B = np.int64(1099511628211)
-    out = th[: len(th) - n + 1].copy()
-    for i in range(1, n):
-        out = (out * B + th[i : len(th) - n + 1 + i]) % _MERSENNE
-    return out
 
 
 def _shingles(text: str, n: int) -> list[str]:
@@ -80,135 +45,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     return df.groupBy(F.md5(F.col(text_col)).alias("text_md5")).agg(
         F.min(id_col).alias("canonical_id"), F.count(F.lit(1)).alias("n_copies")
     )
-
-
-# ----------------------------------------------------------------- minhash
-def minhash_signature_udf(n_perm: int = 128, shingle_n: int = 3, seed: int = 13):
-    rng = np.random.default_rng(seed)
-    a = rng.integers(1, _MERSENNE, n_perm, dtype=np.int64)
-    b = rng.integers(0, _MERSENNE, n_perm, dtype=np.int64)
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def sig(text: pd.Series) -> pd.Series:
-        out = []
-        for t in text:
-            hs = _shingle_hashes(t, shingle_n)
-            if len(hs) == 0:
-                out.append([0] * n_perm)
-                continue
-            # (a*h + b) mod p, min over shingles, per permutation. NOTE:
-            # a*h (both up to 2^61) wraps mod 2^64 in int64 BEFORE the
-            # Mersenne reduction — deliberate and deterministic: the
-            # composition (wrap-then-mod-p) is still a fixed seeded mixing
-            # family, just not the textbook universal family. Collision
-            # quality is asserted empirically (recall >= 0.9 vs the exact
-            # Jaccard oracle in tests/test_dedup_text.py).
-            with np.errstate(over="ignore"):
-                vals = (a[:, None] * hs[None, :] + b[:, None]) % _MERSENNE
-            out.append(vals.min(axis=1).tolist())
-        return pd.Series(out)
-
-    return sig
-
-
-@scoped
-def minhash_lsh_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_perm: int = 128,
-    bands: int = 32,
-    shingle_n: int = 3,
-    threshold: float = 0.5,
-    verify: bool = True,
-) -> DataFrame:
-    """Candidate near-duplicate pairs (id_a < id_b) via banded MinHash LSH,
-    optionally verified with the exact shingle-set Jaccard.
-
-    Returns (id_a, id_b, jaccard) when `verify` (default), else
-    (id_a, id_b, est_jaccard). Report-once: a pair is emitted only from the
-    FIRST band that matches (min band id, map-side partial agg).
-
-    Scale shape (the SURVEY §7.4 invariant — fat payloads never enter a
-    shuffle): the band explode and self-join carry (id, band, bhash) ONLY.
-    At web scale the band-join shuffle is ids × bands, not text × bands; the
-    document text (and signature, in the est path) is equi-joined back
-    exactly once per SURVIVING candidate pair — a vanishing fraction of the
-    corpus for near-dup-sparse web text."""
-    rows_per_band = n_perm // bands
-    sig = minhash_signature_udf(n_perm, shingle_n)
-    base = df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text"))
-    # the signature UDF is the expensive stage: make sure it runs wide even
-    # when the source is a single small file (one-pass row-wise exchange —
-    # corpus-size volume, nothing like the xbands band explode)
-    sc = df.sparkSession.sparkContext
-    if base.rdd.getNumPartitions() < sc.defaultParallelism:
-        base = base.repartition(sc.defaultParallelism)
-    base = base.withColumn("_sig", sig(F.col("_text")))
-
-    band_cols = [
-        F.struct(
-            F.lit(bi).alias("band"),
-            F.xxhash64(
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.element_at("_sig", bi * rows_per_band + j + 1).cast("string")
-                        for j in range(rows_per_band)
-                    ],
-                )
-            ).alias("bhash"),
-        )
-        for bi in range(bands)
-    ]
-    # ids-only band table: the only thing the LSH self-join shuffles.
-    # persist: both self-join sides read it, so the (expensive) signature
-    # UDF runs ONCE per document; it holds only (id, band, bhash) rows,
-    # never text
-    banded = persist(base.withColumn("_band", F.explode(F.array(*band_cols))).select(
-        "_id", F.col("_band.band").alias("band"), F.col("_band.bhash").alias("bhash")
-    ))
-
-    left = banded.select(F.col("_id").alias("id_a"), "band", "bhash")
-    right = banded.select(F.col("_id").alias("id_b"), "band", "bhash")
-    cand = left.join(right, ["band", "bhash"]).filter(F.col("id_a") < F.col("id_b"))
-    # report-once by min band: groupBy aggregates map-side (no window sort)
-    pairs = cand.groupBy("id_a", "id_b").agg(F.min("band").alias("_first_band")).drop("_first_band")
-
-    if not verify:
-        # estimated jaccard from signature agreement (JVM-side zip_with);
-        # signatures joined back once per surviving pair
-        sig_a = base.select(F.col("_id").alias("id_a"), F.col("_sig").alias("_sa"))
-        sig_b = base.select(F.col("_id").alias("id_b"), F.col("_sig").alias("_sb"))
-        pairs = pairs.join(sig_a, "id_a").join(sig_b, "id_b")
-        est = (
-            F.aggregate(
-                F.zip_with("_sa", "_sb", lambda x, y: (x == y).cast("int")),
-                F.lit(0),
-                lambda acc, x: acc + x,
-            ).cast("double")
-            / F.lit(n_perm)
-        ).alias("est_jaccard")
-        return pairs.select("id_a", "id_b", est)
-
-    # texts joined back once per surviving pair (never through the explode)
-    txt = df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t"))
-    ta = txt.select(F.col("_id").alias("id_a"), F.col("_t").alias("_ta"))
-    tb = txt.select(F.col("_id").alias("id_b"), F.col("_t").alias("_tb"))
-    pairs = pairs.join(ta, "id_a").join(tb, "id_b")
-
-    @F.pandas_udf("double")
-    def jaccard(ta: pd.Series, tb: pd.Series) -> pd.Series:
-        out = np.empty(len(ta))
-        for i, (x, y) in enumerate(zip(ta, tb)):
-            sa = set(_shingle_hashes(x, shingle_n).tolist())
-            sb = set(_shingle_hashes(y, shingle_n).tolist())
-            u = len(sa | sb)
-            out[i] = len(sa & sb) / u if u else 0.0
-        return pd.Series(out)
-
-    out = pairs.select("id_a", "id_b", jaccard(F.col("_ta"), F.col("_tb")).alias("jaccard"))
-    return out.filter(F.col("jaccard") >= threshold)
 
 
 # ----------------------------------------------------------------- simhash
@@ -230,16 +66,12 @@ def _md5_token_hashes(tokens: list[str]) -> np.ndarray:
     return out
 
 
-def simhash_udf(shingle_n: int = 1, hash_fn: str = "blake2b"):
+def simhash_udf(shingle_n: int = 1):
     @F.pandas_udf(LongType())
     def sim(text: pd.Series) -> pd.Series:
         out = np.empty(len(text), np.int64)
         for i, t in enumerate(text):
-            toks = _shingles(t, shingle_n)
-            if hash_fn == "md5":
-                hs = _md5_token_hashes(toks)
-            else:
-                hs = _token_hashes(toks).view(np.uint64)
+            hs = _md5_token_hashes(_shingles(t, shingle_n))
             if len(hs) == 0:
                 out[i] = 0
                 continue
@@ -255,68 +87,29 @@ def simhash_udf(shingle_n: int = 1, hash_fn: str = "blake2b"):
     return sim
 
 
-@scoped
 def simhash_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     max_hamming: int = 3,
     shingle_n: int = 1,
-    hash_fn: str = "blake2b",
 ) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance <= max_hamming, blocked on
-    16-bit quarters (pigeonhole-complete for max_hamming <= 3).
-
-    `hash_fn='md5'` makes the token hash SQL-reproducible (DuckDB oracle).
+    """Near-dup pairs by SimHash Hamming distance <= max_hamming: md5 token
+    hashes (SQL-reproducible, so the DuckDB oracle rebuilds them), then the
+    banded hamming self-join, complete for any max_hamming in [0, 16].
 
     Returns (id_a, id_b, hamming)."""
     from gis_scripts_spark.operators.repart import spread
 
-    sim = simhash_udf(shingle_n, hash_fn)
-    # Two measured fixes from the optimization round's stage capture
-    # (26.7 s at 50k docs, sf1.0):
-    # - spread the scan: a single-file documents table plans the simhash
-    #   UDF on ONE scan partition (24 s of the 26.7 was a 2-task stage);
-    # - persist the signatures: the band self-join's two sides are separate
-    #   subtrees, so without materialization the plan evaluates the UDF
-    #   TWICE (the captured physical plan showed two Scan->ArrowEvalPython
-    #   branches). 50k (id, int64) rows — KBs of storage.
-    base = persist(
-        spread(df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t")), id_col)
-        .select("_id", sim(F.col("_t")).alias("_sh"))
-    )
-    quarters = F.array(
-        *[
-            F.struct(
-                F.lit(q).alias("q"),
-                F.shiftright("_sh", 16 * q).bitwiseAND(F.lit(0xFFFF)).alias("qv"),
-            )
-            for q in range(4)
-        ]
-    )
-    blocked = base.withColumn("_q", F.explode(quarters)).select(
-        "_id", "_sh", F.col("_q.q").alias("q"), F.col("_q.qv").alias("qv")
-    )
-    left = blocked.select(F.col("_id").alias("id_a"), F.col("_sh").alias("_sa"), "q", "qv")
-    right = blocked.select(F.col("_id").alias("id_b"), F.col("_sh").alias("_sb"), "q", "qv")
-    # the hamming refine runs INSIDE the join stage, BEFORE the report-once
-    # groupBy (the hamming_neardup_pairs lesson, re-measured here: at 50k
-    # docs the 16-bit quarters collide quadratically — ~76M candidate rows,
-    # a 387 MB Exchange — while true near-dups are a few hundred rows;
-    # hamming is a function of the pair, so the filter commutes with the
-    # dedup exactly and the groupBy exchange shrinks to the survivors).
-    hamming = F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb")))
-    pairs = (
-        left.join(right, ["q", "qv"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
-    )
-    # report-once via groupBy (map-side partial agg), NOT a window
-    # row_number (which would shuffle AND sort every candidate).
-    return pairs.groupBy("id_a", "id_b").agg(F.min("hamming").alias("hamming"))
+    # spread the scan: a single-file documents table plans the simhash UDF
+    # on ONE scan partition (optimization-round stage capture at 50k docs,
+    # sf1.0: 24 s of 26.7 s was a 2-task stage)
+    docs = spread(df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t")), id_col)
+    hashes = docs.select("_id", simhash_udf(shingle_n)(F.col("_t")).alias("_sh"))
+    return hamming_neardup_pairs(hashes, "_sh", "_id", max_hamming)
 
 
+@scoped
 def hamming_neardup_pairs(
     df: DataFrame,
     hash_col: str,
@@ -333,6 +126,10 @@ def hamming_neardup_pairs(
     the Exchange), groupBy report-once (map-side combinable, no window
     sort), then one whole-stage-codegen bit_count refine.
 
+    The (id, hash) projection is persisted: both join sides read it, so
+    the caller's upstream (an image decode, a SimHash UDF) runs once per
+    row. It lives as long as the returned frame (cachescope).
+
     Returns (id_a, id_b, hamming) with id_a < id_b.
     """
     if not 0 <= max_hamming <= 16:
@@ -345,7 +142,7 @@ def hamming_neardup_pairs(
         width = base_w + (1 if b < extra else 0)
         bands.append((b, shift, (1 << width) - 1))
         shift += width
-    base = df.select(F.col(id_col).alias("_id"), F.col(hash_col).alias("_h"))
+    base = persist(df.select(F.col(id_col).alias("_id"), F.col(hash_col).alias("_h")))
     keys = F.array(
         *[
             F.struct(

@@ -315,7 +315,8 @@ def image_features(df: DataFrame) -> DataFrame:
 def phash_neardup_pairs(df: DataFrame, max_hamming: int = 10) -> DataFrame:
     """Image near-duplicate pairs by perceptual hash: decode the `bytes`
     column, pHash each image (one Arrow mapInPandas pass, image_features),
-    then the banded hamming self-join from operators/dedup.py — the
+    then the banded hamming self-join from operators/dedup.py, which
+    persists the (id, hash) rows so each image is decoded once — the
     pigeonhole blocking means only (hash, id) scalars enter the candidate
     Exchange, never the image bytes. The image twin of the text simhash
     dedup stage; catches re-encoded / brightness-shifted re-posts.

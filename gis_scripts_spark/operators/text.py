@@ -16,6 +16,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType
 
+from gis_scripts_spark.operators.repart import spread
+
 # tiny public stopword lists (heuristic lang-ID, n-gram style)
 _LANG_MARKERS = {
     "en": {"the", "and", "of", "to", "a", "in", "is", "that", "it", "for"},
@@ -150,9 +152,7 @@ def md5_fingerprints(
     # default width — per-doc cost is SKEWED (doc length spans 400x), and
     # at a 1x-slot width the longest-doc stragglers pinned the stage
     # (measured 0.8 -> 2.5 s at 5k docs). No-op at real table sizes.
-    sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() < sc.defaultParallelism:
-        df = df.repartition(sc.defaultParallelism)
+    df = spread(df, parallelism=df.sparkSession.sparkContext.defaultParallelism)
     # explicit whitespace class: Java \s and RE2 \s disagree on \x0B, and
     # the DuckDB oracle must normalize identically
     norm = F.substring(

@@ -41,6 +41,7 @@ from gis_scripts_spark.operators import (
     text,
     tile_assign,
 )
+from gis_scripts_spark.operators.repart import spread
 
 # ---- shared derivation constants (mirrored literally in the oracle SQL) ----
 LON_MULT, LON_MOD = 2654435761, 360000
@@ -690,8 +691,8 @@ def q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-dup candidates, exact-Jaccard verified — FULL
     oracle since round 3: the md5 hash family + lexicographic-min
     signatures + band hashes are rebuilt verbatim in DuckDB SQL
-    (dedup.minhash_lsh_pairs_sql — zero Python, pure codegen). The
-    blake2b 128-perm variant keeps its recall>=0.9 pytest."""
+    (dedup.minhash_lsh_pairs_sql — zero Python, pure codegen). Its
+    128-perm setting keeps a recall>=0.9 pytest."""
     docs = _pq(spark, sf_dir, "documents")
     out = dedup.minhash_lsh_pairs_sql(docs, n_perm=64, bands=16, shingle_n=3, threshold=0.5)
     return out.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
@@ -747,12 +748,12 @@ SQL_MINHASH = _sql_minhash()
 
 
 def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash Hamming<=3 near-dup pairs. hash_fn='md5' makes the token
-    hash SQL-reproducible, so this is a FULL oracle row: DuckDB rebuilds
-    the 64 signature bits from md5 token hashes and brute-forces the
-    Hamming join."""
+    """SimHash Hamming<=3 near-dup pairs. The md5 token hash is
+    SQL-reproducible, so this is a FULL oracle row: DuckDB rebuilds the 64
+    signature bits from md5 token hashes and brute-forces the Hamming
+    join."""
     docs = _pq(spark, sf_dir, "documents")
-    out = dedup.simhash_pairs(docs, max_hamming=3, shingle_n=1, hash_fn="md5")
+    out = dedup.simhash_pairs(docs, max_hamming=3, shingle_n=1)
     return out.select("id_a", "id_b", F.col("hamming").cast("int").alias("hamming"))
 
 
@@ -775,8 +776,6 @@ SELECT id_a, id_b, CAST(hamming AS INTEGER) AS hamming FROM pairs WHERE hamming 
 
 def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality features (pure Column math end-to-end -> FULL oracle row)."""
-    from gis_scripts_spark.operators.repart import spread
-
     # regex-heavy per-row Column math on a 1-2 split scan — spread so the
     # codegen stage runs on every core (no-op on multi-split inputs)
     docs = spread(_pq(spark, sf_dir, "documents"), "doc_id")
@@ -1320,8 +1319,7 @@ def q_coverage_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     boxes = _supplier_boxes(_pq(spark, sf_dir, "supplier"))
     # single-file sources arrive as one partition; widen so the WKB-build
     # and exact-clip UDF stages run on every core
-    if boxes.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:
-        boxes = boxes.repartition(spark.sparkContext.defaultParallelism)
+    boxes = spread(boxes, parallelism=spark.sparkContext.defaultParallelism)
     bbox_wkb = _bbox_wkb_udf()
     # persist the built-WKB frame: both the candidate pipeline (cell cover)
     # and the final clip join consume it, and without materialization each
@@ -1641,9 +1639,7 @@ def q_exif_gps_zonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gis_scripts_spark.operators import multimodal as mm
 
     ev = _pq(spark, sf_dir, "events").select("event_id")
-    sc = spark.sparkContext
-    if ev.rdd.getNumPartitions() < sc.defaultParallelism:
-        ev = ev.repartition(sc.defaultParallelism)
+    ev = spread(ev, parallelism=spark.sparkContext.defaultParallelism)
     k = F.col("event_id")
     src = ev.select(
         "event_id",
@@ -1817,9 +1813,7 @@ def q_hamming256_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one parquet file = one task, which would serialize the synthesis +
     # band explode + join build on a single core; at real table sizes
     # (scan partitions >= slots) this is a no-op
-    sc = spark.sparkContext
-    if ev.rdd.getNumPartitions() < sc.defaultParallelism:
-        ev = ev.repartition(sc.defaultParallelism)
+    ev = spread(ev, parallelism=spark.sparkContext.defaultParallelism)
     df = ev.selectExpr("event_id", *_h256_word_exprs("spark")).select(
         "event_id", F.array("w0", "w1", "w2", "w3").alias("h256")
     )

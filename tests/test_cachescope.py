@@ -15,7 +15,8 @@ from gis_scripts_spark.geom import wkb as wkb_mod
 from gis_scripts_spark.operators import coverage_join, dedup, knn
 
 SF = "/root/testdata/sf0.001"
-CACHING_QUERIES = ["knn_k5", "minhash_lsh_pairs", "simhash_pairs", "coverage_join"]
+CACHING_QUERIES = ["knn_k5", "minhash_lsh_pairs", "simhash_pairs", "coverage_join",
+                   "phash_neardup_pairs"]
 
 
 def _cache_empty(spark) -> bool:
@@ -49,9 +50,11 @@ def _operator_calls(spark):
         "knn_join": lambda: knn.knn_join(
             _points(spark), _points(spark), k=3, point_id="c_custkey",
             query_id="c_custkey", exclude_self=True).select("query_id", "neighbor_id"),
-        "minhash_lsh_pairs": lambda: dedup.minhash_lsh_pairs(docs).select("id_a", "id_b"),
         "minhash_lsh_pairs_sql": lambda: dedup.minhash_lsh_pairs_sql(docs).select("id_a", "id_b"),
         "simhash_pairs": lambda: dedup.simhash_pairs(docs).select("id_a", "id_b"),
+        "hamming_neardup_pairs": lambda: dedup.hamming_neardup_pairs(
+            docs.select("doc_id", F.xxhash64("text").alias("h")), "h", "doc_id").select(
+            "id_a", "id_b"),
         "coverage_join": lambda: coverage_join.coverage_join(
             fp, rects, broadcast_candidates="auto").select("image_id", "aoi_id"),
     }
@@ -77,7 +80,7 @@ def test_query_caches_released_with_frame(spark, name):
 
 
 @pytest.mark.parametrize(
-    "name", ["knn_join", "minhash_lsh_pairs", "minhash_lsh_pairs_sql", "simhash_pairs",
+    "name", ["knn_join", "minhash_lsh_pairs_sql", "simhash_pairs", "hamming_neardup_pairs",
              "coverage_join"])
 def test_operator_under_bare_select(spark, name):
     """Outside any scope the operator's own scope releases its caches when
@@ -166,3 +169,24 @@ def test_minhash_sql_null_text_yields_no_pair(spark):
     want = dedup.minhash_lsh_pairs_sql(docs).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
     assert len(want) > 0
+
+
+def test_hamming_join_reads_its_input_once(spark):
+    """Both sides of the band self-join read one persisted (id, hash)
+    projection, so the caller's upstream runs once per row."""
+    acc = spark.sparkContext.accumulator(0)
+
+    def count_rows(batches):
+        for pdf in batches:
+            acc.add(len(pdf))
+            yield pdf
+
+    n = 300
+    rng = np.random.default_rng(7)
+    h = rng.integers(-(2**63), 2**63 - 1, n, dtype=np.int64)
+    h[1::10] = h[::10] ^ 0b101  # planted pairs at distance 2
+    df = spark.createDataFrame(pd.DataFrame({"id": np.arange(n), "h": h})).mapInPandas(
+        count_rows, "id long, h long")
+    pairs = dedup.hamming_neardup_pairs(df, "h", "id", max_hamming=4).collect()
+    assert acc.value == n
+    assert {(r["id_a"], r["id_b"]) for r in pairs} >= {(i, i + 1) for i in range(0, n, 10)}

@@ -1,5 +1,8 @@
 """Dedup + text operators: MinHash recall vs exact Jaccard, SimHash on
-planted near-dups, exact dedup, lang-ID, fingerprint determinism."""
+planted near-dups and against an all-pairs brute force, exact dedup,
+lang-ID, fingerprint determinism."""
+
+import hashlib
 
 import numpy as np
 import pandas as pd
@@ -44,9 +47,10 @@ def test_ngram_jaccard_vs_pandas_oracle(spark, docs):
 def test_minhash_recall_and_precision(spark, docs):
     exact = dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.5).toPandas()
     exact_pairs = set(map(tuple, exact[["id_a", "id_b"]].itertuples(index=False)))
-    mh = dedup.minhash_lsh_pairs(docs, n_perm=128, bands=32, shingle_n=3, threshold=0.5).toPandas()
+    mh = dedup.minhash_lsh_pairs_sql(
+        docs, n_perm=128, bands=32, shingle_n=3, threshold=0.5).toPandas()
     mh_pairs = set(map(tuple, mh[["id_a", "id_b"]].itertuples(index=False)))
-    # verify=True -> precision 1.0 (every reported pair truly >= threshold)
+    # exact-Jaccard verify -> precision 1.0 (every reported pair truly >= threshold)
     assert mh_pairs <= exact_pairs
     # banded LSH at 32x4 catches >=90% of true pairs at j>=0.5
     assert len(mh_pairs) >= 0.9 * len(exact_pairs)
@@ -62,6 +66,30 @@ def test_simhash_finds_planted_dup(spark):
     pairs = set(map(tuple, out[["id_a", "id_b"]].itertuples(index=False)))
     assert (1, 2) in pairs
     assert (1, 3) not in pairs and (2, 3) not in pairs
+
+
+def _md5_simhash(text: str) -> int:
+    """Reference SimHash: bit j is set iff most md5 token hashes set it."""
+    hs = np.array([int.from_bytes(hashlib.md5(t.encode()).digest()[:8], "big")
+                   for t in text.split(" ")], np.uint64)
+    votes = ((hs[:, None] >> np.arange(64, dtype=np.uint64)) & 1).sum(axis=0)
+    return sum(1 << j for j in range(64) if 2 * votes[j] > len(hs))
+
+
+@pytest.mark.parametrize("max_hamming", [3, 10])
+def test_simhash_pairs_complete_vs_brute_force(spark, docs, max_hamming):
+    got = dedup.simhash_pairs(docs, max_hamming=max_hamming).toPandas()
+    pdf = docs.select("doc_id", "text").toPandas().sort_values("doc_id")
+    ids = pdf["doc_id"].to_numpy()
+    sims = np.array([_md5_simhash(t) for t in pdf["text"]], np.uint64)
+    want = set()
+    for i in range(len(ids) - 1):
+        xor = (sims[i] ^ sims[i + 1:]).view(np.uint8).reshape(-1, 8)
+        dist = np.unpackbits(xor, axis=1).sum(axis=1)
+        for j in np.flatnonzero(dist <= max_hamming):
+            want.add((int(ids[i]), int(ids[i + 1 + j]), int(dist[j])))
+    assert len(want) > 0
+    assert set(map(tuple, got[["id_a", "id_b", "hamming"]].itertuples(index=False))) == want
 
 
 def test_word_jaccard_identical_docs(spark):
