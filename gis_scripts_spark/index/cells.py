@@ -45,11 +45,16 @@ def grid_xy_col(lon: Column, lat: Column, z: int) -> tuple[Column, Column]:
 def cell_col(lon: Column, lat: Column, z: int) -> Column:
     """Packed int64 cell id at zoom z. Pure Column math — codegen'd."""
     gx, gy = grid_xy_col(lon, lat, z)
+    return pack_col(z, gx, gy).alias(f"cell_z{z}")
+
+
+def pack_col(z: int, gx: Column, gy: Column) -> Column:
+    """Packed int64 cell id from long grid x/y Columns (see `pack`)."""
     return (
         (F.lit(int(z)).cast("long") * F.lit(1 << _Z_SHIFT).cast("long"))
         + gx * F.lit(1 << _GX_SHIFT).cast("long")
         + gy
-    ).alias(f"cell_z{z}")
+    )
 
 
 def cell_prefix_col(cell: Column, z: int, prefix_z: int) -> Column:
@@ -148,34 +153,21 @@ def disk(cell_id: int, r: int) -> np.ndarray:
     return pack(z, xx.ravel(), yy.ravel())
 
 
-def disk_arr(cells_arr: np.ndarray, r: int, wrap_x: bool = False) -> tuple[np.ndarray, np.ndarray]:
+def disk_arr(cells_arr: np.ndarray, r: int) -> tuple[np.ndarray, np.ndarray]:
     """Vectorized disk for an array of cells.
 
-    Returns (repeated_input_index, neighbor_cell) pairs. Neighbors outside
-    the grid are dropped; with ``wrap_x=True`` the x axis wraps modulo the
-    grid width (antimeridian continuity — required for great-circle kNN).
-    Used by the kNN candidate generator.
+    Returns (repeated_input_index, neighbor_cell) pairs; neighbors outside
+    the grid are dropped. Used by the IDW window's candidate generator.
     """
     arr = np.asarray(cells_arr, np.int64)
     z, gx, gy = unpack(arr)
-    zz = int(z[0]) if len(arr) else 0
-    n_grid = 1 << zz
-    # cap the x-offset span when wrapping so no cell repeats
-    if wrap_x and (2 * r + 1) >= n_grid:
-        dxs = np.arange(n_grid, dtype=np.int64) - n_grid // 2
-    else:
-        dxs = np.arange(-r, r + 1, dtype=np.int64)
-    dys = np.arange(-r, r + 1, dtype=np.int64)
-    dx = np.tile(dxs, len(dys))
-    dy = np.repeat(dys, len(dxs))
+    d = np.arange(-r, r + 1, dtype=np.int64)
+    dx = np.tile(d, len(d))
+    dy = np.repeat(d, len(d))
     nx = gx[:, None] + dx[None, :]
     ny = gy[:, None] + dy[None, :]
     n = (np.int64(1) << z)[:, None]
-    if wrap_x:
-        nx = np.mod(nx, n)
-        ok = (ny >= 0) & (ny < n)
-    else:
-        ok = (nx >= 0) & (nx < n) & (ny >= 0) & (ny < n)
+    ok = (nx >= 0) & (nx < n) & (ny >= 0) & (ny < n)
     idx = np.broadcast_to(np.arange(len(arr))[:, None], nx.shape)[ok]
     out = pack(np.broadcast_to(z[:, None], nx.shape)[ok], nx[ok], ny[ok])
     return idx, out

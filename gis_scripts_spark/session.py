@@ -11,8 +11,23 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Defaults sized for the sandbox (local[32], 128 GiB). On a real cluster the
-# same knobs scale with `spark.sql.shuffle.partitions ~= 2-3x total cores`.
+
+def _half_ram() -> str | None:
+    """Half of this host's MemTotal as a JVM size ("8035m"), or None where
+    /proc/meminfo is missing. Half is the share of RAM at which perfbench
+    kills a run's process tree, so a heap grown to its maximum still fits."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return f"{int(line.split()[1]) // 2048}m"
+    except OSError:
+        pass
+    return None
+
+
+# On a real cluster these knobs scale with `spark.sql.shuffle.partitions ~=
+# 2-3x total cores`; the heap and slot count are derived from the host.
 _DEFAULTS = {
     # AQE: runtime coalescing + skew-join splitting is the first line of
     # defense for hot spatial cells (SURVEY.md §4.2).
@@ -33,12 +48,6 @@ _DEFAULTS = {
     "spark.sql.autoBroadcastJoinThreshold": "64m",
     "spark.sql.session.timeZone": "UTC",
     "spark.ui.enabled": "false",
-    # local mode: ONE JVM holds executor execution+storage for 32 tasks
-    # plus the driver — 8g meant materialized operator caches (live since
-    # the premature-release fix) competed with shuffle/execution memory and
-    # GC churn inflated later queries in long suites (in-suite 2-3x swings
-    # on unchanged queries). On a real cluster this is per-executor sizing.
-    "spark.driver.memory": "24g",
 }
 
 
@@ -89,6 +98,13 @@ def get_spark(
     # width + AQE coalescing (the flagship pip_join measured 0.35 s WORSE
     # when default.parallelism itself was dropped to 1x).
     conf["spark.graft.slots"] = str(n_slots)
+    # local mode: ONE JVM holds executor execution+storage for every task
+    # plus the driver, so it gets half the host's RAM (a fixed 24g exceeded
+    # smaller hosts' RAM and the kernel OOM-killed the JVM). On a real
+    # cluster this is per-executor sizing; `extra_conf` overrides it.
+    heap = _half_ram()
+    if heap is not None:
+        conf["spark.driver.memory"] = heap
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

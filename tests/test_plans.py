@@ -89,6 +89,20 @@ def test_knn_shuffles_only_keys(spark, images_parquet):
         assert "bytes" not in ex, ex
 
 
+def test_knn_haversine_plan_has_no_python(spark, images_parquet):
+    """Both metrics run the same codegen round: no Python node anywhere in
+    a haversine kNN plan, from the parsed plan to the executed one."""
+    from gis_scripts_spark.operators import knn
+
+    images = spark.read.parquet(images_parquet)
+    out = knn.knn_join(
+        images, images, k=3, z=4, point_id="image_id", query_id="image_id",
+        metric="haversine", exclude_self=True,
+    )
+    plans = out._jdf.queryExecution().toString()
+    assert not re.findall(r"\w*(?:Python|Pandas|Arrow)\w*", plans)
+
+
 def test_coverage_join_wkb_never_in_exchange(spark, images_parquet):
     """Round-3 hygiene gate: the coverage_join plan must not ship polygon
     WKB through ANY Exchange (ids-only explode + dedup; WKB re-joined
