@@ -57,6 +57,23 @@ def pack_col(z: int, gx: Column, gy: Column) -> Column:
     )
 
 
+def cover_bbox_col(x0: Column, y0: Column, x1: Column, y1: Column, z: int) -> Column:
+    """array<long> of the cells covering a bbox at zoom z — the Column twin
+    of `cover_bbox` (same cells, same y-major order). The guard is on the
+    clamped grid indices, not the coordinates: an inverted box whose edges
+    clamp into one column still covers it, as in numpy, and Spark's
+    `sequence` would otherwise count down."""
+    gx0, gy0 = grid_xy_col(x0, y1, z)
+    gx1, gy1 = grid_xy_col(x1, y0, z)
+    cover = F.flatten(
+        F.transform(
+            F.sequence(gy0, gy1),
+            lambda gy: F.transform(F.sequence(gx0, gx1), lambda gx: pack_col(z, gx, gy)),
+        )
+    )
+    return F.when((gx0 <= gx1) & (gy0 <= gy1), cover).otherwise(F.array().cast("array<long>"))
+
+
 def cell_prefix_col(cell: Column, z: int, prefix_z: int) -> Column:
     """Parent cell at coarser zoom `prefix_z` from a packed cell at zoom
     `z` — pure bit shifts (codegen'd). This is the "cell prefix" the north

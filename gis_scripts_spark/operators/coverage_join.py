@@ -4,11 +4,12 @@ Reference: image footprint polygon ∩ AOI extent, percent coverage =
 area(∩)/area(footprint) (``seagrass_lib.py:185-192``), used to filter the
 acquisition manifest (AOI_COVERAGE > 0, ``1_Image_processing.py:34``).
 
-Spark shape: footprints (polygons as WKB) are cell-exploded; AOI rects are
-cell-exploded; candidates meet on the cell equi-join (report-once on the
-intersection corner cell, like overlap_join); the exact Sutherland–Hodgman
-clip + shoelace ratio runs in an Arrow-batched pandas UDF on candidates
-only.
+Spark shape: footprints (polygons as WKB) are cell-exploded by the shared
+polygon cover (``pip_join.build_cover_df``; a NULL WKB covers nothing);
+AOI rects by the Column box cover (``cells.cover_bbox_col``, JVM-only);
+candidates meet on the cell equi-join and are deduplicated on ids; the
+exact Sutherland–Hodgman clip + shoelace ratio runs in an Arrow-batched
+pandas UDF on candidates only.
 """
 
 from __future__ import annotations
@@ -17,25 +18,13 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType, LongType
+from pyspark.sql.types import DoubleType
 
 from gis_scripts_spark.cachescope import persist, scoped
 from gis_scripts_spark.geom import core as geom
 from gis_scripts_spark.geom import wkb as wkb_mod
 from gis_scripts_spark.index import cells as cells_mod
-
-
-def _cover_wkb_udf(z: int):
-    @F.pandas_udf(ArrayType(LongType()))
-    def cover(wkb_col: pd.Series) -> pd.Series:
-        out = []
-        for buf in wkb_col:
-            polys = wkb_mod.from_wkb(bytes(buf))
-            cc, _ = geom.cover_polygon(polys, z)
-            out.append([int(v) for v in cc])
-        return pd.Series(out)
-
-    return cover
+from gis_scripts_spark.operators.pip_join import build_cover_df
 
 
 def _coverage(wkb_col: pd.Series, x0: pd.Series, y0: pd.Series, x1: pd.Series, y1: pd.Series) -> pd.Series:
@@ -99,50 +88,17 @@ def coverage_join(
 
     The persisted candidate frame lives as long as the returned frame
     (cachescope)."""
-    cov = _cover_wkb_udf(z)
     fp_src = footprints_df.select(
         F.col(fp_id).alias("_fid"), F.col(wkb_col).alias("_wkb")
     )
     # ids-only cell explode — the WKB stays in its scan partition
-    fp = fp_src.select("_fid", F.explode(cov(F.col("_wkb"))).alias("cell"))
-
-    def rect_cells(pdf_iter):
-        for pdf in pdf_iter:
-            ids, cs, bbs = [], [], []
-            for _, r in pdf.iterrows():
-                cells = cells_mod.cover_bbox(r["x_min"], r["y_min"], r["x_max"], r["y_max"], z)
-                ids.extend([r[rect_id]] * len(cells))
-                cs.append(cells)
-                bbs.extend([(r["x_min"], r["y_min"], r["x_max"], r["y_max"])] * len(cells))
-            bb = np.array(bbs) if bbs else np.empty((0, 4))
-            yield pd.DataFrame(
-                {
-                    "_rid": ids,
-                    "cell": np.concatenate(cs) if cs else np.empty(0, np.int64),
-                    "x_min": bb[:, 0] if len(bb) else [],
-                    "y_min": bb[:, 1] if len(bb) else [],
-                    "x_max": bb[:, 2] if len(bb) else [],
-                    "y_max": bb[:, 3] if len(bb) else [],
-                }
-            )
-
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    rid_type = rects_df.schema[rect_id].dataType
-    rect_schema = StructType(
-        [
-            StructField("_rid", rid_type, False),
-            StructField("cell", LongType(), False),
-            StructField("x_min", DoubleType(), False),
-            StructField("y_min", DoubleType(), False),
-            StructField("x_max", DoubleType(), False),
-            StructField("y_max", DoubleType(), False),
-        ]
+    fp = build_cover_df(footprints_df.sparkSession, footprints_df, z, fp_id, wkb_col).select(
+        F.col("poly_id").alias("_fid"), "cell"
     )
+    box = ("x_min", "y_min", "x_max", "y_max")
     rects = rects_df.select(
-        rect_id, F.col("x_min").cast("double"), F.col("y_min").cast("double"),
-        F.col("x_max").cast("double"), F.col("y_max").cast("double"),
-    ).mapInPandas(rect_cells, rect_schema)
+        F.col(rect_id).alias("_rid"), *[F.col(c).cast("double").alias(c) for c in box]
+    ).withColumn("cell", F.explode(cells_mod.cover_bbox_col(*map(F.col, box), z)))
 
     cand = (
         fp.join(F.broadcast(rects), "cell")

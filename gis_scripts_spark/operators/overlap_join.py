@@ -4,32 +4,20 @@ Reference: ``global_match.py:61-75`` — O(n²) Python loop over all image
 pairs testing strict bbox overlap
 (`x_min_i < x_max_j and x_max_i > x_min_j and y_min_i < y_max_j and
 y_max_i > y_min_j`). Here: each footprint is exploded to its covering grid
-cells (closed-form), pairs meet via a cell equi-join, the exact predicate
-post-filters, and the REPORT-ONCE trick deduplicates without a distinct
-shuffle: a pair is emitted only from the single canonical cell that
-contains the top-left corner of the pair's intersection rectangle.
+cells by the Column box cover (``cells.cover_bbox_col``: closed-form, run
+in the JVM — no row goes to Python), pairs meet via a cell equi-join, the
+exact predicate post-filters, and the REPORT-ONCE trick deduplicates
+without a distinct shuffle: a pair is emitted only from the single
+canonical cell that contains the top-left corner of the pair's
+intersection rectangle.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType
 
 from gis_scripts_spark.index import cells as cells_mod
-
-
-def _cover_bbox_udf(z: int):
-    @F.pandas_udf(ArrayType(LongType()))
-    def cover(x_min: pd.Series, y_min: pd.Series, x_max: pd.Series, y_max: pd.Series) -> pd.Series:
-        out = []
-        for a, b, c, d in zip(x_min, y_min, x_max, y_max):
-            out.append([int(v) for v in cells_mod.cover_bbox(a, b, c, d, z)])
-        return pd.Series(out)
-
-    return cover
 
 
 def bbox_overlap_join(
@@ -49,25 +37,28 @@ def bbox_overlap_join(
     from gis_scripts_spark.operators.repart import spread
 
     # spread the scan (guide §2.5 input skew): a single-file boxes table
-    # plans the cover UDF + explode + self-join on ONE task (stage capture
+    # plans the cover + explode + self-join on ONE task (stage capture
     # at 10k boxes: a 1-task 2.8 s save stage); keyed repartition is a
     # no-op on multi-split inputs.
     boxes_df = spread(boxes_df, id_col)
-    cov = _cover_bbox_udf(z)
     a = boxes_df.select(
         F.col(id_col).alias("id_i"),
         F.col(x_min).alias("xi0"),
         F.col(y_min).alias("yi0"),
         F.col(x_max).alias("xi1"),
         F.col(y_max).alias("yi1"),
-    ).withColumn("cell", F.explode(cov(F.col("xi0"), F.col("yi0"), F.col("xi1"), F.col("yi1"))))
+    ).withColumn("cell", F.explode(
+        cells_mod.cover_bbox_col(F.col("xi0"), F.col("yi0"), F.col("xi1"), F.col("yi1"), z)
+    ))
     b = boxes_df.select(
         F.col(id_col).alias("id_j"),
         F.col(x_min).alias("xj0"),
         F.col(y_min).alias("yj0"),
         F.col(x_max).alias("xj1"),
         F.col(y_max).alias("yj1"),
-    ).withColumn("cell", F.explode(cov(F.col("xj0"), F.col("yj0"), F.col("xj1"), F.col("yj1"))))
+    ).withColumn("cell", F.explode(
+        cells_mod.cover_bbox_col(F.col("xj0"), F.col("yj0"), F.col("xj1"), F.col("yj1"), z)
+    ))
 
     pairs = a.join(b, "cell").filter(F.col("id_i") < F.col("id_j"))
     # exact strict-overlap predicate (reference global_match.py:67-72)

@@ -6,7 +6,9 @@ Replaces the reference's zonal containment (``Assess_Agreement.R:45-57``
 
   1. COARSE: polygons are covered by grid cells (exact closed-form covering,
      ``geom.core.cover_polygon``), each cell flagged `full` when entirely
-     inside the polygon. Points get the same cell key as pure Column math.
+     inside the polygon; a NULL WKB covers no cell. ``build_cover_df`` is
+     the engine's one WKB->cover path (coverage_join covers footprints with
+     it). Points get the same cell key as pure Column math.
      The join is then a cell equi-join — broadcast-hash when the cover table
      is small (AOI/admin layers), shuffle-hash otherwise.
   2. EXACT: boundary cells (`full = false`) run the exact ray-casting test
@@ -36,6 +38,26 @@ from gis_scripts_spark.index import cells as cells_mod
 _COVER_CACHE: dict = {}
 
 
+def _cover_frame(ids, wkbs, z: int) -> pd.DataFrame:
+    """(poly_id, cell, full) pandas frame covering each polygon's WKB at
+    zoom z (``geom.core.cover_polygon``); a NULL WKB covers no cell."""
+    out_ids, cs, fs = [], [], []
+    for pid, buf in zip(ids, wkbs):
+        if buf is None:
+            continue
+        cc, ff = geom.cover_polygon(wkb_mod.from_wkb(bytes(buf)), z)
+        out_ids.extend([pid] * len(cc))
+        cs.append(cc)
+        fs.append(ff)
+    return pd.DataFrame(
+        {
+            "poly_id": out_ids,
+            "cell": np.concatenate(cs) if cs else np.empty(0, np.int64),
+            "full": np.concatenate(fs) if fs else np.empty(0, bool),
+        }
+    )
+
+
 def build_cover_df(
     spark: SparkSession, polys_df: DataFrame, z: int, poly_id: str = "poly_id", wkb_col: str = "wkb"
 ) -> DataFrame:
@@ -45,10 +67,10 @@ def build_cover_df(
     a 10^7-row admin-polygon table covers in parallel; the result is small
     (cells per polygon ~ area / cell_area) and broadcast-joinable.
     """
-    id_field = polys_df.schema[poly_id].dataType
+    id_field = polys_df.schema[poly_id]
     out_schema = StructType(
         [
-            StructField("poly_id", id_field, False),
+            StructField("poly_id", id_field.dataType, id_field.nullable),
             StructField("cell", LongType(), False),
             StructField("full", BooleanType(), False),
         ]
@@ -56,20 +78,7 @@ def build_cover_df(
 
     def gen(batches):
         for pdf in batches:
-            ids, cs, fs = [], [], []
-            for pid, buf in zip(pdf[poly_id], pdf[wkb_col]):
-                polys = wkb_mod.from_wkb(bytes(buf))
-                cc, ff = geom.cover_polygon(polys, z)
-                ids.extend([pid] * len(cc))
-                cs.append(cc)
-                fs.append(ff)
-            yield pd.DataFrame(
-                {
-                    "poly_id": ids,
-                    "cell": np.concatenate(cs) if cs else np.empty(0, np.int64),
-                    "full": np.concatenate(fs) if fs else np.empty(0, bool),
-                }
-            )
+            yield _cover_frame(pdf[poly_id], pdf[wkb_col], z)
 
     return polys_df.select(poly_id, wkb_col).mapInPandas(gen, out_schema)
 
@@ -125,7 +134,7 @@ def auto_zoom(polys_df: DataFrame, wkb_col: str = "wkb", target_cells: int = 64,
     from gis_scripts_spark.geom import core as geom
     from gis_scripts_spark.geom import wkb as wkb_mod
 
-    rows = polys_df.select(wkb_col).limit(sample_n).collect()
+    rows = polys_df.select(wkb_col).dropna().limit(sample_n).collect()
     areas = []
     for r in rows:
         polys = wkb_mod.from_wkb(bytes(r[0]))
@@ -222,25 +231,12 @@ def pip_join(
         # (polygon content, z) and reuse across queries — the cover is the
         # analogue of a prepared dimension index, not per-query work. The
         # collect above is required by the broadcast path anyway.
-        key = (z, tuple(sorted((r[0], hashlib.md5(bytes(r[1])).hexdigest()) for r in rows)))
+        key = (z, tuple(sorted(
+            (r[0], hashlib.md5(bytes(r[1])).hexdigest() if r[1] is not None else "") for r in rows
+        )))
         cached = _COVER_CACHE.get(key)
         if cached is None:
-            import pandas as _pd
-
-            ids, cs, fs = [], [], []
-            for r in rows:
-                polys = wkb_mod.from_wkb(bytes(r[1]))
-                cc, ff = geom.cover_polygon(polys, z)
-                ids.extend([r[0]] * len(cc))
-                cs.append(cc)
-                fs.append(ff)
-            cached = _pd.DataFrame(
-                {
-                    "poly_id": ids,
-                    "cell": np.concatenate(cs) if cs else np.empty(0, np.int64),
-                    "full": np.concatenate(fs) if fs else np.empty(0, bool),
-                }
-            )
+            cached = _cover_frame([r[0] for r in rows], [r[1] for r in rows], z)
             if len(_COVER_CACHE) > 32:
                 _COVER_CACHE.clear()
             _COVER_CACHE[key] = cached
@@ -281,7 +277,7 @@ def pip_join(
     if broadcast_cover:
         # small-dim broadcast: the WKB rows collected above feed the
         # exact-check closure
-        wkb_by_poly = {r[0]: wkb_mod.from_wkb(bytes(r[1])) for r in rows}
+        wkb_by_poly = {r[0]: wkb_mod.from_wkb(bytes(r[1])) for r in rows if r[1] is not None}
         joined = pts.join(F.broadcast(cover), join_keys, "inner")
         check = _pip_check_udf(wkb_by_poly)
         joined = joined.filter(

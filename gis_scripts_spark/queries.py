@@ -457,13 +457,16 @@ def q_grid_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-level block-grid aggregation (mean-of-means, local_match.py:372-392)."""
     ev = derived_lonlat(_pq(spark, sf_dir, "events"), "user_id")
     out = grid_agg.grid_aggregate(ev, value="value", entity="user_id", z=5)
+    # round(x·10ⁿ)/10ⁿ in double, as the oracle engine rounds: Spark's
+    # round(x, n) rounds the exact decimal expansion and splits near-ties
+    # the other way
     return out.select(
         "cell",
         "n_rows",
-        F.round("sum_value", 4).alias("sum_value"),
-        F.round("mean_value", 6).alias("mean_value"),
+        (F.round(F.col("sum_value") * 1e4, 0) / 1e4).alias("sum_value"),
+        (F.round(F.col("mean_value") * 1e6, 0) / 1e6).alias("mean_value"),
         "n_entities",
-        F.round("mean_of_means", 6).alias("mean_of_means"),
+        (F.round(F.col("mean_of_means") * 1e6, 0) / 1e6).alias("mean_of_means"),
     )
 
 

@@ -103,6 +103,22 @@ def test_knn_haversine_plan_has_no_python(spark, images_parquet):
     assert not re.findall(r"\w*(?:Python|Pandas|Arrow)\w*", plans)
 
 
+def test_bbox_overlap_join_plan_has_no_python(spark):
+    """The box cover is Column math: no Python node anywhere in the
+    bbox_overlap_join plan, from the parsed plan to the executed one."""
+    import pandas as pd
+
+    from gis_scripts_spark.operators import overlap_join
+
+    boxes = spark.createDataFrame(pd.DataFrame({
+        "id": ["b0", "b1", "b2"], "x_min": [0.0, 5.0, 50.0], "y_min": [0.0, 5.0, 50.0],
+        "x_max": [10.0, 15.0, 60.0], "y_max": [10.0, 15.0, 60.0]}))
+    out = overlap_join.bbox_overlap_join(boxes, z=6)
+    plans = out._jdf.queryExecution().toString()
+    assert not re.findall(r"\w*(?:Python|Pandas|Arrow)\w*", plans)
+    assert [(r["id_i"], r["id_j"]) for r in out.collect()] == [("b0", "b1")]
+
+
 def test_coverage_join_wkb_never_in_exchange(spark, images_parquet):
     """Round-3 hygiene gate: the coverage_join plan must not ship polygon
     WKB through ANY Exchange (ids-only explode + dedup; WKB re-joined

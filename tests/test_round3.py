@@ -95,7 +95,11 @@ def test_pair_stats_null_nodata_guard(spark):
             "w": 64, "h": 64, "fmt": "png", "caption": "x", "phash": 0,
             "lon": c0 * RES_DEG, "lat": 0.0, "nodata": float("nan"), "bands": 1,
         })
-    df = spark.createDataFrame(pd.DataFrame(rows), schema=synth.IMAGE_SCHEMA)
+    # built from Rows: from pandas, Arrow turns the NaN into a null on the
+    # non-nullable nodata field
+    df = spark.createDataFrame(
+        [tuple(r[f.name] for f in synth.IMAGE_SCHEMA.fields) for r in rows], schema=synth.IMAGE_SCHEMA
+    )
     # a NaN nodata column must mean "no masking", not NaN-disabled masking
     out = match.overlap_pair_stats(df, z=13, nodata_col="nodata").toPandas()
     assert len(out) == 1
