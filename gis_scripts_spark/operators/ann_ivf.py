@@ -20,9 +20,10 @@ Scale shape (the part that matters at 10^9+ vectors):
 - SEARCH ships each corpus vector through exactly ONE Exchange (the
   ``_list``-keyed group — on a production layout the index table is
   bucket-written by ``_list`` so even that shuffle disappears). Query
-  batches are small next to the corpus, so by default they are
-  BROADCAST (bounded auto gate): the query matrix plus a CSR inverted
-  probe index ride one broadcast into the per-list Arrow kernel, and
+  batches are small next to the corpus, so whenever their n_q·dim·8
+  bytes fit ``repart.fits_broadcast`` they are BROADCAST: the query
+  matrix plus a CSR inverted probe index ride one broadcast into the
+  per-list Arrow kernel, and
   NO query bytes enter any Exchange — the cogroup fallback (queries
   replicated nprobe times through a shuffle) serves query sets too big
   to broadcast, row-identical by construction. Scoring is one float64
@@ -278,9 +279,6 @@ def ivf_topk(
     queries_df: DataFrame | None = None,
     n_iters: int = 8,
     seed: int = 11,
-    broadcast_queries: bool | str = "auto",
-    max_broadcast_query_rows: int = 300_000,
-    max_broadcast_query_mb: float = 160.0,
 ) -> DataFrame:
     """Approximate cosine top-k via IVF probing; exact when
     ``nprobe >= n_lists`` (every list probed = brute force).
@@ -289,10 +287,11 @@ def ivf_topk(
     — the same deterministic contract as ``cosine_topk``/``lsh_topk``.
     Self-matches are excluded when the corpus serves as its own query set.
 
-    ``broadcast_queries``: True / False / "auto" (bounded count + byte
-    estimate). The broadcast path and the cogroup fallback are
-    row-identical by construction (same raw values, same float64 kernel,
-    same probe sets via the shared float32 ``_probe_rows``).
+    Regime: one count job sizes the query matrix at n_q·dim·8 bytes, and
+    ``repart.fits_broadcast`` picks the broadcast path or the cogroup
+    fallback. The two are row-identical by construction (same raw values,
+    same float64 kernel, same probe sets via the shared float32
+    ``_probe_rows``).
     """
     from gis_scripts_spark.operators.repart import spread
 
@@ -307,8 +306,7 @@ def ivf_topk(
         F.col(id_col).alias("_pid"), F.col(vec).alias("_pv"), "_list"
     )
     return _ivf_search(
-        base, qs, centroids, k, id_col, vec, nprobe, exclude_self,
-        broadcast_queries, max_broadcast_query_rows, max_broadcast_query_mb,
+        base, qs, centroids, k, id_col, vec, nprobe, exclude_self
     )
 
 
@@ -321,9 +319,6 @@ def ivf_topk_prebuilt(
     vec: str = "embedding",
     list_col: str = "_list",
     nprobe: int = 2,
-    broadcast_queries: bool | str = "auto",
-    max_broadcast_query_rows: int = 300_000,
-    max_broadcast_query_mb: float = 160.0,
 ) -> DataFrame:
     """Search over a PREBUILT index: ``index_df`` already carries the
     inverted-list tag from :func:`assign_lists` (the production layout —
@@ -335,8 +330,7 @@ def ivf_topk_prebuilt(
         F.col(list_col).alias("_list"),
     )
     return _ivf_search(
-        base, queries_df, centroids, k, id_col, vec, nprobe, False,
-        broadcast_queries, max_broadcast_query_rows, max_broadcast_query_mb,
+        base, queries_df, centroids, k, id_col, vec, nprobe, False
     )
 
 
@@ -349,9 +343,6 @@ def _ivf_search(
     vec: str,
     nprobe: int,
     exclude_self: bool,
-    broadcast_queries: bool | str,
-    max_broadcast_query_rows: int,
-    max_broadcast_query_mb: float,
 ) -> DataFrame:
     # Per-list scoring is ONE float64 BLAS matmul per list group — the
     # same blocked-BLAS kernel shape as cosine_topk, blocked by inverted
@@ -379,7 +370,7 @@ def _ivf_search(
     p = min(nprobe, len(centroids))
     cT32 = np.ascontiguousarray(centroids.T, dtype=np.float32)
 
-    # ---- query-side strategy gate (pip_join-style bounded auto) --------
+    # ---- query-side regime ---------------------------------------------
     # Query batches are usually tiny next to the corpus (50k queries x
     # dim 64 = 13 MB vs a multi-GB index). Broadcasting them deletes the
     # probe-explode Exchange AND the query-vector shuffle entirely: the
@@ -388,15 +379,10 @@ def _ivf_search(
     # window. Measured at 2M x 50k / 1408 lists: the cogroup path's
     # query side alone shuffled ~650 MB of replicated vectors. The
     # cogroup path remains for query sets too big to broadcast.
-    use_broadcast = broadcast_queries
-    if use_broadcast == "auto":
-        n_q = qs.count()
-        est_mb = n_q * len(centroids[0]) * 8 / 1e6
-        use_broadcast = (
-            n_q <= max_broadcast_query_rows and est_mb <= max_broadcast_query_mb
-        )
+    from gis_scripts_spark.operators.repart import fits_broadcast, slots
 
-    if use_broadcast:
+    q_bytes = qs.count() * len(centroids[0]) * 8
+    if fits_broadcast(base.sparkSession, "ivf_topk.queries", q_bytes):
         qpdf = qs.select(F.col(id_col).alias("_qid"), F.col(vec).alias("_qv")).toPandas()
         # keep RAW values at native dtype: the kernel normalizes in
         # float64 from the same raw values the cogroup path sees, so the
@@ -444,8 +430,6 @@ def _ivf_search(
         # the per-list top-k and the same union argument that covers
         # partitioned lists covers partitioned chunks; each (q, p) pair
         # still appears exactly once.
-        from gis_scripts_spark.operators.repart import slots
-
         par = slots(base)
         nsub = max(1, (2 * par) // max(len(centroids), 1))
         keyed = base.withColumn(
@@ -471,8 +455,6 @@ def _ivf_search(
                 np.stack(cdf["_pv"].to_numpy()), cdf["_pid"].to_numpy(),
                 kk, excl,
             )
-
-        from gis_scripts_spark.operators.repart import slots
 
         par = slots(base)
         n_part = min(len(centroids), par)

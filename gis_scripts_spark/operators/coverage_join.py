@@ -8,8 +8,10 @@ Spark shape: footprints (polygons as WKB) are cell-exploded by the shared
 polygon cover (``pip_join.build_cover_df``; a NULL WKB covers nothing);
 AOI rects by the Column box cover (``cells.cover_bbox_col``, JVM-only);
 candidates meet on the cell equi-join and are deduplicated on ids; the
-exact Sutherland–Hodgman clip + shoelace ratio runs in an Arrow-batched
-pandas UDF on candidates only.
+footprint WKB is re-joined to them (broadcast when their measured bytes
+fit ``repart.fits_broadcast``, shuffled otherwise); the exact
+Sutherland–Hodgman clip + shoelace ratio runs in an Arrow-batched pandas
+UDF on candidates only.
 """
 
 from __future__ import annotations
@@ -25,6 +27,7 @@ from gis_scripts_spark.geom import core as geom
 from gis_scripts_spark.geom import wkb as wkb_mod
 from gis_scripts_spark.index import cells as cells_mod
 from gis_scripts_spark.operators.pip_join import build_cover_df
+from gis_scripts_spark.operators.repart import fits_broadcast
 
 
 def _coverage(wkb_col: pd.Series, x0: pd.Series, y0: pd.Series, x1: pd.Series, y1: pd.Series) -> pd.Series:
@@ -58,8 +61,6 @@ def coverage_join(
     wkb_col: str = "wkb",
     rect_id: str = "aoi_id",
     min_coverage: float = 0.0,
-    broadcast_candidates: bool | str = "auto",
-    max_broadcast_candidates: int = 2_000_000,
 ) -> DataFrame:
     """(fp_id, rect_id, coverage) for every footprint×AOI pair with
     coverage > min_coverage. rects_df: (rect_id, x_min, y_min, x_max,
@@ -73,18 +74,11 @@ def coverage_join(
     the whole plan contains wkb; otherwise the re-join degrades to ONE
     linear shuffle of each matched footprint's WKB.
 
-    `broadcast_candidates="auto"` (default) is the safety valve the r3
-    advice asked for: an unconditional F.broadcast hint bypasses
-    autoBroadcastJoinThreshold and would OOM the driver on a huge
-    candidate set. Auto persists the ids-only candidate frame and gates on
-    its EXACT count (r4 advice fix — the old |footprints| x |rects| product
-    bound both re-ran arbitrary upstream lineage for its "metadata-only"
-    counts and tripped the expensive path on tiny true candidate sets).
-    The count job runs the cover+dedup pipeline once, and the subsequent
-    join reuses the persisted result, so auto costs one extra count of a
-    CACHED frame — but it is still one more Spark job than an explicit
-    setting. Pass True for known-small dims (zero extra jobs, the
-    queries.py pattern) or False to force the shuffle path.
+    Regime: the ids-only candidate frame is persisted and one aggregate
+    job over it measures its bytes (ids as strings plus the four bbox
+    doubles); the join then reads the cache, so the cover+dedup pipeline
+    runs once. ``repart.fits_broadcast`` picks the broadcast re-join or
+    the shuffle re-join.
 
     The persisted candidate frame lives as long as the returned frame
     (cachescope)."""
@@ -105,15 +99,13 @@ def coverage_join(
         .select("_fid", "_rid", "x_min", "y_min", "x_max", "y_max")
         .dropDuplicates(["_fid", "_rid"])  # ids+bbox only in this Exchange
     )
-    if broadcast_candidates == "auto":
-        # exact gate: persist the ids-only candidate frame and count it —
-        # the count is the real quantity the broadcast decision needs, and
-        # the persisted result feeds the join so the pipeline runs once
-        cand = persist(cand)
-        do_broadcast = cand.count() <= max_broadcast_candidates
-    else:
-        do_broadcast = bool(broadcast_candidates)
-    cand_side = F.broadcast(cand) if do_broadcast else cand
+    cand = persist(cand)
+    nbytes = cand.agg(F.sum(
+        F.octet_length(F.col("_fid").cast("string"))
+        + F.octet_length(F.col("_rid").cast("string")) + 32
+    )).first()[0] or 0
+    fits = fits_broadcast(footprints_df.sparkSession, "coverage_join.candidates", nbytes)
+    cand_side = F.broadcast(cand) if fits else cand
     joined = fp_src.join(cand_side, "_fid")  # WKB re-joined once per candidate
     out = joined.withColumn(
         "coverage",

@@ -17,6 +17,9 @@ Scale shapes:
 - simhash / pHash: one 64-bit hash per row into hamming_neardup_pairs,
   the banded self-join (max_hamming + 1 bands; pigeonhole: any pair within
   the distance shares one band exactly).
+- n-gram Jaccard: broadcast integer postings and a numpy pair kernel when
+  the gram collect's byte bound fits ``repart.fits_broadcast``; an
+  inverted-index self-join otherwise.
 """
 
 from __future__ import annotations
@@ -27,7 +30,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql.types import ArrayType, IntegerType, LongType
 
 from gis_scripts_spark.cachescope import persist, scoped
 
@@ -351,48 +354,13 @@ HAVING MIN({ham}) <= {max_hamming}
 """
 
 
-# ----------------------------------------------------- exact word jaccard
-def word_jaccard_pairs(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", threshold: float = 0.5
-) -> DataFrame:
-    """Exact distinct-word Jaccard similarity join, pure DataFrame ops
-    (inverted-index style: explode words -> pair counts -> |A∩B| /
-    (|A|+|B|-|A∩B|)). The exact oracle for the MinHash path.
-
-    Returns (id_a, id_b, jaccard)."""
-    words = df.select(
-        F.col(id_col).alias("_id"), F.explode(F.array_distinct(F.split(text_col, " "))).alias("w")
-    )
-    sizes = words.groupBy("_id").agg(F.count(F.lit(1)).alias("n"))
-    a = words.select(F.col("_id").alias("id_a"), "w")
-    b = words.select(F.col("_id").alias("id_b"), "w")
-    inter = (
-        a.join(b, "w")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    na = sizes.select(F.col("_id").alias("id_a"), F.col("n").alias("n_a"))
-    nb = sizes.select(F.col("_id").alias("id_b"), F.col("n").alias("n_b"))
-    out = (
-        inter.join(na, "id_a")
-        .join(nb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_common").cast("double") / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
-        )
-    )
-    return out.filter(F.col("jaccard") >= threshold).select("id_a", "id_b", "jaccard")
-
-
+# ----------------------------------------------------- exact n-gram jaccard
 def ngram_jaccard_pairs(
     df: DataFrame,
     n: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.5,
-    max_fastpath_docs: int = 500_000,
-    max_fastpath_gram_rows: int = 30_000_000,
 ) -> DataFrame:
     """Exact n-gram (word shingle) Jaccard similarity join.
 
@@ -409,19 +377,23 @@ def ngram_jaccard_pairs(
       fixture has 27,865 distinct trigrams each shared by ~94 docs, so
       the inverted-index self-join emits 257M rows into a 120M-key
       hash aggregate (measured 26.8 s, ~700 ns/row of pure join+agg).
-      The FAST PATH (bounded, pip_join-style gate) collects the integer
-      postings (doc_idx, gram_idx) — ints only, ~16 B/row — broadcasts
-      them, and counts pair intersections per doc-block with a
-      vectorized numpy kernel (range-concat + sort-unique), filtering
-      to the threshold INSIDE the task so the 10^8-row pair stream
-      never touches a shuffle. Exactness is unchanged: same gram sets,
+      The FAST PATH collects the distinct (id, gram) rows, factorizes
+      them into integer postings (doc_idx, gram_idx) — ints only — on
+      the driver, broadcasts them, and counts pair intersections per
+      doc-block with a vectorized numpy kernel (range-concat +
+      sort-unique), filtering to the threshold INSIDE the task so the
+      10^8-row pair stream never touches a shuffle. Exactness is unchanged: same gram sets,
       same integer intersection counts, same float64 jaccard — pytest
       pins fastpath == join-path on planted corpora, and the driver
       query keeps its full DuckDB oracle.
 
-    The join formulation remains the scale path (unbounded corpora,
-    non-integer ids) and is used whenever the gates fail."""
-    from gis_scripts_spark.operators.repart import spread
+    Regime: the fast path needs integer ids, and one aggregate job bounds
+    its collect in bytes before the gram explode runs — each gram row is
+    an 8-byte id plus a gram, and a document's grams hold each of its
+    bytes at most n times. Within ``repart.fits_broadcast`` the fast path
+    runs; otherwise the join formulation, the scale path (unbounded
+    corpora, non-integer ids)."""
+    from gis_scripts_spark.operators.repart import fits_broadcast, spread
 
     toks = F.split(F.col("_t"), " ")
     grams_arr = F.when(
@@ -435,17 +407,12 @@ def ngram_jaccard_pairs(
     grams = docs.select("_id", F.explode(F.array_distinct(grams_arr)).alias("g"))
 
     id_type = df.schema[id_col].dataType
-    from pyspark.sql.types import DoubleType, IntegerType, LongType, StructField, StructType
-
-    integral_id = isinstance(id_type, (IntegerType, LongType))
-    n_docs = df.count() if integral_id else None  # parquet metadata count
-    if integral_id and n_docs <= max_fastpath_docs:
-        # token count >= distinct-gram count, so one cheap scan-side agg
-        # upper-bounds the collect (no extra pass over the gram explode)
-        est = docs.agg(
-            F.sum(F.size(F.split(F.col("_t"), " "))).alias("s")
-        ).collect()[0]["s"] or 0
-        if est <= max_fastpath_gram_rows:
+    if isinstance(id_type, (IntegerType, LongType)):
+        text = F.col(text_col)
+        nbytes = df.agg(
+            F.sum(8 * F.size(F.split(text, " ")) + n * F.octet_length(text))
+        ).first()[0] or 0
+        if fits_broadcast(df.sparkSession, "ngram_jaccard_pairs.postings", nbytes):
             return _ngram_jaccard_fastpath(grams, id_type, threshold)
 
     sizes = grams.groupBy("_id").agg(F.count(F.lit(1)).alias("n"))

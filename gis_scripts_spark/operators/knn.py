@@ -27,8 +27,12 @@ the only Python is the loop driver. The metric decides three things only:
 
 Scale notes: the probe explode is per distinct CELL (not per query), the
 shuffle payload is (id, lon, lat, cell) only, and AQE skew-join splits
-hot cells. Each round's survivors are local-checkpointed, so a round's
-plan does not re-embed every earlier round.
+hot cells. Round one shuffle-hash joins both sides; each later round's
+probe rows are known exactly from the previous round's stats job, and
+when their 24 bytes a row fit ``repart.fits_broadcast`` the probes are
+broadcast (and a tail whose covers-grid probes fit jumps straight to the
+covers-grid radius). Each round's survivors are local-checkpointed, so a
+round's plan does not re-embed every earlier round.
 """
 
 from __future__ import annotations
@@ -42,12 +46,11 @@ from pyspark.sql import functions as F
 
 from gis_scripts_spark.cachescope import persist, scoped
 from gis_scripts_spark.index import cells as cells_mod
+from gis_scripts_spark.operators.repart import fits_broadcast
 
 EARTH_R = 6371000.0
 # doubling rounds before the last pass forces the covers-grid radius
 _MAX_ROUNDS = 10
-# probe rows up to which a retry round broadcasts its probes
-_BROADCAST_PROBES = 2_000_000
 
 
 def _haversine(qlon, qlat, plon, plat):
@@ -109,6 +112,7 @@ def knn_join(
     if metric not in ("euclid2", "haversine"):
         raise ValueError(f"unknown metric {metric!r}")
     wrap = metric == "haversine"
+    spark = points_df.sparkSession
     cell_w, cell_h = cells_mod.cell_size_deg(z)
     grid_n = 1 << z
     glong = F.lit(int(grid_n)).cast("long")
@@ -187,10 +191,10 @@ def knn_join(
     # round — persist so the cnts-join lineage runs once
     unresolved = persist(unresolved)
     resolved_parts: list[DataFrame] = []
-    # exact probe-row bound from the prior round's stats job — gates
-    # broadcasting the retry probes (points table never re-shuffled for a
-    # handful of stragglers)
-    probe_cells_bound: int | None = None
+    # set from the prior round's exact probe-row bound: broadcast the
+    # retry probes (points table never re-shuffled for a handful of
+    # stragglers)
+    broadcast_probes = False
     r = int(initial_r)  # the round's radius, for telemetry
     # _MAX_ROUNDS + 1 passes: if the doubling budget runs out before the
     # radius covers the grid, the LAST pass forces it, so every remaining
@@ -231,7 +235,7 @@ def knn_join(
         # previous round's stats job) — broadcast the probes so the points
         # table is NOT re-shuffled just to serve a handful of retries
         # (measured as a ~3s/round fixed cost at material size).
-        if probe_cells_bound is not None and probe_cells_bound <= _BROADCAST_PROBES:
+        if broadcast_probes:
             cand = F.broadcast(probes).join(pts, probes["_probe"] == pts["_pcell"], "inner")
         else:
             cand = probes.join(pts.hint("shuffle_hash"), probes["_probe"] == pts["_pcell"], "inner")
@@ -326,14 +330,17 @@ def knn_join(
         # everything. Exactness is radius-schedule-independent; at larger
         # survivor counts the doubling schedule is kept so the points table
         # is never flooded.
+        # a probe row is three longs (_qcell, _cr, _probe): 24 bytes
         grid_probe_bound = int(stats["n_cells"]) * grid_n * grid_n
-        if grid_probe_bound <= _BROADCAST_PROBES:
+        if fits_broadcast(spark, "knn_join.grid_probes", 24 * grid_probe_bound):
             unresolved = undone.withColumn("_r", glong)
-            probe_cells_bound = grid_probe_bound
+            broadcast_probes = True
             r = grid_n
         else:
             unresolved = undone.withColumn("_r", r_dbl)
-            probe_cells_bound = int(stats["probe_cells"])
+            broadcast_probes = fits_broadcast(
+                spark, "knn_join.probes", 24 * int(stats["probe_cells"])
+            )
             r = min(2 * r, grid_n)
 
     out = resolved_parts[0]

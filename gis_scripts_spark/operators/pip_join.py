@@ -9,8 +9,9 @@ Replaces the reference's zonal containment (``Assess_Agreement.R:45-57``
      inside the polygon; a NULL WKB covers no cell. ``build_cover_df`` is
      the engine's one WKB->cover path (coverage_join covers footprints with
      it). Points get the same cell key as pure Column math.
-     The join is then a cell equi-join — broadcast-hash when the cover table
-     is small (AOI/admin layers), shuffle-hash otherwise.
+     The join is then a cell equi-join — broadcast-hash when the layer's
+     WKB bytes fit ``repart.fits_broadcast`` (AOI/admin layers),
+     shuffle-hash otherwise.
   2. EXACT: boundary cells (`full = false`) run the exact ray-casting test
      inside an Arrow-batched pandas UDF; `full = true` cells skip it
      entirely (the dominant fraction for large polygons).
@@ -32,6 +33,7 @@ import hashlib
 from gis_scripts_spark.geom import core as geom
 from gis_scripts_spark.geom import wkb as wkb_mod
 from gis_scripts_spark.index import cells as cells_mod
+from gis_scripts_spark.operators.repart import fits_broadcast
 
 # (z, polygon-content fingerprint) -> cover pandas frame; static AOI layers
 # cover once per process, not once per query
@@ -58,6 +60,18 @@ def _cover_frame(ids, wkbs, z: int) -> pd.DataFrame:
     )
 
 
+def _cover_schema(polys_df: DataFrame, poly_id: str) -> StructType:
+    """(poly_id, cell, full); the id keeps its input type and nullability."""
+    id_field = polys_df.schema[poly_id]
+    return StructType(
+        [
+            StructField("poly_id", id_field.dataType, id_field.nullable),
+            StructField("cell", LongType(), False),
+            StructField("full", BooleanType(), False),
+        ]
+    )
+
+
 def build_cover_df(
     spark: SparkSession, polys_df: DataFrame, z: int, poly_id: str = "poly_id", wkb_col: str = "wkb"
 ) -> DataFrame:
@@ -67,20 +81,12 @@ def build_cover_df(
     a 10^7-row admin-polygon table covers in parallel; the result is small
     (cells per polygon ~ area / cell_area) and broadcast-joinable.
     """
-    id_field = polys_df.schema[poly_id]
-    out_schema = StructType(
-        [
-            StructField("poly_id", id_field.dataType, id_field.nullable),
-            StructField("cell", LongType(), False),
-            StructField("full", BooleanType(), False),
-        ]
-    )
 
     def gen(batches):
         for pdf in batches:
             yield _cover_frame(pdf[poly_id], pdf[wkb_col], z)
 
-    return polys_df.select(poly_id, wkb_col).mapInPandas(gen, out_schema)
+    return polys_df.select(poly_id, wkb_col).mapInPandas(gen, _cover_schema(polys_df, poly_id))
 
 
 def _pip_check_udf(wkb_by_poly: dict):
@@ -155,29 +161,18 @@ def pip_join(
     lat: str = "lat",
     poly_id: str = "poly_id",
     wkb_col: str = "wkb",
-    broadcast_cover: bool | str = "auto",
-    max_broadcast_polys: int = 100_000,
-    max_broadcast_bytes: int = 256 * 1024 * 1024,
     salt: int | str | None = None,
     hot_cells: list[int] | None = None,
-    skew_sample_fraction: float | None = None,
 ) -> DataFrame:
     """Inner join: rows of `points_df` × matching polygon; the polygon id
     column is NORMALIZED to 'poly_id' in the output whatever the input
     column was named.
 
-    `broadcast_cover=True`: cover table is broadcast (AOI layers). False:
-    shuffle-hash equi-join on cell, WKB carried through the join.
-    "auto" (default) is the OOM safety valve: the broadcast path needs a
-    driver collect of the polygon rows anyway, so auto BOUNDS that collect
-    on BOTH axes (r4 advice): a first cheap probe job aggregates
-    count + sum(length(wkb)) over the `limit(max_broadcast_polys + 1)`
-    frame (never shipping WKB to the driver), and only if the layer is
-    within `max_broadcast_polys` rows AND `max_broadcast_bytes` total WKB
-    does the real collect run — 100k multipolygons with GB-scale WKB fall
-    back to the shuffle-hash path instead of exhausting driver memory.
-    Cost: one extra bounded aggregate job (runs the upstream lineage of
-    `polys_df` once more — keep explicit True for known-small dims).
+    Regime: one aggregate job sums the layer's WKB bytes (no WKB reaches
+    the driver). Within ``repart.fits_broadcast`` the polygon rows are
+    collected, their cover is broadcast and the exact check reads the WKB
+    from its closure; past it the cover is built distributed and the WKB
+    rides the shuffle-hash cell join.
 
     `salt` + `hot_cells`: replicate cover rows of hot cells `salt` ways and
     spread their points across replicas via a deterministic hash — the skew
@@ -191,42 +186,26 @@ def pip_join(
     pandas-UDF work makes it a CPU straggler (AQE detection is byte-based;
     measure_hot_cells counts rows).
 
-    `salt="auto"`: measure the hot cells (one groupBy job — pass
-    `skew_sample_fraction` to estimate from a sample at very large scale)
-    and, if any exist, size the salt at 4x spark.sql.shuffle.partitions
-    per the measured grain rule; with no hot cells the join is unsalted
-    (zero overhead beyond the detection job).
+    `salt="auto"`: measure the hot cells (one groupBy job) and, if any
+    exist, size the salt at 4x spark.sql.shuffle.partitions per the
+    measured grain rule; with no hot cells the join is unsalted (zero
+    overhead beyond the detection job).
     """
     spark = points_df.sparkSession
     if z == "auto":
         z = auto_zoom(polys_df, wkb_col)
     if salt == "auto":
         if hot_cells is None:
-            hot_cells = measure_hot_cells(
-                points_df, z=z, lon=lon, lat=lat,
-                sample_fraction=skew_sample_fraction,
-            )
+            hot_cells = measure_hot_cells(points_df, z=z, lon=lon, lat=lat)
         salt = (
             4 * int(spark.conf.get("spark.sql.shuffle.partitions"))
             if hot_cells else None
         )
 
+    wkb_bytes = polys_df.agg(F.sum(F.length(F.col(wkb_col)))).first()[0] or 0
     rows = None
-    if broadcast_cover == "auto":
-        probe = (
-            polys_df.select(F.length(F.col(wkb_col)).alias("_len"))
-            .limit(max_broadcast_polys + 1)
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("_len").alias("b"))
-            .collect()[0]
-        )
-        if int(probe["n"]) > max_broadcast_polys or int(probe["b"] or 0) > max_broadcast_bytes:
-            broadcast_cover = False  # too big to drive: shuffle-hash path
-        else:
-            rows = polys_df.select(poly_id, wkb_col).collect()
-            broadcast_cover = True
-    elif broadcast_cover:
+    if fits_broadcast(spark, "pip_join.cover", wkb_bytes):
         rows = polys_df.select(poly_id, wkb_col).collect()
-    if broadcast_cover:
         # the AOI layer is static dimension data: build its cover ONCE per
         # (polygon content, z) and reuse across queries — the cover is the
         # analogue of a prepared dimension index, not per-query work. The
@@ -240,9 +219,7 @@ def pip_join(
             if len(_COVER_CACHE) > 32:
                 _COVER_CACHE.clear()
             _COVER_CACHE[key] = cached
-        cover = spark.createDataFrame(cached) if len(cached) else build_cover_df(
-            spark, polys_df, z, poly_id, wkb_col
-        )
+        cover = spark.createDataFrame(cached, _cover_schema(polys_df, poly_id))
     else:
         cover = build_cover_df(spark, polys_df, z, poly_id, wkb_col)
 
@@ -274,7 +251,7 @@ def pip_join(
     else:
         join_keys = ["cell"]
 
-    if broadcast_cover:
+    if rows is not None:
         # small-dim broadcast: the WKB rows collected above feed the
         # exact-check closure
         wkb_by_poly = {r[0]: wkb_mod.from_wkb(bytes(r[1])) for r in rows if r[1] is not None}
@@ -307,19 +284,14 @@ def measure_hot_cells(
     lon: str = "lon",
     lat: str = "lat",
     skew_factor: float = 8.0,
-    sample_fraction: float | None = None,
 ) -> list[int]:
     """Measured skew detection (SURVEY.md §4.2): cells whose row count
     exceeds `skew_factor` x the mean per-cell count. Feed the result into
     pip_join(salt=..., hot_cells=...). Geotagged data is Zipf-like per cell
     (hot-spot cities/coastlines); AQE's skew-join splitting handles moderate
-    skew, this handles the single-monster-cell case. Use `sample_fraction`
-    to estimate from a sample at very large scale."""
-    pts = points_df
-    if sample_fraction:
-        pts = pts.sample(fraction=sample_fraction, seed=7)
+    skew, this handles the single-monster-cell case."""
     counts = (
-        pts.withColumn("cell", cell_expr(lon, lat, z)).groupBy("cell").count()
+        points_df.withColumn("cell", cell_expr(lon, lat, z)).groupBy("cell").count()
     )
     stats = counts.agg(F.avg("count").alias("mean")).collect()[0]
     threshold = float(stats["mean"]) * skew_factor

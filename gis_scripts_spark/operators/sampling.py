@@ -22,52 +22,13 @@ def balance_classes(
     n_per_class: int,
 ) -> DataFrame:
     """At most n_per_class rows per label, chosen by md5(key) order
-    (deterministic, content-keyed — never partition-dependent).
-
-    Scale shape: a map-side per-partition top-k prefilter (one Arrow pass,
-    no shuffle) bounds the window's input at n_per_class x partitions rows
-    per label — the global top-k under a total order is a subset of the
-    union of per-partition top-k, so the result is IDENTICAL to the plain
-    window (which otherwise shuffles and sorts every row of every class
-    on one task per label). The prefilter only fires for integer keys,
-    where Python's str() provably equals Spark's cast-to-string, so the
-    pandas md5 ranks exactly like the SQL md5."""
-    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
-
+    (deterministic, content-keyed — never partition-dependent). A NULL
+    key hashes to NULL, which the ascending sort ranks first; a NULL label
+    is a class of its own."""
     h = F.md5(F.col(key_col).cast("string"))
     w = Window.partitionBy(label_col).orderBy(h, F.col(key_col))
-    src = df
-    if isinstance(df.schema[key_col].dataType,
-                  (ByteType, ShortType, IntegerType, LongType)):
-        import hashlib
-
-        lbl, key, npc = label_col, key_col, int(n_per_class)
-
-        def _pretopk(batches):
-            import pandas as pd
-
-            acc = None
-            for pdf in batches:
-                # a NULL key hashes to NULL, which the window's ascending
-                # sort puts first; a NULL label is a class of its own
-                md5s = [
-                    None if pd.isna(k) else hashlib.md5(str(int(k)).encode()).hexdigest()
-                    for k in pdf[key].to_numpy()
-                ]
-                pdf = pdf.assign(_h=md5s)
-                both = pdf if acc is None else pd.concat((acc, pdf))
-                both = both.sort_values(["_h", key], kind="mergesort", na_position="first")
-                acc = both.groupby(lbl, sort=False, dropna=False).head(npc)
-            if acc is not None:
-                yield acc.drop(columns=["_h"])
-
-        from gis_scripts_spark.operators.repart import spread
-
-        # spread first: a few-split scan would run the per-row md5 pass on
-        # a handful of cores (no-op on well-split inputs)
-        src = spread(df, key_col).mapInPandas(_pretopk, df.schema)
     return (
-        src.withColumn("_rk", F.row_number().over(w))
+        df.withColumn("_rk", F.row_number().over(w))
         .filter(F.col("_rk") <= n_per_class)
         .drop("_rk")
     )

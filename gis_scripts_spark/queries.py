@@ -617,13 +617,8 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     32 lists puts it back on all cores. Exactness is UNAFFECTED — with
     exhaustive probing the codebook only partitions work."""
     emb = _pq(spark, sf_dir, "embeddings")
-    # broadcast_queries=True (explicit, the coverage_join pattern): this
-    # query's query set IS the embeddings table — statically far under the
-    # broadcast ceiling — so the auto gate's count job is a job spent
-    # answering a question the query already knows.
     return ann_ivf.ivf_topk(
-        emb, k=3, id_col="vec_id", vec="embedding", n_lists=32, nprobe=32,
-        n_iters=2, broadcast_queries=True,
+        emb, k=3, id_col="vec_id", vec="embedding", n_lists=32, nprobe=32, n_iters=2,
     )
 
 
@@ -1339,13 +1334,7 @@ def q_coverage_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             for r in nations
         ]
     )
-    # broadcast_candidates=True (explicit force): this query statically
-    # knows its dims — 25 AOI rects x |supplier| footprints bounds the
-    # candidate set far under any broadcast ceiling, and the auto gate's
-    # counting jobs would re-run part of the WKB-build pipeline for an
-    # answer we already know. Library callers keep the safe "auto".
-    out = cj.coverage_join(fp_df, spark.createDataFrame(rects), z=6,
-                           rect_id="aoi_id", broadcast_candidates=True)
+    out = cj.coverage_join(fp_df, spark.createDataFrame(rects), z=6, rect_id="aoi_id")
     return out.select("image_id", "aoi_id", F.round("coverage", 4).alias("coverage"))
 
 

@@ -1,3 +1,4 @@
+import contextlib
 import os
 import sys
 
@@ -19,3 +20,24 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+@pytest.fixture
+def no_broadcast(spark):
+    """Context-manager factory: inside ``with no_broadcast():`` the
+    session's spark.sql.autoBroadcastJoinThreshold is -1, so every
+    operator takes its shuffle path; the old value is restored on exit.
+    Run the action inside the block: the threshold is read again when
+    the plan is made."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+
+    @contextlib.contextmanager
+    def scope():
+        old = spark.conf.get(key)
+        spark.conf.set(key, "-1")
+        try:
+            yield
+        finally:
+            spark.conf.set(key, old)
+
+    return scope

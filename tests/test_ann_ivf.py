@@ -175,7 +175,7 @@ def test_ivf_empty_list_degeneracy(spark, n_lists):
     )
 
 
-def test_ivf_broadcast_equals_cogroup_rows(spark):
+def test_ivf_broadcast_equals_cogroup_rows(spark, no_broadcast):
     """The broadcast-queries path and the cogroup fallback must be
     row-identical (same raw values, same float64 kernel, same float32
     probe sets via the shared _probe_rows)."""
@@ -188,13 +188,14 @@ def test_ivf_broadcast_equals_cogroup_rows(spark):
     cents = ann_ivf.train_ivf(corpus, n_lists=5, n_iters=3)
     kw = dict(k=4, n_lists=5, nprobe=2, centroids=cents, queries_df=queries)
     a = (
-        ann_ivf.ivf_topk(corpus, broadcast_queries=True, **kw)
+        ann_ivf.ivf_topk(corpus, **kw)
         .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
     )
-    b = (
-        ann_ivf.ivf_topk(corpus, broadcast_queries=False, **kw)
-        .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
-    )
+    with no_broadcast():
+        b = (
+            ann_ivf.ivf_topk(corpus, **kw)
+            .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
+        )
     assert a.equals(b)
     assert len(a) == queries.count() * 4
 
@@ -214,7 +215,7 @@ def test_ivf_broadcast_no_query_bytes_in_any_exchange(spark):
     cents = ann_ivf.train_ivf(corpus, n_lists=3, n_iters=2)
     out = ann_ivf.ivf_topk(
         corpus, k=2, n_lists=3, nprobe=2, centroids=cents,
-        queries_df=queries, broadcast_queries=True,
+        queries_df=queries,
     )
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):

@@ -56,7 +56,7 @@ def _operator_calls(spark):
             docs.select("doc_id", F.xxhash64("text").alias("h")), "h", "doc_id").select(
             "id_a", "id_b"),
         "coverage_join": lambda: coverage_join.coverage_join(
-            fp, rects, broadcast_candidates="auto").select("image_id", "aoi_id"),
+            fp, rects).select("image_id", "aoi_id"),
     }
 
 

@@ -1,6 +1,8 @@
 """One cell cover per shape: the Column box cover against its numpy twin,
 and the shared WKB polygon cover on NULL input."""
 
+import contextlib
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -74,20 +76,29 @@ def _aoi_with_null():
     return rows, rows + [("aoi_null", None, "null")], schema
 
 
-@pytest.mark.parametrize("broadcast_cover", [True, False])
-def test_pip_join_null_wkb_covers_nothing(spark, broadcast_cover):
+@pytest.mark.parametrize("broadcast", [True, False])
+def test_pip_join_null_wkb_covers_nothing(spark, no_broadcast, broadcast):
     """A polygon with a NULL WKB matches no point; the rest join as if it
-    were absent."""
+    were absent. A layer holding only a NULL WKB matches nothing, and on
+    the broadcast path its empty cover is built on the driver: no
+    MapInPandas re-runs the distributed cover."""
     rows, rows_null, schema = _aoi_with_null()
     pts = synth.images_df(spark, 150, parts=4).select("image_id", "lon", "lat")
-    got = pip_join.pip_join(
-        pts, spark.createDataFrame(rows_null, schema), z=7, broadcast_cover=broadcast_cover
-    ).select("image_id", "poly_id").collect()
-    want = pip_join.pip_join(
-        pts, spark.createDataFrame(rows, schema), z=7, broadcast_cover=broadcast_cover
-    ).select("image_id", "poly_id").collect()
+    with contextlib.nullcontext() if broadcast else no_broadcast():
+        got = pip_join.pip_join(
+            pts, spark.createDataFrame(rows_null, schema), z=7
+        ).select("image_id", "poly_id").collect()
+        want = pip_join.pip_join(
+            pts, spark.createDataFrame(rows, schema), z=7
+        ).select("image_id", "poly_id").collect()
+        # points without a Python node of their own
+        local = spark.createDataFrame(pts.collect(), pts.schema)
+        nothing = pip_join.pip_join(local, spark.createDataFrame(rows_null[-1:], schema), z=7)
+        plan = nothing._jdf.queryExecution().executedPlan().toString()
+        assert nothing.count() == 0
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
     assert want
+    assert ("MapInPandas" in plan) is not broadcast, plan
 
 
 def test_pip_join_cover_keeps_id_nullability(spark):

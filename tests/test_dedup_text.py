@@ -27,8 +27,12 @@ def test_exact_dedup_counts(spark, docs):
     assert out["canonical_id"].is_unique
 
 
-def test_ngram_jaccard_vs_pandas_oracle(spark, docs):
+def test_ngram_jaccard_vs_pandas_oracle(spark, no_broadcast, docs):
+    """Both regimes (broadcast-postings kernel, self-join) equal a pandas
+    brute force."""
     got = dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.5).toPandas()
+    with no_broadcast():
+        joined = dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.5).toPandas()
     pdf = docs.select("doc_id", "text").toPandas()
     tri = {
         r["doc_id"]: set(dedup._shingles(r["text"], 3)) for _, r in pdf.iterrows()
@@ -41,7 +45,11 @@ def test_ngram_jaccard_vs_pandas_oracle(spark, docs):
             u = len(tri[a] | tri[b])
             if u and len(tri[a] & tri[b]) / u >= 0.5:
                 want.add((a, b))
+    assert want
     assert set(map(tuple, got[["id_a", "id_b"]].itertuples(index=False))) == want
+    assert got.sort_values(["id_a", "id_b"]).reset_index(drop=True).equals(
+        joined.sort_values(["id_a", "id_b"]).reset_index(drop=True)
+    )
 
 
 def test_minhash_recall_and_precision(spark, docs):
@@ -94,7 +102,7 @@ def test_simhash_pairs_complete_vs_brute_force(spark, docs, max_hamming):
 
 def test_word_jaccard_identical_docs(spark):
     pdf = pd.DataFrame({"doc_id": [1, 2, 3], "text": ["a b c", "c b a", "x y z"]})
-    out = dedup.word_jaccard_pairs(spark.createDataFrame(pdf), threshold=0.99).toPandas()
+    out = dedup.ngram_jaccard_pairs(spark.createDataFrame(pdf), n=1, threshold=0.99).toPandas()
     assert set(map(tuple, out[["id_a", "id_b"]].itertuples(index=False))) == {(1, 2)}
 
 

@@ -56,12 +56,13 @@ def test_pip_join_matches_bruteforce(spark, images, images_pdf, aoi_pdf):
     assert len(got) == len(got_set)  # no duplicate pairs
 
 
-def test_pip_join_shuffle_variant_same_result(spark, images, aoi_pdf):
+def test_pip_join_shuffle_variant_same_result(spark, no_broadcast, images, aoi_pdf):
     polys_df = spark.createDataFrame(aoi_pdf)
-    a = pip_join.pip_join(images, polys_df, z=7, broadcast_cover=True)
-    b = pip_join.pip_join(images, polys_df, z=7, broadcast_cover=False)
+    a = pip_join.pip_join(images, polys_df, z=7)
     sa = set(map(tuple, a.select("image_id", "poly_id").collect()))
-    sb = set(map(tuple, b.select("image_id", "poly_id").collect()))
+    with no_broadcast():
+        b = pip_join.pip_join(images, polys_df, z=7)
+        sb = set(map(tuple, b.select("image_id", "poly_id").collect()))
     assert sa == sb
 
 

@@ -92,7 +92,7 @@ def test_clip_ring_and_coverage_fraction():
     assert np.isclose(frac, (25.0 - 4.0) / 96.0)
 
 
-def test_coverage_join_matches_bruteforce(spark):
+def test_coverage_join_matches_bruteforce(spark, no_broadcast):
     rng = np.random.default_rng(21)
     fps = []
     for i in range(30):
@@ -114,11 +114,12 @@ def test_coverage_join_matches_bruteforce(spark):
                 assert np.isclose(got[(fid, rr["aoi_id"])], want, rtol=1e-9), (fid, rr["aoi_id"])
             else:
                 assert (fid, rr["aoi_id"]) not in got
-    # round-4 ADVICE safety valve: when the candidate count exceeds the
-    # broadcast ceiling, auto mode falls back to a shuffle join — same rows
-    out2 = coverage_join.coverage_join(
-        fp_df, spark.createDataFrame(rects), z=6, max_broadcast_candidates=0
-    ).toPandas()
+    # round-4 ADVICE safety valve: when the candidates exceed the broadcast
+    # bound, the re-join falls back to a shuffle join — same rows
+    with no_broadcast():
+        out2 = coverage_join.coverage_join(
+            fp_df, spark.createDataFrame(rects), z=6
+        ).toPandas()
     got2 = {(r["image_id"], r["aoi_id"]): r["coverage"] for _, r in out2.iterrows()}
     assert got2 == got
 

@@ -164,7 +164,7 @@ def test_coverage_join_clips_each_candidate_once(spark):
     }))
     rects = spark.createDataFrame(pd.DataFrame({
         "aoi_id": ["a0"], "x_min": [-10.0], "y_min": [-10.0], "x_max": [10.0], "y_max": [10.0]}))
-    out = cj.coverage_join(fp, rects, z=5, min_coverage=0.5, broadcast_candidates=True)
+    out = cj.coverage_join(fp, rects, z=5, min_coverage=0.5)
     plan = out._jdf.queryExecution().executedPlan().toString()
     clips = [ln for ln in plan.splitlines() if "ArrowEvalPython [_coverage(" in ln]
     assert len(clips) == 1, plan

@@ -398,10 +398,10 @@ def test_codec_decode_window_dispatch():
     assert (codec.decode_window(png, "png", 5, 10, 20, 30) == img[10:40, 5:25]).all()
 
 
-def test_pip_join_auto_falls_back_to_shuffle(spark):
+def test_pip_join_auto_falls_back_to_shuffle(spark, no_broadcast):
     """Round-4 safety valve: pip_join's broadcast path drives the polygon
-    rows through a BOUNDED collect; past max_broadcast_polys it falls
-    back to the shuffle-hash path — and both paths return identical
+    rows through a BOUNDED collect; past the session's broadcast bound it
+    falls back to the shuffle-hash path — and both paths return identical
     pairs."""
     import pandas as pd
 
@@ -423,14 +423,14 @@ def test_pip_join_auto_falls_back_to_shuffle(spark):
         "image_id", "lon", "lat"
     )
 
-    def pairs(**kw):
-        out = pip_join.pip_join(pts, polys_df, z=6, **kw).toPandas()
+    def pairs():
+        out = pip_join.pip_join(pts, polys_df, z=6).toPandas()
         return set(zip(out["image_id"], out["poly_id"]))
 
-    a = pairs()  # auto: 6 polys <= ceiling -> broadcast
-    b = pairs(max_broadcast_polys=2)  # auto: bounded collect overflows -> shuffle
-    c = pairs(broadcast_cover=False)  # explicit shuffle
-    assert a == b == c
+    a = pairs()  # 6 polys under the bound -> broadcast
+    with no_broadcast():
+        b = pairs()  # no layer fits a -1 bound -> shuffle
+    assert a == b
     assert len(a) > 0
 
 

@@ -27,8 +27,8 @@ def test_deterministic_sample_partition_invariance(spark):
 
 
 def test_balance_classes_pretopk_equals_plain_window(spark):
-    """The integer-key map-side top-k prefilter must be invisible: same
-    rows as the pure window formulation (optimization-round internals)."""
+    """balance_classes returns the same rows as the pure window
+    formulation on a multi-partition integer-key input."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -48,7 +48,7 @@ def test_balance_classes_pretopk_equals_plain_window(spark):
 
 def test_balance_classes_null_keys_match_plain_window(spark):
     """NULL keys hash to NULL, which the window's ascending sort ranks
-    first; a NULL label is a class of its own. The prefilter must agree."""
+    first; a NULL label is a class of its own."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -72,3 +72,32 @@ def test_balance_classes_null_keys_match_plain_window(spark):
     got, want = rows(fast), rows(plain)
     assert got == want
     assert any(k is None for _, k in want) and any(t is None for t, _ in want)
+
+
+def test_balance_classes_large_long_keys_with_null(spark):
+    """A LongType key with a NULL and values above 2^53: a pandas path
+    turns such a column into float64, which rounds odd keys to their even
+    neighbours and changes both their md5 rank and the keys returned.
+    The selection must equal the plain window's, key for key."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    base = 2**53
+    rows = [(base + 2 * i + 1, "abc"[i % 3]) for i in range(600)] + [(None, "a")]
+    schema = StructType([
+        StructField("event_id", LongType(), True),
+        StructField("event_type", StringType(), False),
+    ])
+    ev = spark.createDataFrame(rows, schema).repartition(4)
+    fast = sampling.balance_classes(ev, "event_type", "event_id", 20)
+    h = F.md5(F.col("event_id").cast("string"))
+    w = Window.partitionBy("event_type").orderBy(h, F.col("event_id"))
+    plain = ev.withColumn("_rk", F.row_number().over(w)).filter(F.col("_rk") <= 20).drop("_rk")
+
+    def rows_of(df):
+        return sorted(map(tuple, df.select("event_type", "event_id").collect()), key=repr)
+
+    got, want = rows_of(fast), rows_of(plain)
+    assert got == want
+    assert len(want) == 60 and ("a", None) in want
