@@ -22,13 +22,13 @@ image bytes; polygon WKB rides the broadcast.
 
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, LongType, StructField, StructType
-
-import hashlib
 
 from gis_scripts_spark.geom import core as geom
 from gis_scripts_spark.geom import wkb as wkb_mod
@@ -135,11 +135,6 @@ def auto_zoom(polys_df: DataFrame, wkb_col: str = "wkb", target_cells: int = 64,
     median bbox area -> z such that a median polygon covers ~target_cells
     cells. Finer cells => more rows in the (broadcast) cover table but a
     larger full-cell fast-path fraction; ~64 cells/polygon balances both."""
-    import numpy as np
-
-    from gis_scripts_spark.geom import core as geom
-    from gis_scripts_spark.geom import wkb as wkb_mod
-
     rows = polys_df.select(wkb_col).dropna().limit(sample_n).collect()
     areas = []
     for r in rows:

@@ -3,6 +3,14 @@
 Local-mode sandbox stands in for a multi-executor cluster; all settings are
 chosen so the same code runs unchanged under ``spark-submit --py-files`` on a
 real cluster (nothing here is local-only).
+
+Every Python UDF task (the S2 and hex7 encodes, pip_join's exact check,
+image decode) pays a fixed worker cost before it reads a row. On Python
+3.11 PySpark's worker calls ``importlib.invalidate_caches()`` per task,
+and each of the 16 zip importers cached for pyspark.zip re-read the
+archive's directory: 0.17-0.24 s of CPU per task on a 4-core host. The
+package's ``__init__`` makes that invalidation lazy, as CPython 3.13 does,
+so a reused worker's later tasks pay 0.03-0.05 s.
 """
 
 from __future__ import annotations
