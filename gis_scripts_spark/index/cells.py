@@ -15,15 +15,16 @@ bit-for-bit at any parallelism. Web-Mercator XYZ tiles (``tiles.py``) are
 kept for serving-oriented tile assignment.
 
 All functions come in two flavors:
-- ``*_col``: pyspark Column expressions (JVM-side, whole-stage codegen; no
-  UDF, no shuffle).
+- ``*_sql``: the key as one Spark SQL expression (JVM-side, whole-stage
+  codegen; no UDF, no shuffle), turned into a Column by one ``F.expr``;
+  ``cell_col``, ``cover_bbox_col`` and ``cell_prefix_col`` wrap them.
 - numpy versions for driver-side covering, oracles and pandas-UDF kernels.
 """
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
 MAX_Z = 28
@@ -31,71 +32,117 @@ _GX_SHIFT = 29
 _Z_SHIFT = 58
 
 
-# ---------------------------------------------------------------- Column API
-def grid_xy_col(lon: Column, lat: Column, z: int) -> tuple[Column, Column]:
-    """Grid x/y at zoom z as int64 Columns (clamped to valid range)."""
+# ------------------------------------------------------------------- SQL API
+# Each key is ONE SQL expression: this text is the only home of the per-row
+# math, and `F.expr` turns a key into a Column with a single call into the
+# JVM (a Column built operator by operator costs one Py4J round trip, plus
+# PySpark's call-site capture, per `+`, `F.lit` or `F.floor`). Inputs are
+# SQL text: a column name or an expression. Double literals carry the `D`
+# suffix: Spark SQL reads a bare `180.0` as DECIMAL(4,1).
+
+
+def sql(c: Column | str) -> str:
+    """SQL text of a key input: a str is SQL already; a Column must be a
+    plain column reference (``F.col("lon")``)."""
+    if isinstance(c, str):
+        return c
+    jexpr = SparkSession.active()._jsparkSession.expression(c._jc)
+    if jexpr.getClass().getSimpleName() not in ("UnresolvedAttribute", "AttributeReference"):
+        raise ValueError(f"a key input Column must be a column reference, got {c}")
+    return jexpr.sql()
+
+
+def exprs(sqls: dict[str, str]) -> dict[str, Column]:
+    """{name: SQL} -> {name: Column}, for one `withColumns` projection."""
+    return {name: F.expr(text) for name, text in sqls.items()}
+
+
+def dlit(v: float) -> str:
+    """A double literal that round-trips `v` exactly."""
+    return f"{float(v)!r}D"
+
+
+def grid_xy_sql(lon: str, lat: str, z: int) -> tuple[str, str]:
+    """Grid x/y at zoom z as bigint SQL (clamped to the valid range)."""
     n = 1 << z
-    gx = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n)))
-    gy = F.floor((F.lit(90.0) - lat) / F.lit(180.0) * F.lit(float(n)))
-    gx = F.greatest(F.lit(0), F.least(F.lit(n - 1), gx))
-    gy = F.greatest(F.lit(0), F.least(F.lit(n - 1), gy))
-    return gx.cast("long"), gy.cast("long")
-
-
-def cell_col(lon: Column, lat: Column, z: int) -> Column:
-    """Packed int64 cell id at zoom z. Pure Column math — codegen'd."""
-    gx, gy = grid_xy_col(lon, lat, z)
-    return pack_col(z, gx, gy).alias(f"cell_z{z}")
-
-
-def pack_col(z: int, gx: Column, gy: Column) -> Column:
-    """Packed int64 cell id from long grid x/y Columns (see `pack`)."""
+    gx = f"floor((({lon}) + 180.0D) / 360.0D * {dlit(n)})"
+    gy = f"floor((90.0D - ({lat})) / 180.0D * {dlit(n)})"
     return (
-        (F.lit(int(z)).cast("long") * F.lit(1 << _Z_SHIFT).cast("long"))
-        + gx * F.lit(1 << _GX_SHIFT).cast("long")
-        + gy
+        f"CAST(greatest(0, least({n - 1}, {gx})) AS BIGINT)",
+        f"CAST(greatest(0, least({n - 1}, {gy})) AS BIGINT)",
     )
 
 
-def cover_bbox_col(x0: Column, y0: Column, x1: Column, y1: Column, z: int) -> Column:
-    """array<long> of the cells covering a bbox at zoom z — the Column twin
+def pack_sql(z: int, gx: str, gy: str) -> str:
+    """Packed int64 cell id from bigint grid x/y SQL (see `pack`)."""
+    return f"({int(z) << _Z_SHIFT}L + ({gx}) * {1 << _GX_SHIFT}L + ({gy}))"
+
+
+def cell_sql(lon: str, lat: str, z: int) -> str:
+    """Packed int64 cell id at zoom z."""
+    return pack_sql(z, *grid_xy_sql(lon, lat, z))
+
+
+def cover_bbox_sql(x0: str, y0: str, x1: str, y1: str, z: int) -> str:
+    """array<bigint> of the cells covering a bbox at zoom z — the SQL twin
     of `cover_bbox` (same cells, same y-major order). The guard is on the
     clamped grid indices, not the coordinates: an inverted box whose edges
     clamp into one column still covers it, as in numpy, and Spark's
     `sequence` would otherwise count down."""
-    gx0, gy0 = grid_xy_col(x0, y1, z)
-    gx1, gy1 = grid_xy_col(x1, y0, z)
-    cover = F.flatten(
-        F.transform(
-            F.sequence(gy0, gy1),
-            lambda gy: F.transform(F.sequence(gx0, gx1), lambda gx: pack_col(z, gx, gy)),
-        )
+    gx0, gy0 = grid_xy_sql(x0, y1, z)
+    gx1, gy1 = grid_xy_sql(x1, y0, z)
+    cover = (
+        f"flatten(transform(sequence({gy0}, {gy1}), _gy -> "
+        f"transform(sequence({gx0}, {gx1}), _gx -> {pack_sql(z, '_gx', '_gy')})))"
     )
-    return F.when((gx0 <= gx1) & (gy0 <= gy1), cover).otherwise(F.array().cast("array<long>"))
+    return (
+        f"CASE WHEN ({gx0} <= {gx1}) AND ({gy0} <= {gy1}) THEN {cover} "
+        "ELSE CAST(array() AS ARRAY<BIGINT>) END"
+    )
 
 
-def cell_prefix_col(cell: Column, z: int, prefix_z: int) -> Column:
+def cell_gx_sql(cell: str) -> str:
+    return f"(shiftright({cell}, {_GX_SHIFT}) & {(1 << (_Z_SHIFT - _GX_SHIFT)) - 1})"
+
+
+def cell_gy_sql(cell: str) -> str:
+    return f"(({cell}) & {(1 << _GX_SHIFT) - 1})"
+
+
+def cell_prefix_sql(cell: str, z: int, prefix_z: int) -> str:
     """Parent cell at coarser zoom `prefix_z` from a packed cell at zoom
-    `z` — pure bit shifts (codegen'd). This is the "cell prefix" the north
-    rule partitions tables by: coarse spatial locality with a bounded
-    number of distinct values (4^prefix_z), suitable for Hive/Iceberg
-    partition layout (`snaptable.write_snapshot(partition_by=...)`)."""
+    `z` — pure bit shifts. This is the "cell prefix" the north rule
+    partitions tables by: coarse spatial locality with a bounded number of
+    distinct values (4^prefix_z), suitable for Hive/Iceberg partition
+    layout (`snaptable.write_snapshot(partition_by=...)`)."""
     if not 0 <= prefix_z <= z:
         raise ValueError(f"prefix_z must be in [0, {z}]")
     s = z - prefix_z
-    gx = F.shiftright(cell, _GX_SHIFT).bitwiseAND(
-        F.lit((1 << (_Z_SHIFT - _GX_SHIFT)) - 1)
+    return pack_sql(
+        prefix_z, f"shiftright({cell_gx_sql(cell)}, {s})", f"shiftright({cell_gy_sql(cell)}, {s})"
     )
-    gy = cell.bitwiseAND(F.lit((1 << _GX_SHIFT) - 1))
-    return (
-        (F.lit(int(prefix_z)).cast("long") * F.lit(1 << _Z_SHIFT).cast("long"))
-        + F.shiftright(gx, s) * F.lit(1 << _GX_SHIFT).cast("long")
-        + F.shiftright(gy, s)
-    ).alias(f"cell_z{prefix_z}")
+
+
+# ------------------------------------------------------------- Column wrappers
+def cell_col(lon: Column | str, lat: Column | str, z: int) -> Column:
+    """Packed int64 cell id at zoom z, named ``cell_z{z}``."""
+    return F.expr(f"{cell_sql(sql(lon), sql(lat), z)} AS cell_z{z}")
+
+
+def cover_bbox_col(
+    x0: Column | str, y0: Column | str, x1: Column | str, y1: Column | str, z: int
+) -> Column:
+    """`cover_bbox_sql` as a Column."""
+    return F.expr(cover_bbox_sql(sql(x0), sql(y0), sql(x1), sql(y1), z))
+
+
+def cell_prefix_col(cell: Column | str, z: int, prefix_z: int) -> Column:
+    """`cell_prefix_sql` as a Column named ``cell_z{prefix_z}``."""
+    return F.expr(f"{cell_prefix_sql(sql(cell), z, prefix_z)} AS cell_z{prefix_z}")
 
 
 def cell_prefix(cell, prefix_z: int):
-    """numpy twin of cell_prefix_col (oracles / driver-side checks)."""
+    """numpy twin of cell_prefix_sql (oracles / driver-side checks)."""
     z, gx, gy = unpack(cell)
     s = z - np.int64(prefix_z)
     if np.any(s < 0):
@@ -103,17 +150,9 @@ def cell_prefix(cell, prefix_z: int):
     return pack(prefix_z, np.asarray(gx, np.int64) >> s, np.asarray(gy, np.int64) >> s)
 
 
-def cell_gx_col(cell: Column) -> Column:
-    return F.shiftright(cell, _GX_SHIFT).bitwiseAND(F.lit((1 << (_Z_SHIFT - _GX_SHIFT)) - 1))
-
-
-def cell_gy_col(cell: Column) -> Column:
-    return cell.bitwiseAND(F.lit((1 << _GX_SHIFT) - 1))
-
-
 # ----------------------------------------------------------------- numpy API
 def grid_xy(lon, lat, z: int):
-    """Vectorized numpy grid x/y — same floor math as grid_xy_col."""
+    """Vectorized numpy grid x/y — same floor math as grid_xy_sql."""
     n = 1 << z
     lon = np.asarray(lon, dtype=np.float64)
     lat = np.asarray(lat, dtype=np.float64)

@@ -10,45 +10,46 @@ block grid ``local_match.py:508-542``) as the standard public XYZ scheme:
 and Bing-style quadkeys (one base-4 digit per zoom level, digit =
 2*bit(y) + bit(x)).
 
-Column flavor is pure JVM math (no UDF); numpy flavor backs the pytest
-oracles (FIXTURES.md §3).
+SQL flavor is pure JVM math (no UDF), one expression per key; numpy
+flavor backs the pytest oracles (FIXTURES.md §3).
 """
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+
+from gis_scripts_spark.index.cells import dlit, exprs
 
 WEBMERC_LAT_MAX = 85.05112878
 
 
-# ---------------------------------------------------------------- Column API
-def tile_xy_col(lon: Column, lat: Column, z: int) -> tuple[Column, Column]:
+# ------------------------------------------------------------------- SQL API
+# One SQL expression per key, as in `cells` (inputs are SQL text; double
+# literals carry the `D` suffix).
+def tile_xy_sql(lon: str, lat: str, z: int) -> tuple[str, str]:
+    """Tile x/y at zoom z as int SQL (latitude clamped to Web Mercator)."""
     n = 1 << z
-    lat_c = F.greatest(F.lit(-WEBMERC_LAT_MAX), F.least(F.lit(WEBMERC_LAT_MAX), lat))
-    lat_rad = F.radians(lat_c)
-    x = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n)))
-    y = F.floor(
-        (F.lit(1.0) - F.asinh(F.tan(lat_rad)) / F.lit(float(np.pi))) / F.lit(2.0) * F.lit(float(n))
+    lat_rad = f"radians(greatest({dlit(-WEBMERC_LAT_MAX)}, least({dlit(WEBMERC_LAT_MAX)}, {lat})))"
+    x = f"floor((({lon}) + 180.0D) / 360.0D * {dlit(n)})"
+    y = f"floor((1.0D - asinh(tan({lat_rad})) / {dlit(np.pi)}) / 2.0D * {dlit(n)})"
+    return (
+        f"CAST(greatest(0, least({n - 1}, {x})) AS INT)",
+        f"CAST(greatest(0, least({n - 1}, {y})) AS INT)",
     )
-    x = F.greatest(F.lit(0), F.least(F.lit(n - 1), x)).cast("int")
-    y = F.greatest(F.lit(0), F.least(F.lit(n - 1), y)).cast("int")
-    return x, y
 
 
-def quadkey_col(x: Column, y: Column, z: int) -> Column:
-    """Quadkey string from tile x/y at zoom z — built from z digit
-    expressions (constant-unrolled, still whole-stage codegen)."""
-    digits = []
-    for i in range(z - 1, -1, -1):
-        bx = F.shiftright(x.cast("long"), i).bitwiseAND(F.lit(1))
-        by = F.shiftright(y.cast("long"), i).bitwiseAND(F.lit(1))
-        digits.append((by * F.lit(2) + bx).cast("string"))
-    return F.concat(*digits) if digits else F.lit("")
+def quadkey_sql(x: str, y: str, z: int) -> str:
+    """Quadkey string from tile x/y at zoom z — z constant-unrolled digit
+    expressions (whole-stage codegen); '' at z = 0."""
+    digits = [
+        f"CAST((shiftright(CAST({y} AS BIGINT), {i}) & 1) * 2"
+        f" + (shiftright(CAST({x} AS BIGINT), {i}) & 1) AS STRING)"
+        for i in range(z - 1, -1, -1)
+    ]
+    return f"concat({', '.join(digits)})" if digits else "''"
 
 
-def tile_id_col(x: Column, y: Column, z: int) -> Column:
+def tile_id_sql(x: str, y: str, z: int) -> str:
     """Packed int64 tile id: (z << 58) | (x << 29) | y — bijective with
     (z, x, y) for z <= 29, so the quadkey STRING is derivable on demand.
     This is the production-scale identifier: at 10^12 rows a 12-char
@@ -56,23 +57,27 @@ def tile_id_col(x: Column, y: Column, z: int) -> Column:
     high thread counts), while the packed id is 8 flat bytes inside
     whole-stage codegen."""
     return (
-        F.lit(z).cast("long") * F.lit(1 << 58)
-        + x.cast("long") * F.lit(1 << 29)
-        + y.cast("long")
+        f"(CAST({z} AS BIGINT) * {1 << 58} + CAST({x} AS BIGINT) * {1 << 29}"
+        f" + CAST({y} AS BIGINT))"
+    )
+
+
+def tile_sql(lon: str, lat: str, z: int, prefix: str = "tile") -> tuple[dict, dict]:
+    """The tile columns as two projections of {name: SQL}: z/x/y, then the
+    id and quadkey, which read the x/y columns of the first."""
+    x, y = tile_xy_sql(lon, lat, z)
+    cx, cy = f"`{prefix}_x`", f"`{prefix}_y`"
+    return (
+        {f"{prefix}_z": str(z), f"{prefix}_x": x, f"{prefix}_y": y},
+        {f"{prefix}_id": tile_id_sql(cx, cy, z), "quadkey": quadkey_sql(cx, cy, z)},
     )
 
 
 def tile_cols(df, lon: str = "lon", lat: str = "lat", z: int = 12, prefix: str = "tile"):
     """Append tile_z/tile_x/tile_y/tile_id/quadkey columns. No shuffle.
     Catalyst prunes whichever id flavor downstream doesn't read."""
-    x, y = tile_xy_col(F.col(lon), F.col(lat), z)
-    return (
-        df.withColumn(f"{prefix}_z", F.lit(z))
-        .withColumn(f"{prefix}_x", x)
-        .withColumn(f"{prefix}_y", y)
-        .withColumn(f"{prefix}_id", tile_id_col(F.col(f"{prefix}_x"), F.col(f"{prefix}_y"), z))
-        .withColumn("quadkey", quadkey_col(F.col(f"{prefix}_x"), F.col(f"{prefix}_y"), z))
-    )
+    first, second = tile_sql(lon, lat, z, prefix)
+    return df.withColumns(exprs(first)).withColumns(exprs(second))
 
 
 # ----------------------------------------------------------------- numpy API
@@ -109,7 +114,7 @@ def quadkey_to_xyz(qk: str) -> tuple[int, int, int]:
 
 
 def tile_id(x, y, z: int) -> np.ndarray:
-    """numpy mirror of tile_id_col (pytest oracle)."""
+    """numpy mirror of tile_id_sql (pytest oracle)."""
     return (np.int64(z) << 58) + (np.asarray(x, np.int64) << 29) + np.asarray(y, np.int64)
 
 

@@ -92,7 +92,7 @@ def coverage_join(
     box = ("x_min", "y_min", "x_max", "y_max")
     rects = rects_df.select(
         F.col(rect_id).alias("_rid"), *[F.col(c).cast("double").alias(c) for c in box]
-    ).withColumn("cell", F.explode(cells_mod.cover_bbox_col(*map(F.col, box), z)))
+    ).withColumn("cell", F.explode(cells_mod.cover_bbox_col(*box, z)))
 
     cand = (
         fp.join(F.broadcast(rects), "cell")

@@ -143,19 +143,16 @@ def hamming_neardup_pairs(
     shift = 0
     for b in range(n_bands):
         width = base_w + (1 if b < extra else 0)
-        bands.append((b, shift, (1 << width) - 1))
+        # max_hamming=0 is one 64-bit band: its mask, all ones, is -1 as a bigint
+        bands.append((b, shift, (1 << width) - 1 if width < 64 else -1))
         shift += width
     base = persist(df.select(F.col(id_col).alias("_id"), F.col(hash_col).alias("_h")))
-    keys = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("b"),
-                F.shiftrightunsigned("_h", s).bitwiseAND(F.lit(m)).alias("bv"),
-            )
-            for b, s, m in bands
-        ]
+    # the band keys are ONE SQL expression: one call into the JVM, not
+    # four Column operations per band
+    keys = ", ".join(
+        f"struct({b} AS b, shiftrightunsigned(_h, {s}) & {m} AS bv)" for b, s, m in bands
     )
-    blocked = base.withColumn("_b", F.explode(keys)).select(
+    blocked = base.withColumn("_b", F.explode(F.expr(f"array({keys})"))).select(
         "_id", "_h", F.col("_b.b").alias("b"), F.col("_b.bv").alias("bv")
     )
     left = blocked.select(F.col("_id").alias("id_a"), F.col("_h").alias("_ha"), "b", "bv")
@@ -199,19 +196,18 @@ def multiword_bands(n_bits: int, max_hamming: int) -> list[tuple[int, int, int]]
     return bands
 
 
-def _mw_band_col(words: list, s: int, wd: int):
-    """Column expression for bits [s, s+wd) of the multiword hash. A band
-    of width <= 64 spans at most two adjacent words."""
+def _mw_band_sql(s: int, wd: int) -> str:
+    """SQL for bits [s, s+wd) of the multiword hash held in columns
+    `_w0`, `_w1`, ... A band of width <= 64 spans at most two adjacent
+    words."""
     i, r = divmod(s, 64)
     lowbits = 64 - r
     if wd <= lowbits:
-        v = F.shiftrightunsigned(words[i], r) if r else words[i]
-        if wd < lowbits:
-            v = v.bitwiseAND(F.lit((1 << wd) - 1))
-        return v
-    lo = F.shiftrightunsigned(words[i], r)  # all 64-r bits, zero-filled
-    hi = words[i + 1].bitwiseAND(F.lit((1 << (wd - lowbits)) - 1))
-    return lo.bitwiseOR(F.shiftleft(hi, lowbits))
+        v = f"shiftrightunsigned(_w{i}, {r})" if r else f"_w{i}"
+        return f"({v} & {(1 << wd) - 1})" if wd < lowbits else v
+    lo = f"shiftrightunsigned(_w{i}, {r})"  # all 64-r bits, zero-filled
+    hi = f"(_w{i + 1} & {(1 << (wd - lowbits)) - 1})"
+    return f"({lo} | shiftleft({hi}, {lowbits}))"
 
 
 def hamming_neardup_pairs_multiword(
@@ -239,7 +235,6 @@ def hamming_neardup_pairs_multiword(
     bands = multiword_bands(n_bits, max_hamming)
     wcols = [F.col(hash_col).getItem(i).alias(f"_w{i}") for i in range(n_words)]
     base = df.select(F.col(id_col).alias("_id"), *wcols)
-    words = [F.col(f"_w{i}") for i in range(n_words)]
     wnames = [f"_w{i}" for i in range(n_words)]
     # pack (band index, band value) into ONE int64 join key when the band
     # value provably fits 57 bits (band count <= 33 < 64 needs 6 bits):
@@ -249,26 +244,16 @@ def hamming_neardup_pairs_multiword(
     max_wd = max(wd for _, _, wd in bands)
     packed = max_wd <= 57
     if packed:
-        keys = F.array(
-            *[
-                F.shiftleft(_mw_band_col(words, s, wd), 6).bitwiseOR(F.lit(b))
-                for b, s, wd in bands
-            ]
-        )
-        blocked = base.withColumn("_bk", F.explode(keys)).select("_id", "_bk")
+        keys = ", ".join(f"(shiftleft({_mw_band_sql(s, wd)}, 6) | {b})" for b, s, wd in bands)
+        blocked = base.withColumn("_bk", F.explode(F.expr(f"array({keys})"))).select("_id", "_bk")
         if max_wd <= 25:
             # 6 band bits + <=25 value bits fit an INT: half the key bytes
             # in the exchange, narrower hash/compare in the join build
             blocked = blocked.withColumn("_bk", F.col("_bk").cast("int"))
         join_cols = ["_bk"]
     else:
-        keys = F.array(
-            *[
-                F.struct(F.lit(b).alias("b"), _mw_band_col(words, s, wd).alias("bv"))
-                for b, s, wd in bands
-            ]
-        )
-        blocked = base.withColumn("_b", F.explode(keys)).select(
+        keys = ", ".join(f"struct({b} AS b, {_mw_band_sql(s, wd)} AS bv)" for b, s, wd in bands)
+        blocked = base.withColumn("_b", F.explode(F.expr(f"array({keys})"))).select(
             "_id", F.col("_b.b").alias("b"), F.col("_b.bv").alias("bv")
         )
         join_cols = ["b", "bv"]
@@ -377,9 +362,9 @@ def ngram_jaccard_pairs(
       fixture has 27,865 distinct trigrams each shared by ~94 docs, so
       the inverted-index self-join emits 257M rows into a 120M-key
       hash aggregate (measured 26.8 s, ~700 ns/row of pure join+agg).
-      The FAST PATH collects the distinct (id, gram) rows, factorizes
-      them into integer postings (doc_idx, gram_idx) — ints only — on
-      the driver, broadcasts them, and counts pair intersections per
+      The FAST PATH numbers the distinct grams in the JVM, collects the
+      integer postings (doc id, gram number) — ints only — to the
+      driver, broadcasts them, and counts pair intersections per
       doc-block with a vectorized numpy kernel (range-concat +
       sort-unique), filtering to the threshold INSIDE the task so the
       10^8-row pair stream never touches a shuffle. Exactness is unchanged: same gram sets,
@@ -388,9 +373,10 @@ def ngram_jaccard_pairs(
       query keeps its full DuckDB oracle.
 
     Regime: the fast path needs integer ids, and one aggregate job bounds
-    its collect in bytes before the gram explode runs — each gram row is
+    its postings in bytes before the gram explode runs — each gram row is
     an 8-byte id plus a gram, and a document's grams hold each of its
-    bytes at most n times. Within ``repart.fits_broadcast`` the fast path
+    bytes at most n times. The driver receives two int64 per gram row,
+    never the gram text. Within ``repart.fits_broadcast`` the fast path
     runs; otherwise the join formulation, the scale path (unbounded
     corpora, non-integer ids)."""
     from gis_scripts_spark.operators.repart import fits_broadcast, spread
@@ -438,18 +424,26 @@ def ngram_jaccard_pairs(
 
 
 def _ngram_jaccard_fastpath(grams: DataFrame, id_type, threshold: float) -> DataFrame:
-    """Bounded-size exact all-pairs Jaccard: collect the (gate-bounded)
-    gram table once, factorize gram strings on the driver (any injective
-    assignment works — the code only names the gram), broadcast the
-    integer postings in both orderings, and count pair intersections with
-    a per-doc cache-resident kernel. See ngram_jaccard_pairs."""
+    """Bounded-size exact all-pairs Jaccard: number the distinct grams in
+    the JVM (any injective assignment works — the code only names the
+    gram), collect the (gate-bounded) integer postings once, broadcast
+    them in both orderings, and count pair intersections with a per-doc
+    cache-resident kernel. See ngram_jaccard_pairs."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     spark = grams.sparkSession
     sc = spark.sparkContext
-    pdf = grams.toPandas()
+    # one row per distinct gram, numbered BEFORE its doc list explodes:
+    # only the (gram number, doc id) pairs reach the driver, never the
+    # gram text
+    pdf = (
+        grams.groupBy("g").agg(F.collect_list("_id").alias("_ids"))
+        .select(F.monotonically_increasing_id().alias("_gi"), "_ids")
+        .select("_gi", F.explode("_ids").alias("_id"))
+        .toPandas()
+    )
     doc_ids, doc_idx = np.unique(pdf["_id"].to_numpy(np.int64), return_inverse=True)
-    gram_idx = pd.factorize(pdf["g"])[0]
+    gram_idx = np.unique(pdf["_gi"].to_numpy(np.int64), return_inverse=True)[1]
     n_docs = len(doc_ids)
     n_grams_d = int(gram_idx.max()) + 1 if len(gram_idx) else 0
     sizes = np.bincount(doc_idx, minlength=n_docs).astype(np.int64)

@@ -36,7 +36,7 @@ def grid_aggregate(
     Returns: cell, n_rows, sum_value, mean_value [, n_entities,
     mean_of_means].
     """
-    with_cell = df.withColumn("cell", cells_mod.cell_col(F.col(lon), F.col(lat), z))
+    with_cell = df.withColumn("cell", cells_mod.cell_col(lon, lat, z))
 
     if entity is None:
         out = with_cell.groupBy("cell").agg(

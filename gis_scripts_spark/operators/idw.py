@@ -55,7 +55,7 @@ def idw_grid(
         F.col(lon).cast("double").alias("_lon"),
         F.col(lat).cast("double").alias("_lat"),
         F.col(value).cast("double").alias("_val"),
-    ).withColumn("_cell", cells_mod.cell_col(F.col("_lon"), F.col("_lat"), cell_z))
+    ).withColumn("_cell", cells_mod.cell_col("_lon", "_lat", cell_z))
 
     probe_schema = StructType(
         [StructField("_tcell", LongType(), False), StructField("_lon", DoubleType(), False),

@@ -121,13 +121,13 @@ def knn_join(
         F.col(point_id).alias("_pid"),
         F.col(lon).cast("double").alias("_plon"),
         F.col(lat).cast("double").alias("_plat"),
-    ).withColumn("_pcell", cells_mod.cell_col(F.col("_plon"), F.col("_plat"), z))
+    ).withColumn("_pcell", cells_mod.cell_col("_plon", "_plat", z))
 
     qry = queries_df.select(
         F.col(query_id).alias("_qid"),
         F.col(lon).cast("double").alias("_qlon"),
         F.col(lat).cast("double").alias("_qlat"),
-    ).withColumn("_qcell", cells_mod.cell_col(F.col("_qlon"), F.col("_qlat"), z))
+    ).withColumn("_qcell", cells_mod.cell_col("_qlon", "_qlat", z))
 
     def span_x(cr: Column) -> Column:
         # anisotropic probe span: cells are cell_w wide × cell_h tall, so
@@ -211,8 +211,8 @@ def knn_join(
         # in x for haversine), so no probe falls outside it.
         cr = F.col("_cr")
         rx = span_x(cr)
-        gx = cells_mod.cell_gx_col(F.col("_qcell"))
-        gy = cells_mod.cell_gy_col(F.col("_qcell"))
+        gx = F.expr(cells_mod.cell_gx_sql("_qcell"))
+        gy = F.expr(cells_mod.cell_gy_sql("_qcell"))
         if wrap:
             x0 = gx - rx
             xs = F.sequence(x0, x0 + F.least(2 * rx, glong - 1))
@@ -226,7 +226,7 @@ def knn_join(
             .select(
                 "_qcell",
                 "_cr",
-                cells_mod.pack_col(z, F.pmod("_px", glong) if wrap else F.col("_px"), F.col("_py"))
+                F.expr(cells_mod.pack_sql(z, f"pmod(_px, {grid_n}L)" if wrap else "_px", "_py"))
                 .alias("_probe"),
             )
         )

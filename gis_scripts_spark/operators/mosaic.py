@@ -114,7 +114,7 @@ def mosaic_composite(
                 "w", "h", F.col(nodata_col).alias("_nd"), "_ord")
     )
 
-    def paint(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def paint(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         tx, ty = int(key[0]), int(key[1])
         ox, oy = tx * tile_px, ty * tile_px  # tile origin in global pixels
         pdf = pdf.sort_values(["_ord", "image_id"], kind="mergesort")

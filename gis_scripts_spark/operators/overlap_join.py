@@ -48,7 +48,7 @@ def bbox_overlap_join(
         F.col(x_max).alias("xi1"),
         F.col(y_max).alias("yi1"),
     ).withColumn("cell", F.explode(
-        cells_mod.cover_bbox_col(F.col("xi0"), F.col("yi0"), F.col("xi1"), F.col("yi1"), z)
+        cells_mod.cover_bbox_col("xi0", "yi0", "xi1", "yi1", z)
     ))
     b = boxes_df.select(
         F.col(id_col).alias("id_j"),
@@ -57,7 +57,7 @@ def bbox_overlap_join(
         F.col(x_max).alias("xj1"),
         F.col(y_max).alias("yj1"),
     ).withColumn("cell", F.explode(
-        cells_mod.cover_bbox_col(F.col("xj0"), F.col("yj0"), F.col("xj1"), F.col("yj1"), z)
+        cells_mod.cover_bbox_col("xj0", "yj0", "xj1", "yj1", z)
     ))
 
     pairs = a.join(b, "cell").filter(F.col("id_i") < F.col("id_j"))
@@ -74,7 +74,7 @@ def bbox_overlap_join(
     iy1 = F.least("yi1", "yj1")
     # report-once: keep the row only where the join cell == the cell of the
     # intersection's top-left (max-lat, min-lon) corner — no distinct needed
-    canon = cells_mod.cell_col(ix0, iy1, z)
+    canon = cells_mod.cell_col("greatest(xi0, xj0)", "least(yi1, yj1)", z)
     pairs = pairs.filter(F.col("cell") == canon)
     return pairs.select(
         "id_i",

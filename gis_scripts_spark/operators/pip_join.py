@@ -8,7 +8,7 @@ Replaces the reference's zonal containment (``Assess_Agreement.R:45-57``
      ``geom.core.cover_polygon``), each cell flagged `full` when entirely
      inside the polygon; a NULL WKB covers no cell. ``build_cover_df`` is
      the engine's one WKB->cover path (coverage_join covers footprints with
-     it). Points get the same cell key as pure Column math.
+     it). Points get the same cell key as one SQL expression.
      The join is then a cell equi-join — broadcast-hash when the layer's
      WKB bytes fit ``repart.fits_broadcast`` (AOI/admin layers),
      shuffle-hash otherwise.
@@ -270,7 +270,7 @@ def pip_join(
 
 
 def cell_expr(lon: str, lat: str, z: int):
-    return cells_mod.cell_col(F.col(lon), F.col(lat), z)
+    return cells_mod.cell_col(lon, lat, z)
 
 
 def measure_hot_cells(

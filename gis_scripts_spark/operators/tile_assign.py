@@ -4,9 +4,9 @@ The reference snaps rasters to target-aligned-pixel grids
 (``gdalwarp -tap``, ``create_dem_tiles_from_array.py:250-258``) and sizes
 block grids per image (``local_match.py:508-542``). Here every row gets
 deterministic global tile ids — equirect grid cell, XYZ tile, quadkey,
-S2 cell — as pure Column math / one vectorized UDF. No shuffle; tile ids
-are identical at any parallelism level (derived from coordinates only,
-never from partition index).
+S2 cell — as one SQL expression per key / one vectorized UDF. No
+shuffle; tile ids are identical at any parallelism level (derived from
+coordinates only, never from partition index).
 """
 
 from __future__ import annotations
@@ -51,11 +51,15 @@ def assign_tiles(
 ) -> DataFrame:
     """Append cell/tile id columns: `cell` (grid), `tile_x/tile_y/tile_z`
     + `quadkey` (XYZ Web Mercator), `s2_cell` / `hex_cell` (optional,
-    Arrow pandas UDFs — the north rule's "encoded to H3 (and S2) cells")."""
-    out = df.withColumn("cell", cells_mod.cell_col(F.col(lon), F.col(lat), grid_z))
-    out = tiles_mod.tile_cols(out, lon=lon, lat=lat, z=tile_z)
+    Arrow pandas UDFs — the north rule's "encoded to H3 (and S2) cells").
+
+    Two projections: the cell and tile x/y, then the tile id, quadkey and
+    UDF cells. Each key is one SQL expression (`cells`, `tiles`)."""
+    first, second = tiles_mod.tile_sql(lon, lat, tile_z)
+    out = df.withColumns(cells_mod.exprs({"cell": cells_mod.cell_sql(lon, lat, grid_z), **first}))
+    cols = cells_mod.exprs(second)
     if s2_level is not None:
-        out = out.withColumn("s2_cell", s2_cell_udf(s2_level)(F.col(lat), F.col(lon)))
+        cols["s2_cell"] = s2_cell_udf(s2_level)(lat, lon)
     if hex_res is not None:
-        out = out.withColumn("hex_cell", hex7_cell_udf(hex_res)(F.col(lon), F.col(lat)))
-    return out
+        cols["hex_cell"] = hex7_cell_udf(hex_res)(lon, lat)
+    return out.withColumns(cols)

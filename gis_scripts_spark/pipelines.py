@@ -63,7 +63,7 @@ def run_image_pipeline(
             assigned.select(
                 "image_id", "lon", "lat", "cell", "tile_z", "tile_x", "tile_y",
                 "quadkey", "s2_cell",
-                cells.cell_prefix_col(F.col("cell"), grid_z, 2).alias("cell_prefix"),
+                cells.cell_prefix_col("cell", grid_z, 2).alias("cell_prefix"),
             ),
             "tiles",
         )

@@ -172,13 +172,10 @@ def q_tile_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic tile assignment (engine: index/cells + quadkey)."""
     z = 8
     cust = derived_lonlat(_pq(spark, sf_dir, "customer"), "c_custkey")
-    gx, gy = cells_mod.grid_xy_col(F.col("lon"), F.col("lat"), z)
-    out = (
-        cust.withColumn("gx", gx)
-        .withColumn("gy", gy)
-        .withColumn("cell", cells_mod.cell_col(F.col("lon"), F.col("lat"), z))
-        .withColumn("quadkey", tiles_mod.quadkey_col(F.col("gx"), F.col("gy"), z))
-    )
+    gx, gy = cells_mod.grid_xy_sql("lon", "lat", z)
+    out = cust.withColumns(
+        cells_mod.exprs({"gx": gx, "gy": gy, "cell": cells_mod.cell_sql("lon", "lat", z)})
+    ).withColumn("quadkey", F.expr(tiles_mod.quadkey_sql("gx", "gy", z)))
     return out.select("c_custkey", "gx", "gy", "cell", "quadkey")
 
 
@@ -1246,7 +1243,7 @@ def q_mosaic_last_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
     wins (ts desc, event_id desc tie-break) — the deterministic last-wins
     merge the reference leaves implicit in gdal_merge."""
     ev = derived_lonlat(_pq(spark, sf_dir, "events"), "event_id")
-    ev = ev.withColumn("cell", cells_mod.cell_col(F.col("lon"), F.col("lat"), 6))
+    ev = ev.withColumn("cell", cells_mod.cell_col("lon", "lat", 6))
     w = Window.partitionBy("cell").orderBy(F.desc("ts"), F.desc("event_id"))
     return (
         ev.withColumn("rk", F.row_number().over(w))

@@ -71,7 +71,7 @@ def assemble_bands(band_rows: DataFrame, seq_col: str | None = None) -> DataFram
     duplicates are an error — there is no deterministic way to pick.
     One groupBy on image_id: the single shuffle this layout pays."""
 
-    def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def merge(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         if seq_col is not None:
             pdf = pdf.sort_values(["band", seq_col], kind="mergesort")
         else:

@@ -213,7 +213,7 @@ def overlap_pair_stats_joint(
 
     crop_df = joined.mapInPandas(crops, crop_schema)
 
-    def joint(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def joint(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         rows = []
         sides = {int(r["side"]): r for _, r in pdf.iterrows()}
         if 0 in sides and 1 in sides:
