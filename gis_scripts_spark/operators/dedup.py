@@ -14,9 +14,10 @@ Scale shapes:
   text/signature payload never rides the band explode or the self-join
   shuffle; texts re-joined exactly once per surviving candidate pair for
   the exact-Jaccard verify.
-- simhash / pHash: one 64-bit hash per row into hamming_neardup_pairs,
-  the banded self-join (max_hamming + 1 bands; pigeonhole: any pair within
-  the distance shares one band exactly).
+- simhash / pHash: one hash per row (64-bit, or 256-bit as four words)
+  into hamming_neardup_pairs, the one banded self-join (max_hamming + 1
+  bands; pigeonhole: any pair within the distance shares one band
+  exactly); the hash width decides where its refine runs.
 - n-gram Jaccard: broadcast integer postings and a numpy pair kernel when
   the gram collect's byte bound fits ``repart.fits_broadcast``; an
   inverted-index self-join otherwise.
@@ -112,69 +113,6 @@ def simhash_pairs(
     return hamming_neardup_pairs(hashes, "_sh", "_id", max_hamming)
 
 
-@scoped
-def hamming_neardup_pairs(
-    df: DataFrame,
-    hash_col: str,
-    id_col: str,
-    max_hamming: int = 6,
-) -> DataFrame:
-    """Banded hamming-distance self-join on any int64 hash column
-    (perceptual hashes, simhashes, fingerprints).
-
-    The 64 bits are split into (max_hamming + 1) bands; two hashes within
-    `max_hamming` must agree exactly on at least one band (pigeonhole), so
-    the band equi-join is a COMPLETE candidate generator. Scale shape is
-    the engine's standard: ids+hash-only band join (no payload columns in
-    the Exchange), groupBy report-once (map-side combinable, no window
-    sort), then one whole-stage-codegen bit_count refine.
-
-    The (id, hash) projection is persisted: both join sides read it, so
-    the caller's upstream (an image decode, a SimHash UDF) runs once per
-    row. It lives as long as the returned frame (cachescope).
-
-    Returns (id_a, id_b, hamming) with id_a < id_b.
-    """
-    if not 0 <= max_hamming <= 16:
-        raise ValueError("max_hamming must be in [0, 16]")
-    n_bands = max_hamming + 1
-    base_w, extra = divmod(64, n_bands)
-    bands = []
-    shift = 0
-    for b in range(n_bands):
-        width = base_w + (1 if b < extra else 0)
-        # max_hamming=0 is one 64-bit band: its mask, all ones, is -1 as a bigint
-        bands.append((b, shift, (1 << width) - 1 if width < 64 else -1))
-        shift += width
-    base = persist(df.select(F.col(id_col).alias("_id"), F.col(hash_col).alias("_h")))
-    # the band keys are ONE SQL expression: one call into the JVM, not
-    # four Column operations per band
-    keys = ", ".join(
-        f"struct({b} AS b, shiftrightunsigned(_h, {s}) & {m} AS bv)" for b, s, m in bands
-    )
-    blocked = base.withColumn("_b", F.explode(F.expr(f"array({keys})"))).select(
-        "_id", "_h", F.col("_b.b").alias("b"), F.col("_b.bv").alias("bv")
-    )
-    left = blocked.select(F.col("_id").alias("id_a"), F.col("_h").alias("_ha"), "b", "bv")
-    right = blocked.select(F.col("_id").alias("id_b"), F.col("_h").alias("_hb"), "b", "bv")
-    # the bit_count refine runs INSIDE the join stage, BEFORE the
-    # report-once shuffle: on uniform hashes the band join's candidate
-    # volume is dominated by random collisions (occupancy n/2^width per
-    # bucket => O(sum occupancy^2) pairs, almost all hamming > max_h), so
-    # filtering map-side cuts the groupBy exchange from the full candidate
-    # set to the true near-dup pairs — measured 2.6x end-to-end at 20M
-    # hashes (BENCH/scaling_cluster.json `hamming`). hamming is a function
-    # of the pair, so the filter commutes with the dedup exactly.
-    hamming = F.bit_count(F.col("_ha").bitwiseXOR(F.col("_hb")))
-    pairs = (
-        left.join(right, ["b", "bv"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
-    )
-    return pairs.groupBy("id_a", "id_b").agg(F.min("hamming").alias("hamming"))
-
-
 def multiword_bands(n_bits: int, max_hamming: int) -> list[tuple[int, int, int]]:
     """(band, start_bit, width) layout for an n_bits hash split into
     (max_hamming + 1) contiguous bands — shared by the Spark operator and
@@ -210,91 +148,102 @@ def _mw_band_sql(s: int, wd: int) -> str:
     return f"({lo} | shiftleft({hi}, {lowbits}))"
 
 
-def hamming_neardup_pairs_multiword(
+@scoped
+def hamming_neardup_pairs(
     df: DataFrame,
     hash_col: str,
     id_col: str,
-    max_hamming: int = 10,
-    n_words: int = 4,
+    max_hamming: int = 6,
+    n_words: int = 1,
 ) -> DataFrame:
-    """Banded hamming self-join on a MULTI-WORD hash column
-    (``array<bigint>`` of length n_words = 64*n_words bits) — the
-    documented scale path for image near-dup at 10^12 rows: a 64-bit
-    pHash at useful thresholds (max_h ~ 10) gives ~6-bit bands and an
-    occupancy explosion, while 256 bits at the same threshold keeps
-    23-bit bands (occupancy n / 2^23). Same engine shape as the 64-bit
-    version: ids+words-only band join, map-side bit_count refine INSIDE
-    the join stage, groupBy report-once. Bands may span word boundaries;
-    extraction is two shifts + an OR, all whole-stage codegen.
+    """Banded hamming-distance self-join on a hash of 64 * n_words bits: a
+    bigint column at n_words=1 (pHash, SimHash, fingerprints), an
+    ``array<bigint>`` of n_words words otherwise (phash256).
+
+    The bits are split into (max_hamming + 1) contiguous bands
+    (`multiword_bands`; bands may span word boundaries); two hashes within
+    `max_hamming` must agree exactly on at least one band (pigeonhole), so
+    the band equi-join is a COMPLETE candidate generator. Each band value
+    is packed with its band index into ONE int (bands <= 25 bits) or long
+    (<= 57 bits) join key; wider bands (about one band per word, as at
+    max_hamming=0 on one word) join on (band, value).
+
+    The (id, words) projection is persisted: both join sides and the word
+    re-attach read it, so the caller's upstream (an image decode, a SimHash
+    UDF) runs once per row. It lives as long as the returned frame
+    (cachescope). The band join is pinned to a SHUFFLED hash join: each side
+    is bands x n rows by construction, and Spark's size estimate through
+    Generate can undershoot far enough to broadcast one (measured: a
+    1.1M-row driver-built HashedRelation).
+
+    Where the bit_count refine runs follows from the hash width:
+
+    - one word: the hash rides the band Exchange and the refine filters
+      INSIDE the join stage, before the report-once groupBy. Narrow bands
+      (~6 bits at max_hamming 10) make random collisions the dominant
+      candidate volume, so filtering map-side cuts the groupBy exchange to
+      the true near-dup pairs — measured 2.6x end to end at 20M hashes
+      (BENCH/scaling_cluster.json `hamming`).
+    - more words: only (id, key) cross the band Exchange; the candidates
+      are de-duplicated, then the words are re-attached from the persisted
+      input and the refine runs once per pair. Wide (23-bit at 256 bits)
+      bands make the candidates a sliver of the banded table, and carrying
+      4 words per exploded row put a 464 MB exchange in front of a
+      few-hundred-thousand-row candidate set; ids and key only are ~3x
+      fewer Exchange bytes.
+
+    hamming is a function of the pair, so refining before or after the
+    de-duplication gives the same rows. A NULL hash, or a NULL word, yields
+    no pair.
 
     Returns (id_a, id_b, hamming) with id_a < id_b.
     """
-    if not 0 <= max_hamming <= 32:
-        raise ValueError("max_hamming must be in [0, 32]")
-    n_bits = 64 * n_words
-    bands = multiword_bands(n_bits, max_hamming)
-    wcols = [F.col(hash_col).getItem(i).alias(f"_w{i}") for i in range(n_words)]
-    base = df.select(F.col(id_col).alias("_id"), *wcols)
+    limit = min(16 * n_words, 32)
+    if not 0 <= max_hamming <= limit:
+        raise ValueError(f"max_hamming must be in [0, {limit}]")
+    bands = multiword_bands(64 * n_words, max_hamming)
+    h = F.col(hash_col)
+    words = [h] if n_words == 1 else [h.getItem(i) for i in range(n_words)]
     wnames = [f"_w{i}" for i in range(n_words)]
-    # pack (band index, band value) into ONE int64 join key when the band
-    # value provably fits 57 bits (band count <= 33 < 64 needs 6 bits):
-    # halves the join-key bytes in the exchange and makes hashing/probing a
-    # single-long compare. Falls back to the two-column key for >=58-bit
-    # bands (only reachable at n_words > 8).
+    base = persist(
+        df.select(F.col(id_col).alias("_id"), *[w.alias(n) for w, n in zip(words, wnames)])
+    )
+    carried = wnames if n_words == 1 else []
+    # the band keys are ONE SQL expression: one call into the JVM. The
+    # band index takes the low 6 bits (at most 33 bands)
     max_wd = max(wd for _, _, wd in bands)
-    packed = max_wd <= 57
-    if packed:
+    if max_wd <= 57:
         keys = ", ".join(f"(shiftleft({_mw_band_sql(s, wd)}, 6) | {b})" for b, s, wd in bands)
-        blocked = base.withColumn("_bk", F.explode(F.expr(f"array({keys})"))).select("_id", "_bk")
-        if max_wd <= 25:
-            # 6 band bits + <=25 value bits fit an INT: half the key bytes
-            # in the exchange, narrower hash/compare in the join build
-            blocked = blocked.withColumn("_bk", F.col("_bk").cast("int"))
+        keys = f"CAST(array({keys}) AS array<int>)" if max_wd <= 25 else f"array({keys})"
+        blocked = base.select("_id", *carried, F.explode(F.expr(keys)).alias("_bk"))
         join_cols = ["_bk"]
     else:
         keys = ", ".join(f"struct({b} AS b, {_mw_band_sql(s, wd)} AS bv)" for b, s, wd in bands)
-        blocked = base.withColumn("_b", F.explode(F.expr(f"array({keys})"))).select(
-            "_id", F.col("_b.b").alias("b"), F.col("_b.bv").alias("bv")
-        )
+        blocked = base.select("_id", *carried, F.explode(F.expr(f"array({keys})")).alias("_b"))
+        blocked = blocked.select("_id", *carried, "_b.b", "_b.bv")
         join_cols = ["b", "bv"]
-    # ids-only band join + post-join word re-attach. The 64-bit pHash path
-    # measured the OPPOSITE (map-side refine inside the join, r5): there
-    # ~6-bit bands make random collisions the dominant volume, so carrying
-    # the word through the exchange beat re-joining per candidate. Wide
-    # (23-bit) bands invert the tradeoff — occupancy is n/2^23, candidates
-    # are a sliver of the banded table — and carrying 4 words per exploded
-    # row put a 464 MB exchange + 929 MB read in front of a few-hundred-
-    # thousand-row candidate set (measured: 8.7 s wall, ~100 s executor in
-    # the join stage alone). Shuffling (id, packed key) only is ~3x fewer
-    # bytes; the distinct collapses per-band duplicates BEFORE the words
-    # are fetched, so each surviving pair pays the 4-word xor exactly once.
-    left = blocked.select(F.col("_id").alias("id_a"), *join_cols)
-    right = blocked.select(F.col("_id").alias("id_b"), *join_cols)
-    # scale safety: each join side is bands x n rows BY CONSTRUCTION, so a
-    # broadcast is never right (Spark's size estimate through Generate can
-    # undershoot badly enough to pick one — measured at bench scale: a
-    # 1.1M-row driver-built HashedRelation). Pin a SHUFFLED hash join; both
-    # sides are the same exploded table, so AQE writes the exchange once
-    # and ReusedExchange serves the other side; per-partition builds are
-    # bounded by the band-occupancy invariant.
-    cand = (
-        left.join(right.hint("shuffle_hash"), join_cols)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
+
+    def side(frame: DataFrame, t: str) -> DataFrame:
+        return frame.withColumnsRenamed(
+            {"_id": f"id_{t}", **{w: f"_{t}{i}" for i, w in enumerate(wnames)}}
+        )
+
+    pairs = side(blocked, "a").join(side(blocked, "b").hint("shuffle_hash"), join_cols).filter(
+        F.col("id_a") < F.col("id_b")
     )
-    wa = base.select(
-        F.col("_id").alias("id_a"), *[F.col(w).alias(f"_a{i}") for i, w in enumerate(wnames)]
-    )
-    wb = base.select(
-        F.col("_id").alias("id_b"), *[F.col(w).alias(f"_b{i}") for i, w in enumerate(wnames)]
-    )
-    hamming = sum(
-        F.bit_count(F.col(f"_a{i}").bitwiseXOR(F.col(f"_b{i}"))) for i in range(n_words)
-    )
+    hamming = F.expr(" + ".join(f"bit_count(_a{i} ^ _b{i})" for i in range(n_words)))
+    if n_words == 1:
+        return (
+            pairs.withColumn("hamming", hamming)
+            .filter(F.col("hamming") <= max_hamming)
+            .groupBy("id_a", "id_b")
+            .agg(F.min("hamming").alias("hamming"))
+        )
     return (
-        cand.join(wa, "id_a")
-        .join(wb, "id_b")
+        pairs.select("id_a", "id_b")
+        .distinct()
+        .join(side(base, "a"), "id_a")
+        .join(side(base, "b"), "id_b")
         .withColumn("hamming", hamming)
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
@@ -304,7 +253,7 @@ def hamming_neardup_pairs_multiword(
 def multiword_band_sql(table: str, id_col: str, word_cols: list[str],
                        max_hamming: int) -> str:
     """DuckDB SQL emitting the SAME banded candidate join + refine as
-    hamming_neardup_pairs_multiword over `table` (one row per hash,
+    hamming_neardup_pairs over `table` (one row per hash,
     words nonnegative) — the oracle half of the shared band layout.
     Returns a SELECT producing (id_a, id_b, hamming)."""
     n_words = len(word_cols)

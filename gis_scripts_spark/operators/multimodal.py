@@ -313,13 +313,13 @@ def image_features(df: DataFrame) -> DataFrame:
 
 
 def phash_neardup_pairs(df: DataFrame, max_hamming: int = 10) -> DataFrame:
-    """Image near-duplicate pairs by perceptual hash: decode the `bytes`
-    column, pHash each image (one Arrow mapInPandas pass, image_features),
-    then the banded hamming self-join from operators/dedup.py, which
-    persists the (id, hash) rows so each image is decoded once — the
-    pigeonhole blocking means only (hash, id) scalars enter the candidate
-    Exchange, never the image bytes. The image twin of the text simhash
-    dedup stage; catches re-encoded / brightness-shifted re-posts.
+    """Image near-duplicate pairs by 64-bit perceptual hash: decode the
+    `bytes` column, pHash each image (one Arrow mapInPandas pass,
+    image_features), then dedup.hamming_neardup_pairs, which persists the
+    (id, hash) rows so each image is decoded once; only (id, key, hash)
+    scalars enter the band Exchange, never the image bytes. The image twin
+    of the text simhash dedup stage; catches re-encoded /
+    brightness-shifted re-posts.
 
     Returns (id_a, id_b, hamming), id_a < id_b.
     """
@@ -359,12 +359,13 @@ def phash256_neardup_pairs(df: DataFrame, max_hamming: int = 10) -> DataFrame:
     phash_neardup_pairs: at max_hamming=10 a 64-bit hash gives ~6-bit
     bands (occupancy n/2^6 — unusable at web scale) while 256 bits keeps
     23-bit bands at the SAME threshold. Decode + DCT in one Arrow pass,
-    then the multiword banded join (bands may span word boundaries; only
-    ids + 4 hash words cross the Exchange, never the bytes)."""
+    then the same dedup.hamming_neardup_pairs at n_words=4, which persists
+    the (id, words) rows so each image is decoded once; only ids and band
+    keys cross the band Exchange, never the bytes."""
     from gis_scripts_spark.operators import dedup
 
     hashes = image_phash256(df)
-    return dedup.hamming_neardup_pairs_multiword(
+    return dedup.hamming_neardup_pairs(
         hashes, hash_col="phash256", id_col="image_id",
         max_hamming=max_hamming, n_words=4,
     )

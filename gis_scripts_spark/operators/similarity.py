@@ -293,42 +293,6 @@ lsh_sig AS (
   FROM lsh_proj GROUP BY 1, 2)"""
 
 
-def lsh_candidates(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec: str = "embedding",
-    dim: int = 64,
-    n_planes: int = 12,
-    n_tables: int = 4,
-) -> DataFrame:
-    """Candidate-pair generation for `lsh_topk` — IDS ONLY end to end
-    (r4 verdict directive #2, mirroring the minhash band-join shape,
-    dedup.py minhash_lsh_pairs_sql):
-
-    - one scan computes all n_tables bucket keys per row (single Arrow
-      UDF returning array<long>), then posexplode to (_pid, _table,
-      _bucket) — the embedding array is dropped BEFORE any Exchange;
-    - same-bucket self-join on (_bucket, _table) ships 3 small columns;
-    - report-once across tables via groupBy(_qid,_pid).agg(min(_table))
-      — map-side-combinable HashAggregate, no window sort.
-
-    Returns (_qid, _pid) distinct candidate pairs (both directions kept:
-    top-k is per-query, so (a,b) and (b,a) are both needed).
-    """
-    sigs = lsh_multi_signature_udf(dim, n_planes, n_tables)
-    keyed = (
-        df.select(F.col(id_col).alias("_pid"), sigs(F.col(vec)).alias("_sigs"))
-        .select("_pid", F.posexplode("_sigs").alias("_table", "_bucket"))
-    )
-    left = keyed.select(F.col("_pid").alias("_qid"), "_table", "_bucket")
-    cand = left.join(keyed, ["_bucket", "_table"]).filter(F.col("_qid") != F.col("_pid"))
-    return (
-        cand.groupBy("_qid", "_pid")
-        .agg(F.min("_table").alias("_t"))
-        .drop("_t")
-    )
-
-
 def lsh_topk(
     df: DataFrame,
     k: int = 3,
@@ -346,8 +310,8 @@ def lsh_topk(
     measurement): the re-rank runs as ONE float64 BLAS kernel per
     (table, bucket) group — the `_chunked_list_topk` shape `ann_ivf`
     uses per inverted list, applied per LSH bucket. The r4/r5 ids-only
-    candidate-join formulation (`lsh_candidates` + two vector re-joins +
-    a zip_with/aggregate dot per pair) shipped each embedding once per
+    candidate-join formulation (an ids-only bucket self-join + two vector
+    re-joins + a zip_with/aggregate dot per pair) shipped each embedding once per
     CANDIDATE PAIR side (2 x pairs vectors ~ 2 x occupancy x n_tables
     copies per vector) and evaluated the dot interpreted per element —
     measured 58.8 s at 20k x 64 / 6 tables (41.8 s of it the 2-task

@@ -1806,7 +1806,7 @@ def q_hamming256_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = ev.selectExpr("event_id", *_h256_word_exprs("spark")).select(
         "event_id", F.array("w0", "w1", "w2", "w3").alias("h256")
     )
-    out = dedup.hamming_neardup_pairs_multiword(
+    out = dedup.hamming_neardup_pairs(
         df, hash_col="h256", id_col="event_id",
         max_hamming=_H256_MAX_H, n_words=4,
     )

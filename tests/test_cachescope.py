@@ -16,7 +16,7 @@ from gis_scripts_spark.operators import coverage_join, dedup, knn
 
 SF = "/root/testdata/sf0.001"
 CACHING_QUERIES = ["knn_k5", "minhash_lsh_pairs", "simhash_pairs", "coverage_join",
-                   "phash_neardup_pairs"]
+                   "phash_neardup_pairs", "hamming256_neardup"]
 
 
 def _cache_empty(spark) -> bool:
@@ -55,6 +55,9 @@ def _operator_calls(spark):
         "hamming_neardup_pairs": lambda: dedup.hamming_neardup_pairs(
             docs.select("doc_id", F.xxhash64("text").alias("h")), "h", "doc_id").select(
             "id_a", "id_b"),
+        "hamming_neardup_pairs_4w": lambda: dedup.hamming_neardup_pairs(
+            docs.select("doc_id", F.array(*[F.xxhash64("text", F.lit(i)) for i in range(4)]).alias(
+                "h")), "h", "doc_id", max_hamming=10, n_words=4).select("id_a", "id_b"),
         "coverage_join": lambda: coverage_join.coverage_join(
             fp, rects).select("image_id", "aoi_id"),
     }
@@ -81,7 +84,7 @@ def test_query_caches_released_with_frame(spark, name):
 
 @pytest.mark.parametrize(
     "name", ["knn_join", "minhash_lsh_pairs_sql", "simhash_pairs", "hamming_neardup_pairs",
-             "coverage_join"])
+             "hamming_neardup_pairs_4w", "coverage_join"])
 def test_operator_under_bare_select(spark, name):
     """Outside any scope the operator's own scope releases its caches when
     its result is dropped, so a bare projection leaks nothing; inside a
@@ -171,9 +174,11 @@ def test_minhash_sql_null_text_yields_no_pair(spark):
     assert len(want) > 0
 
 
-def test_hamming_join_reads_its_input_once(spark):
-    """Both sides of the band self-join read one persisted (id, hash)
-    projection, so the caller's upstream runs once per row."""
+@pytest.mark.parametrize("n_words", [1, 4])
+def test_hamming_join_reads_its_input_once(spark, n_words):
+    """Both sides of the band self-join, and the word re-attach, read one
+    persisted (id, words) projection, so the caller's upstream runs once
+    per row at any hash width."""
     acc = spark.sparkContext.accumulator(0)
 
     def count_rows(batches):
@@ -183,10 +188,13 @@ def test_hamming_join_reads_its_input_once(spark):
 
     n = 300
     rng = np.random.default_rng(7)
-    h = rng.integers(-(2**63), 2**63 - 1, n, dtype=np.int64)
-    h[1::10] = h[::10] ^ 0b101  # planted pairs at distance 2
-    df = spark.createDataFrame(pd.DataFrame({"id": np.arange(n), "h": h})).mapInPandas(
-        count_rows, "id long, h long")
-    pairs = dedup.hamming_neardup_pairs(df, "h", "id", max_hamming=4).collect()
+    h = rng.integers(-(2**63), 2**63 - 1, (n, n_words), dtype=np.int64)
+    h[1::10] = h[::10] ^ 0b101  # planted pairs at distance 2 per word
+    one = n_words == 1
+    df = spark.createDataFrame(
+        pd.DataFrame({"id": np.arange(n), "h": h[:, 0] if one else list(h)})
+    ).mapInPandas(count_rows, "id long, h long" if one else "id long, h array<long>")
+    pairs = dedup.hamming_neardup_pairs(df, "h", "id", max_hamming=4 * n_words,
+                                        n_words=n_words).collect()
     assert acc.value == n
     assert {(r["id_a"], r["id_b"]) for r in pairs} >= {(i, i + 1) for i in range(0, n, 10)}

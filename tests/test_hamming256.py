@@ -62,7 +62,7 @@ def test_multiword_vs_numpy_allpairs(spark):
             for p in rng.choice(256, size=rng.integers(1, max_h + 1), replace=False):
                 words[i + 1][p // 64] ^= np.int64(1) << np.int64(p % 64)
     df = _pairs_df(spark, [(i, words[i]) for i in range(n)])
-    got = dedup.hamming_neardup_pairs_multiword(
+    got = dedup.hamming_neardup_pairs(
         df, "h", "hid", max_hamming=max_h, n_words=4
     ).toPandas()
     want = set()
@@ -88,7 +88,7 @@ def test_multiword_word_boundary_bits(spark):
     df = _pairs_df(spark, rows)
     # max_hamming=4 -> 5 bands of 52/51 bits: every word boundary falls
     # INSIDE a band, so the two-shift spanning extraction is on the path
-    out = dedup.hamming_neardup_pairs_multiword(
+    out = dedup.hamming_neardup_pairs(
         df, "h", "hid", max_hamming=4, n_words=4
     ).toPandas()
     found = {(a, b): h for a, b, h in out[["id_a", "id_b", "hamming"]].itertuples(index=False)}
@@ -106,14 +106,16 @@ def test_multiword_pigeonhole_worst_case(spark):
     for _, s, _wd in bands[:max_h]:
         w1[s // 64] ^= np.int64(1) << np.int64(s % 64)
     df = _pairs_df(spark, [(0, base), (1, w1)])
-    out = dedup.hamming_neardup_pairs_multiword(df, "h", "hid", max_hamming=max_h)
+    out = dedup.hamming_neardup_pairs(df, "h", "hid", max_hamming=max_h, n_words=4)
     got = out.toPandas()
     assert len(got) == 1 and int(got["hamming"][0]) == max_h
     w2 = w1.copy()
     s_last = bands[max_h][1]
     w2[s_last // 64] ^= np.int64(1) << np.int64(s_last % 64)
     df2 = _pairs_df(spark, [(0, base), (1, w2)])
-    got2 = dedup.hamming_neardup_pairs_multiword(df2, "h", "hid", max_hamming=max_h).toPandas()
+    got2 = dedup.hamming_neardup_pairs(
+        df2, "h", "hid", max_hamming=max_h, n_words=4
+    ).toPandas()
     assert len(got2) == 0
 
 
@@ -132,7 +134,7 @@ def test_multiword_band_sql_matches_spark(spark):
                     words[i + 1][p // 64] ^= np.int64(1) << np.int64(p % 64)
     df = _pairs_df(spark, [(i, words[i]) for i in range(n)])
     got = (
-        dedup.hamming_neardup_pairs_multiword(df, "h", "hid", max_hamming=max_h)
+        dedup.hamming_neardup_pairs(df, "h", "hid", max_hamming=max_h, n_words=4)
         .toPandas().sort_values(["id_a", "id_b"]).reset_index(drop=True)
     )
     con = duckdb.connect()
@@ -208,3 +210,46 @@ def test_phash256_pairs_bytes_never_in_exchange(spark):
     assert blocks, "expected at least one Exchange in the candidate join plan"
     for block in blocks:
         assert "bytes" not in block, block
+
+
+def _hash_rows(spark, rows, n_words):
+    return spark.createDataFrame(
+        rows, "hid long, h long" if n_words == 1 else "hid long, h array<long>"
+    )
+
+
+@pytest.mark.parametrize("n_words,max_h", [(1, 0), (1, 1), (1, 6), (4, 3), (4, 10)])
+def test_hamming_null_hash_yields_no_pair(spark, n_words, max_h):
+    """A NULL hash, a NULL array and an array with one NULL word join no
+    band and yield no pair, on the packed int, packed long and (band,
+    value) key paths alike; the other rows still pair."""
+    w = [-5, 1 << 40, 7, -(1 << 62)][:n_words]
+    same = w[0] if n_words == 1 else w
+    rows = [(0, same), (1, same), (2, None), (3, None)]
+    if n_words > 1:
+        holed = [w[0], None, *w[2:]]
+        rows += [(4, holed), (5, holed)]
+    got = dedup.hamming_neardup_pairs(
+        _hash_rows(spark, rows, n_words), "h", "hid", max_hamming=max_h, n_words=n_words
+    ).collect()
+    assert sorted(map(tuple, got)) == [(0, 1, 0)]
+
+
+@pytest.mark.parametrize("n_words", [1, 4])
+def test_hamming_duplicate_heavy_equals_all_pairs(spark, n_words):
+    """Every row the same hash puts all rows under one key per band: the
+    pinned shuffled-hash build still returns the numpy all-pairs set,
+    n(n-1)/2 pairs at hamming 0."""
+    n = 200
+    words = np.tile(_np_words(np.random.default_rng(11), 1), (n, 1))[:, :n_words]
+    rows = [(i, int(words[i][0]) if n_words == 1 else list(map(int, words[i])))
+            for i in range(n)]
+    out = dedup.hamming_neardup_pairs(
+        _hash_rows(spark, rows, n_words), "h", "hid", max_hamming=10, n_words=n_words
+    )
+    got = set(map(tuple, out.collect()))
+    want = {(a, b, _np_hamming(words[a], words[b]))
+            for a in range(n) for b in range(a + 1, n)
+            if _np_hamming(words[a], words[b]) <= 10}
+    assert got == want and len(want) == n * (n - 1) // 2
+    assert "ShuffledHashJoin" in out._jdf.queryExecution().executedPlan().toString()

@@ -192,28 +192,3 @@ def test_cluster_labels_plan_bounded(spark):
     assert n_lines < 200, f"plan not bounded: {n_lines} lines"
     assert n_exchanges <= 2, f"plan not bounded: {n_exchanges} Exchanges"
     assert "Scan ExistingRDD" in plan or "LogicalRDD" in plan, plan[:500]
-
-
-def test_lsh_candidate_stage_embeddings_never_in_exchange(spark):
-    """r4 verdict directive #2 gate (mirror of the coverage_join WKB gate):
-    the lsh_topk CANDIDATE stage must be ids-only — the embedding array
-    must not appear in the Input of ANY Exchange (shuffle or broadcast).
-    The vectors are re-joined once afterwards for the exact re-rank."""
-    import pandas as pd
-
-    from gis_scripts_spark.operators import similarity
-
-    rng = __import__("numpy").random.default_rng(3)
-    pdf = pd.DataFrame({
-        "vec_id": range(50),
-        "embedding": [rng.standard_normal(16).tolist() for _ in range(50)],
-    })
-    df = spark.createDataFrame(pdf)
-    cand = similarity.lsh_candidates(df, dim=16, n_planes=6, n_tables=3)
-    plan = _plan(cand)
-    # formatted mode: each "(N) Exchange" block lists its schema on the
-    # following "Input [k]: [...]" line — gate on that, not just the
-    # partitioning-keys summary line
-    for block in re.findall(r"\(\d+\) (?:Broadcast)?Exchange[^\n]*\nInput[^\n]*", plan):
-        assert "embedding" not in block and "_pv" not in block and "_qv" not in block, block
-    assert cand.count() >= 0  # plan executes

@@ -34,6 +34,7 @@ QUERIES = [
     "exif_gps_zonal",     # EXIF byte path: splice/IFD/rational roundtrip
     "phash_neardup_pairs",  # bytes pipeline: DCT pHash bit-for-bit
     "streaming_windowed_zonal",  # micro-batched stream: event-time result is parallelism-invariant
+    "simhash_pairs",      # one-word band join: refine inside the join stage
 ]
 
 
