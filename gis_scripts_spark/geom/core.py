@@ -3,7 +3,6 @@
 All vectorized numpy, designed to run inside pandas UDFs (many points × one
 polygon per call). Semantics mirror the reference's OGR/shapely usage:
 - polygon ∩ polygon area ratio (``seagrass_lib.py:185-192``)
-- bbox overlap predicate (``global_match.py:67-72``)
 - extent containment/clamping (``seagrass_lib.py:109-120``)
 """
 
@@ -18,20 +17,6 @@ from gis_scripts_spark.index import cells as cells_mod
 def bbox_of_rings(rings: list[np.ndarray]) -> tuple[float, float, float, float]:
     ext = rings[0]
     return float(ext[:, 0].min()), float(ext[:, 1].min()), float(ext[:, 0].max()), float(ext[:, 1].max())
-
-
-def bbox_intersects(a, b) -> bool:
-    """Open-interval bbox overlap — exactly the reference predicate
-    ``global_match.py:67-72`` (touching edges do NOT overlap)."""
-    return a[0] < b[2] and a[2] > b[0] and a[1] < b[3] and a[3] > b[1]
-
-
-def bbox_intersection(a, b):
-    x0, y0 = max(a[0], b[0]), max(a[1], b[1])
-    x1, y1 = min(a[2], b[2]), min(a[3], b[3])
-    if x1 <= x0 or y1 <= y0:
-        return None
-    return (x0, y0, x1, y1)
 
 
 # ------------------------------------------------------------------ P-I-P

@@ -271,11 +271,6 @@ _inv AS (SELECT {carry},
   FROM _i9)"""
 
 
-def utm_zone(lon: float) -> int:
-    """Standard zone number for a longitude."""
-    return int(np.clip(np.floor((lon + 180.0) / 6.0) + 1, 1, 60))
-
-
 # ------------------------------------------------------ polar stereographic
 def polar_stereo_forward(lon, lat, south: bool = True, lat_ts: float = -71.0,
                          lon0: float = 0.0):
@@ -367,22 +362,6 @@ def inverse(crs: str, x, y):
     if crs == "webmerc":
         return webmerc_inverse(x, y)
     raise ValueError(f"unknown crs {crs}")
-
-
-def forward_udf(crs: str):
-    """Column wrapper: (lon, lat) -> struct(x, y) via Arrow batches."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    schema = StructType([StructField("x", DoubleType()), StructField("y", DoubleType())])
-
-    @F.pandas_udf(schema)
-    def fwd(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
-        x, y = forward(crs, lon.to_numpy(np.float64), lat.to_numpy(np.float64))
-        return pd.DataFrame({"x": x, "y": y})
-
-    return fwd
 
 
 # ----------------------------------------------------- RPC georeferencing

@@ -180,11 +180,6 @@ def token(cell: int) -> str:
     return s or "X"
 
 
-def face_of(cell) -> np.ndarray:
-    cell = np.asarray(cell, np.int64)
-    return (cell.view(np.uint64) >> np.uint64(61)).astype(np.int64)
-
-
 # ---------------------------------------------------------------- decoding
 def _to_face_ij_orientation(cell: int) -> tuple[int, int, int, int]:
     """Inverse Hilbert traversal (public s2 algorithm): cell id -> (face,

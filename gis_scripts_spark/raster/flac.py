@@ -23,6 +23,9 @@ PCM, independent channels, FIXED order-2 prediction with per-partition
 best rice parameter, fixed 4096-sample blocks. Lossless by construction —
 roundtrips must be BIT-EXACT, which is what the pytest gates assert.
 
+Bits are read through `bitio.BitReader` (the MSB reader JPEG's entropy
+decoder shares); the writer below is FLAC's own.
+
 Spark shape: one FLAC clip is one binary cell; decode runs inside the
 same Arrow mapInPandas stages as WAV (operators/multimodal.audio_decode
 dispatches on the 'fLaC' magic).
@@ -33,6 +36,8 @@ from __future__ import annotations
 import struct
 
 import numpy as np
+
+from .bitio import BitReader
 
 _SYNC = 0b11111111111110
 
@@ -52,62 +57,6 @@ def is_flac(buf: bytes) -> bool:
 
 
 # ---------------------------------------------------------------- bit I/O
-class _BitReader:
-    """MSB-first bit reader over a bytes buffer."""
-
-    __slots__ = ("buf", "pos")
-
-    def __init__(self, buf: bytes, byte_pos: int = 0):
-        self.buf = buf
-        self.pos = byte_pos * 8  # bit position
-
-    def read(self, n: int) -> int:
-        if n == 0:
-            return 0
-        p, buf = self.pos, self.buf
-        end = p + n
-        if end > len(buf) * 8:
-            raise ValueError("flac: bitstream truncated")
-        # gather the covering bytes into one int, then slice
-        b0, b1 = p >> 3, (end + 7) >> 3
-        acc = int.from_bytes(buf[b0:b1], "big")
-        acc >>= (b1 * 8) - end
-        self.pos = end
-        return acc & ((1 << n) - 1)
-
-    def read_signed(self, n: int) -> int:
-        v = self.read(n)
-        return v - (1 << n) if v & (1 << (n - 1)) else v
-
-    def read_unary(self) -> int:
-        """Count 0 bits until the terminating 1 (rice quotient)."""
-        buf = self.buf
-        p = self.pos
-        total_bits = len(buf) * 8
-        q = 0
-        while True:
-            if p >= total_bits:
-                raise ValueError("flac: bitstream truncated in unary run")
-            byte = buf[p >> 3]
-            rem = 8 - (p & 7)
-            chunk = byte & ((1 << rem) - 1)
-            if chunk == 0:
-                q += rem
-                p += rem
-                continue
-            lead = rem - chunk.bit_length()
-            q += lead
-            p += lead + 1
-            self.pos = p
-            return q
-
-    def align(self):
-        self.pos = (self.pos + 7) & ~7
-
-    def byte_pos(self) -> int:
-        return self.pos >> 3
-
-
 class _BitWriter:
     __slots__ = ("out", "acc", "nbits")
 
@@ -173,7 +122,7 @@ def _crc16(data: bytes) -> int:
 
 
 # ----------------------------------------------------------- coded number
-def _read_coded_number(br: _BitReader) -> int:
+def _read_coded_number(br: BitReader) -> int:
     """The UTF-8-style variable-length frame/sample number."""
     b0 = br.read(8)
     if b0 < 0x80:
@@ -224,7 +173,7 @@ def _parse_streaminfo(buf: bytes) -> tuple[dict, int]:
         if btype == 0:
             if length != 34:
                 raise ValueError("flac: bad STREAMINFO length")
-            br = _BitReader(bytes(body))
+            br = BitReader(bytes(body), what="flac: bitstream")
             info = {
                 "min_block": br.read(16), "max_block": br.read(16),
                 "min_frame": br.read(24), "max_frame": br.read(24),
@@ -241,7 +190,7 @@ def _parse_streaminfo(buf: bytes) -> tuple[dict, int]:
     return info, off
 
 
-def _decode_residual(br: _BitReader, block_size: int, order: int) -> list[int]:
+def _decode_residual(br: BitReader, block_size: int, order: int) -> list[int]:
     method = br.read(2)
     if method > 1:
         raise ValueError(f"flac: reserved residual method {method}")
@@ -267,7 +216,7 @@ def _decode_residual(br: _BitReader, block_size: int, order: int) -> list[int]:
     return out
 
 
-def _decode_subframe(br: _BitReader, block_size: int, bps: int) -> np.ndarray:
+def _decode_subframe(br: BitReader, block_size: int, bps: int) -> np.ndarray:
     if br.read(1):
         raise ValueError("flac: subframe padding bit set")
     stype = br.read(6)
@@ -323,7 +272,7 @@ def flac_decode(buf: bytes) -> tuple[np.ndarray, int, int]:
     chans: list[np.ndarray] = [np.zeros(0, np.int64) for _ in range(info["channels"])]
     pos = off
     while pos + 2 <= len(buf):
-        br = _BitReader(buf, pos)
+        br = BitReader(buf, pos, what="flac: bitstream")
         if br.read(14) != _SYNC:
             raise ValueError("flac: lost frame sync")
         if br.read(1):

@@ -17,6 +17,8 @@ Supported (the subset the reference's data actually uses):
   LZW / PackBits, predictor 1/2/3, classic or BigTIFF layout
 - GeoTIFF geo-referencing: ModelPixelScale (33550) + ModelTiepoint (33922)
   and the GDAL nodata ASCII tag (42113) survive a roundtrip
+- LZW decode is `bitio.lzw_decode` (shared with GIF) at MSB-first packing
+  and TIFF's early change; the encoder is this module's own
 
 Format reference: TIFF 6.0 specification (Adobe, public) + OGC GeoTIFF 1.1.
 """
@@ -27,6 +29,8 @@ import struct
 import zlib
 
 import numpy as np
+
+from . import bitio
 
 _TYPE_SIZES = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8, 6: 1, 7: 1, 8: 2, 9: 4, 10: 8,
                11: 4, 12: 8, 16: 8, 17: 8, 18: 8}  # 16/17/18: BigTIFF LONG8/SLONG8/IFD8
@@ -136,59 +140,19 @@ def tiff_levels(buf: bytes) -> list[tuple[int, int]]:
 # --------------------------------------------------------------- LZW (§13)
 # TIFF-variant LZW: MSB-first bit packing, ClearCode=256, EOI=257, first
 # dynamic entry 258, 12-bit max codes, and the TIFF "early change" rule —
-# the code width bumps when the NEXT code to be added would be
-# (1 << width) - 1 (one code earlier than the GIF convention; what
-# libtiff/GDAL emit).
+# the encoder bumps the code width when its next code to be added would
+# be (1 << width) - 1 (one code earlier than the GIF convention; what
+# libtiff/GDAL emit). The decoder's table lags the encoder's by one entry
+# (it learns each entry only from the following code), so it bumps when
+# its table reaches (1 << width) - 2 entries: two sooner than GIF's
+# 1 << width, the `early=2` of the shared decoder.
 _LZW_CLEAR, _LZW_EOI = 256, 257
 
 
 def lzw_decode(data: bytes) -> bytes:
-    """TIFF LZW decompressor (TIFF 6.0 §13, early-change variant)."""
-    out = bytearray()
-    nbits = 9
-    total_bits = len(data) * 8
-    bitpos = 0
-    table: list[bytes] = []
-    prev: bytes | None = None
-
-    def reset_table():
-        return [bytes([i]) for i in range(256)] + [b"", b""]
-
-    table = reset_table()
-    while bitpos + nbits <= total_bits:
-        byte_idx = bitpos >> 3
-        chunk = int.from_bytes(data[byte_idx : byte_idx + 4].ljust(4, b"\0"), "big")
-        code = (chunk >> (32 - (bitpos & 7) - nbits)) & ((1 << nbits) - 1)
-        bitpos += nbits
-        if code == _LZW_CLEAR:
-            table = reset_table()
-            nbits = 9
-            prev = None
-            continue
-        if code == _LZW_EOI:
-            break
-        if prev is None:
-            if code >= len(table):
-                raise ValueError("corrupt LZW stream (first code out of table)")
-            entry = table[code]
-        elif code < len(table):
-            entry = table[code]
-            table.append(prev + entry[:1])
-        elif code == len(table):  # the KwKwK case
-            entry = prev + prev[:1]
-            table.append(entry)
-        else:
-            raise ValueError("corrupt LZW stream (code beyond table)")
-        out += entry
-        prev = entry
-        # early change, decoder side: the decoder's table lags the
-        # encoder's by exactly one entry (the encoder adds its entry
-        # before emitting the next code; the decoder only learns it from
-        # that code), so the decoder widens one entry EARLIER than the
-        # encoder's next_code == (1<<nbits)-1 rule.
-        if len(table) == (1 << nbits) - 2 and nbits < 12:
-            nbits += 1
-    return bytes(out)
+    """TIFF LZW decompressor (TIFF 6.0 §13, early-change variant). A
+    stream that ends without EOI yields what it decoded."""
+    return bytes(bitio.lzw_decode(data, 8, msb=True, early=2)[0])
 
 
 def lzw_encode(data: bytes) -> bytes:
@@ -207,9 +171,29 @@ def lzw_encode(data: bytes) -> bytes:
             acc_bits -= 8
         acc &= (1 << acc_bits) - 1
 
-    d: dict[bytes, int] = {bytes([i]): i for i in range(256)}
+    def roots() -> dict[bytes, int]:
+        return {bytes([i]): i for i in range(256)}
+
+    d = roots()
     next_code = 258
     nbits = 9
+
+    def put_data(code: int):
+        """Emit a data code and count the table entry it defines (the
+        final code's entry too, as libtiff's LZWPostEncode does: the
+        decoder adds it before it reads EOI, so EOI goes at the width
+        that entry implies)."""
+        nonlocal d, next_code, nbits
+        put(code, nbits)
+        next_code += 1
+        if next_code == (1 << nbits) - 1 and nbits < 12:
+            nbits += 1
+        elif next_code == 4095:  # table full: clear and restart
+            put(_LZW_CLEAR, nbits)
+            d = roots()
+            next_code = 258
+            nbits = 9
+
     put(_LZW_CLEAR, nbits)
     omega = b""
     for b in data:
@@ -217,19 +201,12 @@ def lzw_encode(data: bytes) -> bytes:
         if k in d:
             omega = k
             continue
-        put(d[omega], nbits)
+        code = d[omega]
         d[k] = next_code
-        next_code += 1
-        if next_code == (1 << nbits) - 1 and nbits < 12:
-            nbits += 1
-        elif next_code == 4095:  # table full: clear and restart
-            put(_LZW_CLEAR, nbits)
-            d = {bytes([i]): i for i in range(256)}
-            next_code = 258
-            nbits = 9
+        put_data(code)
         omega = bytes([b])
     if omega:
-        put(d[omega], nbits)
+        put_data(d[omega])
     put(_LZW_EOI, nbits)
     if acc_bits:
         out.append((acc << (8 - acc_bits)) & 0xFF)

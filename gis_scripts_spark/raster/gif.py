@@ -20,14 +20,17 @@ exceed the current code length, the code length is increased by one"):
 the largest code that can appear on the wire at any point is the
 decoder's next unassigned table value (the KwKwK case emits exactly it),
 so BOTH sides bump the width when next_code reaches 1 << width, and the
-width is capped at 12 with table adds stopping at 4096. Encoder and
-decoder here are exact mirrors of that rule; the 1x1-transparent-GIF
-vector in tests/test_gif.py pins the bitstream layout against a
-hand-derived public example.
+width is capped at 12 with table adds stopping at 4096. The encoder
+mirrors that rule; the decoder is `bitio.lzw_decode` (the table of byte
+strings TIFF's LZW also decodes with) at LSB-first packing and a bump
+offset of 0. The 1x1-transparent-GIF vector in tests/test_gif.py pins
+the bitstream layout against a hand-derived public example.
 
-Like jpeg.py, the entropy loop is the only per-symbol Python; palette
-mapping, interlace reorder and compositing are numpy. At Spark scale the
-codec runs inside mapInPandas batches, one image per call.
+`_parse` walks the blocks without decoding; each frame's LZW payload is
+decoded when it is composited, so `gif_decode` decodes only the first
+frame. The LZW loop is per code, not per pixel; palette mapping,
+interlace reorder and compositing are numpy. At Spark scale the codec
+runs inside mapInPandas batches, one image per call.
 """
 
 from __future__ import annotations
@@ -36,112 +39,26 @@ import struct
 
 import numpy as np
 
+from .bitio import lzw_decode
+
 _MAX_CODES = 4096
 
 
 # ------------------------------------------------------------------ LZW
 def _lzw_decompress(data: bytes, mcs: int, npix: int) -> np.ndarray:
     """GIF-LZW decode of the reassembled sub-block payload into exactly
-    npix palette indices. mcs = "LZW minimum code size" byte."""
+    npix palette indices. mcs = "LZW minimum code size" byte. Decoding
+    stops at npix, so a missing EOI is tolerated."""
     if not (2 <= mcs <= 11):
         raise ValueError(f"bad LZW minimum code size {mcs}")
-    clear = 1 << mcs
-    eoi = clear + 1
-    # chain arrays: entry i = string(prefix[i]) + chr(suffix[i])
-    prefix = np.full(_MAX_CODES, -1, dtype=np.int32)
-    suffix = np.zeros(_MAX_CODES, dtype=np.uint8)
-    length = np.zeros(_MAX_CODES, dtype=np.int32)
-    first = np.zeros(_MAX_CODES, dtype=np.uint8)  # first char of the chain
-    for c in range(clear):
-        suffix[c] = first[c] = c
-        length[c] = 1
-    out = np.empty(npix, dtype=np.uint8)
-    pos = 0
-
-    next_code = eoi + 1
-    width = mcs + 1
-    prev = -1
-    bitbuf = 0
-    nbits = 0
-    i = 0
-    n = len(data)
-    while True:
-        # widen BEFORE the read: the next code can be as large as
-        # next_code itself (KwKwK), which must fit in `width` bits
-        while next_code >= (1 << width) and width < 12:
-            width += 1
-        while nbits < width:
-            if i >= n:
-                raise ValueError("truncated LZW stream")
-            bitbuf |= data[i] << nbits
-            i += 1
-            nbits += 8
-        code = bitbuf & ((1 << width) - 1)
-        bitbuf >>= width
-        nbits -= width
-
-        if code == clear:
-            next_code = eoi + 1
-            width = mcs + 1
-            prev = -1
-            continue
-        if code == eoi:
-            break
-        if prev < 0:
-            if code >= clear:
-                raise ValueError("first LZW code is not a root")
-            if pos >= npix:
-                raise ValueError("LZW output exceeds frame size")
-            out[pos] = code
-            pos += 1
-            prev = code
-            continue
-        if code < next_code:
-            entry = code
-        elif code == next_code and next_code < _MAX_CODES:
-            entry = -1  # KwKwK: string(prev) + first(prev)
-        else:
-            raise ValueError(f"corrupt LZW code {code} (next={next_code})")
-
-        if entry >= 0:
-            ln = int(length[entry])
-            end = pos + ln
-            if end > npix:
-                raise ValueError("LZW output exceeds frame size")
-            c = entry
-            j = end - 1
-            while c >= 0:
-                out[j] = suffix[c]
-                c = prefix[c]
-                j -= 1
-            fch = first[entry]
-        else:
-            ln = int(length[prev]) + 1
-            end = pos + ln
-            if end > npix:
-                raise ValueError("LZW output exceeds frame size")
-            fch = first[prev]
-            out[end - 1] = fch
-            c = prev
-            j = end - 2
-            while c >= 0:
-                out[j] = suffix[c]
-                c = prefix[c]
-                j -= 1
-        if next_code < _MAX_CODES:
-            prefix[next_code] = prev
-            suffix[next_code] = fch
-            first[next_code] = first[prev]
-            length[next_code] = length[prev] + 1
-            next_code += 1
-        pos = end
-        prev = code
-        if pos == npix:
-            # consume a trailing EOI if present; tolerate its absence
-            return out
-    if pos != npix:
-        raise ValueError(f"LZW stream ended at {pos}/{npix} pixels")
-    return out
+    out, eoi = lzw_decode(data, mcs, msb=False, early=0, limit=npix)
+    if len(out) > npix:
+        raise ValueError("LZW output exceeds frame size")
+    if len(out) < npix:
+        if eoi:
+            raise ValueError(f"LZW stream ended at {len(out)}/{npix} pixels")
+        raise ValueError("truncated LZW stream")
+    return np.frombuffer(out, dtype=np.uint8)
 
 
 def _lzw_compress(indices: np.ndarray, mcs: int, defer_clear: bool = False) -> bytes:
@@ -225,8 +142,10 @@ def _interlace_order(h: int) -> np.ndarray:
 
 # ------------------------------------------------------------------ parse
 def _parse(buf: bytes):
-    """-> (w, h, gct | None, bg_index, frames) where each frame is a dict
-    {left, top, w, h, palette, indices, transparent, disposal}."""
+    """Block walk, no LZW decode -> (w, h, gct | None, bg_index, frames)
+    where each frame is a dict {left, top, w, h, palette, mcs, data,
+    interlaced, transparent, disposal}; `data` is the reassembled LZW
+    payload (`_frame_indices` decodes it)."""
     if buf[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF")
     w, h = struct.unpack_from("<HH", buf, 6)
@@ -281,13 +200,9 @@ def _parse(buf: bytes):
             payload += buf[off + 1 : off + 1 + ln]
             off += 1 + ln
         off += 1
-        idx = _lzw_decompress(bytes(payload), mcs, fw * fh).reshape(fh, fw)
-        if fpk & 0x40:  # interlaced: stored rows are passes 1-4
-            dest = np.empty_like(idx)
-            dest[_interlace_order(fh)] = idx
-            idx = dest
         frames.append(
-            dict(left=fl, top=ft, w=fw, h=fh, palette=pal, indices=idx,
+            dict(left=fl, top=ft, w=fw, h=fh, palette=pal, mcs=mcs,
+                 data=bytes(payload), interlaced=bool(fpk & 0x40),
                  transparent=transparent, disposal=disposal)
         )
         transparent = -1
@@ -324,12 +239,20 @@ def gif_frame_count(buf: bytes) -> int:
     return n
 
 
-# ------------------------------------------------------------------ API
-def gif_decode_frames(buf: bytes) -> list[np.ndarray]:
-    """All frames as full-canvas (h, w, 3) uint8 RGB, composited per the
-    GIF89a disposal model (none/keep=0,1; restore-background=2;
-    restore-previous=3); transparent pixels show what was underneath."""
-    w, h, gct, bg, frames = _parse(buf)
+def _frame_indices(fr: dict) -> np.ndarray:
+    """(h, w) palette indices of one parsed frame, in display row order."""
+    idx = _lzw_decompress(fr["data"], fr["mcs"], fr["w"] * fr["h"])
+    idx = idx.reshape(fr["h"], fr["w"])
+    if fr["interlaced"]:  # stored rows are passes 1-4
+        dest = np.empty_like(idx)
+        dest[_interlace_order(fr["h"])] = idx
+        idx = dest
+    return idx
+
+
+def _composite(w: int, h: int, gct, bg: int, frames: list):
+    """Yield each frame as a full-canvas (h, w, 3) uint8 RGB copy,
+    decoding one frame's LZW payload per step."""
     if not frames:
         raise ValueError("GIF has no image data")
     if gct is not None:
@@ -337,39 +260,45 @@ def gif_decode_frames(buf: bytes) -> list[np.ndarray]:
     else:
         canvas = np.zeros((h, w, 3), dtype=np.uint8)
     bg_fill = canvas[0, 0].copy()
-    out = []
     for fr in frames:
         rect = (slice(fr["top"], fr["top"] + fr["h"]),
                 slice(fr["left"], fr["left"] + fr["w"]))
         saved = canvas[rect].copy() if fr["disposal"] == 3 else None
-        rgb = fr["palette"][fr["indices"]]
+        idx = _frame_indices(fr)
+        rgb = fr["palette"][idx]
         if fr["transparent"] >= 0:
-            opaque = fr["indices"] != fr["transparent"]
+            opaque = idx != fr["transparent"]
             region = canvas[rect]
             region[opaque] = rgb[opaque]
         else:
             canvas[rect] = rgb
-        out.append(canvas.copy())
+        yield canvas.copy()
         if fr["disposal"] == 2:
             canvas[rect] = bg_fill
         elif fr["disposal"] == 3:
             canvas[rect] = saved
-    return out
+
+
+# ------------------------------------------------------------------ API
+def gif_decode_frames(buf: bytes) -> list[np.ndarray]:
+    """All frames as full-canvas (h, w, 3) uint8 RGB, composited per the
+    GIF89a disposal model (none/keep=0,1; restore-background=2;
+    restore-previous=3); transparent pixels show what was underneath."""
+    return list(_composite(*_parse(buf)))
+
+
+def _is_gray(pal: np.ndarray) -> bool:
+    return bool(np.all(pal[:, 0] == pal[:, 1]) and np.all(pal[:, 1] == pal[:, 2]))
 
 
 def gif_decode(buf: bytes) -> np.ndarray:
     """First frame on the full canvas. (h, w, 1) when every palette color
     is gray (the encoder's representation of single-band images — keeps
-    encode->decode roundtrips band-exact), else (h, w, 3) RGB."""
-    frame = gif_decode_frames(bytes(buf))[0]
-    _, _, gct, _, frames = _parse(bytes(buf))
-    pals = [f["palette"] for f in frames[:1]]
-    gray = all(
-        bool(np.all(p[:, 0] == p[:, 1]) and np.all(p[:, 1] == p[:, 2]))
-        for p in pals
-    )
-    if gray and (gct is None or np.all(gct[:, 0] == gct[:, 1])
-                 and np.all(gct[:, 1] == gct[:, 2])):
+    encode->decode roundtrips band-exact), else (h, w, 3) RGB. Only the
+    first frame's LZW payload is decoded."""
+    w, h, gct, bg, frames = _parse(bytes(buf))
+    frame = next(_composite(w, h, gct, bg, frames))
+    if _is_gray(frames[0]["palette"]) and (gct is None or _is_gray(gct)):
         return frame[:, :, :1].copy()
     return frame
 
@@ -385,8 +314,7 @@ def gif_probe_shape(buf: bytes) -> tuple[int, int, int]:
     bands = 3
     if packed & 0x80:
         ncols = 2 << (packed & 0x07)
-        gct = np.frombuffer(buf, np.uint8, ncols * 3, 13).reshape(ncols, 3)
-        if np.all(gct[:, 0] == gct[:, 1]) and np.all(gct[:, 1] == gct[:, 2]):
+        if _is_gray(np.frombuffer(buf, np.uint8, ncols * 3, 13).reshape(ncols, 3)):
             bands = 1
     return int(h), int(w), bands
 

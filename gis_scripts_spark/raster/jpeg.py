@@ -24,17 +24,23 @@ Implements ITU-T T.81 (public spec) huffman DCT coding:
   orthonormal M, so forward/inverse are two 8x8 matmuls, vectorized over
   all blocks with einsum (no per-pixel Python in the transform)
 
-The entropy-coded segment is the only per-symbol Python loop (Huffman is
-inherently sequential); everything before/after is numpy-vectorized. At
-Spark scale the codec runs inside mapInPandas/applyInPandas batches, one
-image per call — the per-image cost is what bench/test gates measure.
+The entropy-coded segment is decoded per symbol (Huffman is inherently
+sequential) through `bitio.BitReader`, the MSB reader FLAC also uses:
+each symbol is one 16-bit `peek` into the table's 65,536-entry lookahead
+list, and each coefficient's extra bits one `read`. Everything before and
+after is numpy-vectorized. At Spark scale the codec runs inside
+mapInPandas/applyInPandas batches, one image per call — the per-image
+cost is what bench/test gates measure.
 """
 
 from __future__ import annotations
 
+import re
 import struct
 
 import numpy as np
+
+from .bitio import BitReader
 
 # --------------------------------------------------------------- constants
 # Annex K Table K.1 / K.2 quantization tables (public spec)
@@ -149,20 +155,27 @@ def quality_scale(base: np.ndarray, quality: int) -> np.ndarray:
 
 
 class _HuffTable:
-    """Canonical Huffman table from a (BITS, HUFFVAL) spec (T.81 C.2)."""
+    """Canonical Huffman table from a (BITS, HUFFVAL) spec (T.81 C.2).
+
+    `look` is the decoder's 16-bit lookahead: entry v is
+    (length << 8) | symbol for the code that prefixes the 16-bit value v,
+    or 0 when no code does."""
 
     def __init__(self, bits: list[int], vals: list[int]):
         self.bits = list(bits)
         self.vals = list(vals)
         self.enc: dict[int, tuple[int, int]] = {}  # symbol -> (length, code)
-        self.dec: dict[tuple[int, int], int] = {}  # (length, code) -> symbol
+        self.look = [0] * 65536
         code = 0
         k = 0
         for length in range(1, 17):
+            span = 1 << (16 - length)
             for _ in range(bits[length - 1]):
                 sym = vals[k]
                 self.enc[sym] = (length, code)
-                self.dec[(length, code)] = sym
+                if code < 1 << length:  # an overfull BITS list overflows
+                    lo = code * span
+                    self.look[lo : lo + span] = [(length << 8) | sym] * span
                 code += 1
                 k += 1
             code <<= 1
@@ -194,35 +207,22 @@ class _BitWriter:
             self.put((1 << (8 - self.nbits)) - 1, 8 - self.nbits)
 
 
-class _BitReader:
-    """MSB-first bit reader over an UNSTUFFED entropy segment."""
-
-    def __init__(self, data: bytes):
-        self.bits = np.unpackbits(np.frombuffer(data, np.uint8))
-        self.pos = 0
-
-    def read_bits(self, n: int) -> int:
-        if n == 0:
-            return 0
-        if self.pos + n > len(self.bits):
+def _read_symbol(rdr: BitReader, table: _HuffTable) -> int:
+    """One Huffman symbol: a 16-bit peek, one lookahead entry."""
+    e = table.look[rdr.peek(16)]
+    n = e >> 8
+    left = rdr.end - rdr.pos
+    if n == 0 or n > left:
+        if n or left < 16:
             raise ValueError("JPEG entropy segment truncated")
-        v = 0
-        for b in self.bits[self.pos : self.pos + n]:
-            v = (v << 1) | int(b)
-        self.pos += n
-        return v
-
-    def read_symbol(self, table: _HuffTable) -> int:
-        code = 0
-        for length in range(1, 17):
-            if self.pos >= len(self.bits):
-                raise ValueError("JPEG entropy segment truncated")
-            code = (code << 1) | int(self.bits[self.pos])
-            self.pos += 1
-            sym = table.dec.get((length, code))
-            if sym is not None:
-                return sym
         raise ValueError("invalid JPEG Huffman code")
+    rdr.pos += n
+    return e & 0xFF
+
+
+def _scan_reader(seg: bytes) -> BitReader:
+    """Reader over one entropy-coded segment with its 0xFF00 stuffing removed."""
+    return BitReader(seg.replace(b"\xff\x00", b"\xff"), what="JPEG entropy segment")
 
 
 def _category(v: int) -> int:
@@ -893,16 +893,13 @@ def parse_tables(buf: bytes, tabs: JpegTables | None = None) -> JpegTables:
 def _find_scan_end(buf: bytes, start: int) -> int:
     """End offset of the entropy-coded segment starting at `start` (first
     marker that is not a stuffed 0x00 or RSTn)."""
-    i = start
     n = len(buf)
-    while i < n - 1:
-        if buf[i] == 0xFF:
-            nxt = buf[i + 1]
-            if nxt == 0x00 or 0xD0 <= nxt <= 0xD7:
-                i += 2
-                continue
+    i = buf.find(b"\xff", start, n - 1)
+    while i >= 0:
+        nxt = buf[i + 1]
+        if nxt != 0x00 and not 0xD0 <= nxt <= 0xD7:
             return i
-        i += 1
+        i = buf.find(b"\xff", i + 2, n - 1)
     return n
 
 
@@ -1022,23 +1019,10 @@ def _decode_scan(data: bytes, frame, scan_sel, tabs: JpegTables,
     if len(scan_sel) != len(comps):
         raise NotImplementedError("non-interleaved sequential JPEG scans not supported")
 
-    # split on restart markers; each segment resets DC predictions
-    segments = []
-    start = 0
-    j = 0
-    while j < len(data) - 1:
-        if data[j] == 0xFF and 0xD0 <= data[j + 1] <= 0xD7:
-            segments.append(data[start:j])
-            start = j + 2
-            j += 2
-        else:
-            j += 1
-    segments.append(data[start:])
-
     ri = tabs.restart_interval
     mcu = 0
-    for seg in segments:
-        rdr = _BitReader(seg.replace(b"\xff\x00", b"\xff"))
+    for seg in _split_restart_segments(data):  # each resets DC predictions
+        rdr = _scan_reader(seg)
         preds = {cs: 0 for cs, _t, _a in scan_sel}
         seg_mcus = min(ri, n_mcu - mcu) if ri else n_mcu - mcu
         for _ in range(seg_mcus):
@@ -1052,13 +1036,13 @@ def _decode_scan(data: bytes, frame, scan_sel, tabs: JpegTables,
                 for vy in range(vi):
                     for vx in range(hi):
                         zz = grids[cs][my * vi + vy, mx * hi + vx]
-                        t = rdr.read_symbol(dc_tab)
-                        diff = _extend(rdr.read_bits(t), t)
+                        t = _read_symbol(rdr, dc_tab)
+                        diff = _extend(rdr.read(t), t)
                         preds[cs] += diff
                         zz[0] = preds[cs]
                         k = 1
                         while k < 64:
-                            rs = rdr.read_symbol(ac_tab)
+                            rs = _read_symbol(rdr, ac_tab)
                             r, s = rs >> 4, rs & 15
                             if s == 0:
                                 if r == 15:
@@ -1068,7 +1052,7 @@ def _decode_scan(data: bytes, frame, scan_sel, tabs: JpegTables,
                             k += r
                             if k > 63:
                                 raise ValueError("JPEG AC coefficient overflow")
-                            zz[k] = _extend(rdr.read_bits(s), s)
+                            zz[k] = _extend(rdr.read(s), s)
                             k += 1
             mcu += 1
         if mcu >= n_mcu:
@@ -1078,28 +1062,17 @@ def _decode_scan(data: bytes, frame, scan_sel, tabs: JpegTables,
 
 
 def _split_restart_segments(data: bytes) -> list[bytes]:
-    segments = []
-    start = 0
-    j = 0
-    while j < len(data) - 1:
-        if data[j] == 0xFF and 0xD0 <= data[j + 1] <= 0xD7:
-            segments.append(data[start:j])
-            start = j + 2
-            j += 2
-        else:
-            j += 1
-    segments.append(data[start:])
-    return segments
+    return re.split(rb"\xff[\xd0-\xd7]", data)
 
 
-def _decode_ac_first_block(rdr: _BitReader, zz: np.ndarray, ss: int, se: int,
+def _decode_ac_first_block(rdr: BitReader, zz: np.ndarray, ss: int, se: int,
                            al: int, ac_tab: _HuffTable, eobrun: int) -> int:
     """T.81 G.1.2.2 first AC scan of one block; returns the new EOBRUN."""
     if eobrun > 0:
         return eobrun - 1
     k = ss
     while k <= se:
-        rs = rdr.read_symbol(ac_tab)
+        rs = _read_symbol(rdr, ac_tab)
         r, s = rs >> 4, rs & 15
         if s == 0:
             if r == 15:  # ZRL
@@ -1107,17 +1080,17 @@ def _decode_ac_first_block(rdr: _BitReader, zz: np.ndarray, ss: int, se: int,
                 continue
             eobrun = (1 << r) - 1
             if r:
-                eobrun += rdr.read_bits(r)
+                eobrun += rdr.read(r)
             return eobrun
         k += r
         if k > se:
             raise ValueError("JPEG progressive AC coefficient overflow")
-        zz[k] = _extend(rdr.read_bits(s), s) << al
+        zz[k] = _extend(rdr.read(s), s) << al
         k += 1
     return 0
 
 
-def _decode_ac_refine_block(rdr: _BitReader, zz: np.ndarray, ss: int, se: int,
+def _decode_ac_refine_block(rdr: BitReader, zz: np.ndarray, ss: int, se: int,
                             al: int, ac_tab: _HuffTable, eobrun: int) -> int:
     """T.81 G.1.2.3 successive-approximation AC refinement of one block
     (libjpeg decode_mcu_AC_refine structure); returns the new EOBRUN."""
@@ -1126,24 +1099,24 @@ def _decode_ac_refine_block(rdr: _BitReader, zz: np.ndarray, ss: int, se: int,
     k = ss
     if eobrun == 0:
         while k <= se:
-            rs = rdr.read_symbol(ac_tab)
+            rs = _read_symbol(rdr, ac_tab)
             r, s = rs >> 4, rs & 15
             if s == 0:
                 if r != 15:  # EOBn
                     eobrun = 1 << r
                     if r:
-                        eobrun += rdr.read_bits(r)
+                        eobrun += rdr.read(r)
                     break
                 sval = 0  # ZRL: advance over 16 zero-history coefficients
             else:
                 if s != 1:
                     raise ValueError("invalid JPEG AC refinement symbol")
-                sval = p1 if rdr.read_bits(1) else m1
+                sval = p1 if rdr.read(1) else m1
             while k <= se:
                 v = int(zz[k])
                 if v != 0:
                     # history coefficient: one correction bit
-                    if rdr.read_bits(1) and (v & p1) == 0:
+                    if rdr.read(1) and (v & p1) == 0:
                         zz[k] = v + (p1 if v >= 0 else m1)
                 else:
                     if r == 0:
@@ -1158,7 +1131,7 @@ def _decode_ac_refine_block(rdr: _BitReader, zz: np.ndarray, ss: int, se: int,
         while k <= se:
             v = int(zz[k])
             if v != 0:
-                if rdr.read_bits(1) and (v & p1) == 0:
+                if rdr.read(1) and (v & p1) == 0:
                     zz[k] = v + (p1 if v >= 0 else m1)
             k += 1
         eobrun -= 1
@@ -1212,18 +1185,18 @@ def _decode_scan_progressive(data: bytes, frame, scan_sel, band,
         n_units = len(units)
         done = 0
         for seg in segments:
-            rdr = _BitReader(seg.replace(b"\xff\x00", b"\xff"))
+            rdr = _scan_reader(seg)
             preds = {cs: 0 for cs, _t, _a in scan_sel}
             count = min(ri, n_units - done) if ri else n_units - done
             for u in range(done, done + count):
                 for cs, td, gy, gx in units[u]:
                     zz = grids[cs][gy, gx]
                     if ah == 0:
-                        t = rdr.read_symbol(tabs.huff[0x00 | td])
-                        preds[cs] += _extend(rdr.read_bits(t), t)
+                        t = _read_symbol(rdr, tabs.huff[0x00 | td])
+                        preds[cs] += _extend(rdr.read(t), t)
                         zz[0] = preds[cs] << al
                     else:
-                        if rdr.read_bits(1):
+                        if rdr.read(1):
                             zz[0] = int(zz[0]) | (1 << al)
             done += count
             if done >= n_units:
@@ -1245,7 +1218,7 @@ def _decode_scan_progressive(data: bytes, frame, scan_sel, band,
     n_blocks = bh_c * bw_c
     done = 0
     for seg in segments:
-        rdr = _BitReader(seg.replace(b"\xff\x00", b"\xff"))
+        rdr = _scan_reader(seg)
         eobrun = 0
         count = min(ri, n_blocks - done) if ri else n_blocks - done
         for b in range(done, done + count):

@@ -175,12 +175,6 @@ def _parse_video_trak(buf: bytes, trak_b: int, trak_e: int, mdia) -> dict:
     }
 
 
-def mp4_probe_shape(buf: bytes) -> tuple[int, int, int]:
-    """(h, w, bands) from the headers only — no sample decode."""
-    info = mp4_parse(buf)
-    return info["h"], info["w"], 3
-
-
 def mp4_frame_count(buf: bytes) -> int:
     """Structural sample count — payload bytes untouched."""
     return mp4_parse(buf)["n_samples"]

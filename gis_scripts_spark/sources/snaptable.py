@@ -65,14 +65,6 @@ def snapshots(table: str) -> list[dict]:
     return _load_manifest(table)["snapshots"]
 
 
-def current_snapshot(table: str) -> dict | None:
-    m = _load_manifest(table)
-    for s in m["snapshots"]:
-        if s["id"] == m["current"]:
-            return s
-    return None
-
-
 def completed_stages(table: str) -> set[str]:
     return {s["stage"] for s in snapshots(table) if s.get("stage")}
 

@@ -121,6 +121,26 @@ class TestAnimation:
         for got, want in zip(out, frames):
             assert np.array_equal(got, want)
 
+    def test_first_frame_decodes_once(self, monkeypatch):
+        # gif_decode returns frame 0 only: one block walk, one LZW decode
+        from gis_scripts_spark.raster import gif
+
+        frames = [_img(20, 30, 3, 5, seed=s) for s in range(3)]
+        buf = gif_encode_frames(frames)
+        calls = []
+        decompress = gif._lzw_decompress
+
+        def counting(*args):
+            calls.append(args[2])
+            return decompress(*args)
+
+        monkeypatch.setattr(gif, "_lzw_decompress", counting)
+        assert np.array_equal(gif_decode(buf), frames[0])
+        assert calls == [20 * 30]
+        calls.clear()
+        assert len(gif_decode_frames(buf)) == 3
+        assert len(calls) == 3
+
     def test_transparency_shows_previous_frame(self):
         a = np.full((8, 8, 3), 200, dtype=np.uint8)
         b = np.zeros((8, 8, 3), dtype=np.uint8)  # index 0 -> transparent

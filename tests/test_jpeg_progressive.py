@@ -15,6 +15,7 @@ import pytest
 
 from gis_scripts_spark.raster import codec
 from gis_scripts_spark.raster import jpeg as J
+from gis_scripts_spark.raster.bitio import BitReader
 
 
 def _test_image(shape, seed=0):
@@ -102,7 +103,7 @@ def test_successive_approximation_block_vectors():
             J._encode_ac_refine_block(st, zz_src, 1, 63, al)
         st.flush()
         wtr.pad_to_byte()
-        rdr = J._BitReader(bytes(wtr.out).replace(b"\xff\x00", b"\xff"))
+        rdr = BitReader(bytes(wtr.out).replace(b"\xff\x00", b"\xff"))
         if ah == 0:
             left = J._decode_ac_first_block(rdr, zz_dec, 1, 63, al, tab, 0)
         else:
@@ -140,9 +141,9 @@ def test_generated_huffman_table_valid():
         ln, code = tab.enc[int(s)]
         wtr.put(code, ln)
     wtr.pad_to_byte()
-    rdr = J._BitReader(bytes(wtr.out).replace(b"\xff\x00", b"\xff"))
+    rdr = BitReader(bytes(wtr.out).replace(b"\xff\x00", b"\xff"))
     for s in syms:
-        assert rdr.read_symbol(tab) == int(s)
+        assert J._read_symbol(rdr, tab) == int(s)
 
 
 def test_codec_dispatch_jpegp():

@@ -78,6 +78,15 @@ def test_packbits_roundtrip():
 
 
 # ------------------------------------------- TIFF container integration
+def test_lzw_encode_eoi_width_after_last_code():
+    """The decoder adds a table entry after the final code and may widen
+    before it reads EOI; the encoder counts that entry too (libtiff's
+    LZWPostEncode). These two inputs end right at a width bump."""
+    for data in (bytes(range(253)),
+                 bytes((i * 7919 + (i * i) % 251) % 256 for i in range(1796))):
+        assert geotiff.lzw_decode(geotiff.lzw_encode(data)) == data
+
+
 @pytest.mark.parametrize("compress", ["lzw", "packbits", "deflate", "none"])
 @pytest.mark.parametrize("dtype", [np.uint8, np.int16, np.float32])
 def test_tiff_roundtrip_all_compressions(compress, dtype):

@@ -1,6 +1,6 @@
 """Two-parallelism determinism evidence (north-rule invariant: results
 identical at any executor count). Runs representative queries at
-local[8] and local[32], hashes the sorted result rows, and writes
+local[1] and local[nproc], hashes the sorted result rows, and writes
 BENCH/determinism.json.
 
 Run: python tools/check_determinism.py [sf_dir]
@@ -51,9 +51,10 @@ def main() -> None:
     from gis_scripts_spark import queries as Q
     from gis_scripts_spark.session import get_spark, stop_spark
 
-    results: dict = {"sf_dir": sf_dir, "levels": [8, 32], "queries": {}}
+    levels = (1, os.cpu_count() or 1)
+    results: dict = {"sf_dir": sf_dir, "levels": list(levels), "queries": {}}
     hashes: dict[str, dict[int, tuple[int, str]]] = {}
-    for cores in (8, 32):
+    for cores in levels:
         stop_spark()
         spark = get_spark(f"determinism-{cores}", cores=cores)
         spark.sparkContext.setLogLevel("ERROR")
@@ -62,12 +63,13 @@ def main() -> None:
             hashes.setdefault(name, {})[cores] = (n, h)
     stop_spark()
     all_ok = True
+    lo, hi = levels
     for name, by_cores in hashes.items():
-        (n8, h8), (n32, h32) = by_cores[8], by_cores[32]
-        ok = (n8, h8) == (n32, h32)
+        ok = by_cores[lo] == by_cores[hi]
         all_ok &= ok
         results["queries"][name] = {
-            "rows": n8, "hash8": h8, "hash32": h32, "identical": ok,
+            "rows": by_cores[lo][0], f"hash{lo}": by_cores[lo][1],
+            f"hash{hi}": by_cores[hi][1], "identical": ok,
         }
     results["all_identical"] = all_ok
     out = os.path.join(REPO, "BENCH", "determinism.json")
