@@ -1,91 +1,64 @@
 """Per-partition lineage + runtime metrics (north rule: "per-partition
 lineage and row-count/latency metrics written to a metrics table").
 
-`MetricsCollector.wrap(df, stage)` is a zero-copy mapInPandas pass-through
-that measures per-partition row counts and wall time on the executors and
-ships them back via a list accumulator; `flush()` appends them as rows of a
-snapshot-versioned metrics table. This replaces the reference's debug
-raster sinks + stats txt files (``local_match.py:803-849``,
-``count_raster_values.py:80-113``) with a queryable table.
+``with MetricsCollector.stage(name):`` tags the Spark jobs of one pipeline
+stage (``taskmetrics.label``) and, when the block ends, reads Spark's own
+task metrics for them: one record per partition of each Spark stage that
+wrote rows (the stage's table write), with the rows and bytes it wrote and
+its executor run, CPU and GC time. Nothing is added to the stage's plan.
+``flush()`` appends the records as rows of a snapshot-versioned metrics
+table. This replaces the reference's debug raster sinks + stats txt files
+(``local_match.py:803-849``, ``count_raster_values.py:80-113``) with a
+queryable table.
 """
 
 from __future__ import annotations
 
-import socket
-import time
 import uuid
+from contextlib import contextmanager
 
 import pandas as pd
-from pyspark import TaskContext
-from pyspark.accumulators import AccumulatorParam
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
-
-class _ListParam(AccumulatorParam):
-    def zero(self, value):
-        return []
-
-    def addInPlace(self, a, b):
-        a.extend(b)
-        return a
+from gis_scripts_spark import taskmetrics
 
 
 class MetricsCollector:
     def __init__(self, spark: SparkSession, run_id: str | None = None):
         self.spark = spark
         self.run_id = run_id or f"run-{uuid.uuid4().hex[:12]}"
-        self._acc = spark.sparkContext.accumulator([], _ListParam())
+        self._records: list[dict] = []
 
-    def wrap(self, df: DataFrame, stage: str) -> DataFrame:
-        """Pass-through instrumentation; schema unchanged."""
-        acc = self._acc
-        run_id = self.run_id
-        schema = df.schema
-
-        def run(batches):
-            t0 = time.time()
-            n = 0
-            nbytes = 0
-            for pdf in batches:
-                n += len(pdf)
-                nbytes += int(pdf.memory_usage(deep=False).sum())
-                yield pdf
-            ctx = TaskContext.get()
-            acc.add(
-                [
-                    {
-                        "run_id": run_id,
-                        "stage": stage,
-                        "partition_id": ctx.partitionId() if ctx else -1,
-                        "rows": n,
-                        "approx_bytes": nbytes,
-                        "seconds": round(time.time() - t0, 4),
-                        "host": socket.gethostname(),
-                        "ts": time.time(),
-                    }
-                ]
-            )
-
-        return df.mapInPandas(run, schema)
-
-    def records(self) -> list[dict]:
-        """Collected records, deduped on (run_id, stage, partition_id).
-
-        Accumulator updates inside transformations are at-least-once (task
-        retries / speculative execution re-add); keep the LAST record per
-        key — the attempt whose output Spark actually committed is always
-        among them and duplicates carry identical row counts."""
-        seen: dict[tuple, dict] = {}
-        for rec in self._acc.value:
-            seen[(rec["run_id"], rec["stage"], rec["partition_id"])] = rec
-        return list(seen.values())
+    @contextmanager
+    def stage(self, stage: str):
+        """Record the partitions that the block's Spark jobs wrote."""
+        sc = self.spark.sparkContext
+        with taskmetrics.label(sc, f"{self.run_id}:{stage}") as tag:
+            yield
+        rows = [t for t in taskmetrics.tasks(sc, taskmetrics.jobs(sc, tag)) if t["status"] == "SUCCESS"]
+        writers = {t["stage_id"] for t in rows if t["records_written"]}
+        self._records += [
+            {
+                "run_id": self.run_id,
+                "stage": stage,
+                "partition_id": t["partition_id"],
+                "rows": t["records_written"],
+                "bytes_written": t["bytes_written"],
+                "seconds": t["run_s"],
+                "cpu_seconds": t["cpu_s"],
+                "gc_seconds": t["gc_s"],
+                "host": t["host"],
+                "ts": t["launch"],
+            }
+            for t in rows
+            if t["stage_id"] in writers
+        ]
 
     def flush(self, metrics_table: str, stage: str = None) -> dict | None:
-        """Append collected records to the metrics snaptable."""
+        """Append the recorded partitions to the metrics snaptable."""
         from gis_scripts_spark.sources import snaptable
 
-        recs = self.records()
-        if not recs:
+        if not self._records:
             return None
-        df = self.spark.createDataFrame(pd.DataFrame(recs))
+        df = self.spark.createDataFrame(pd.DataFrame(self._records))
         return snaptable.write_snapshot(df, metrics_table, stage=stage)

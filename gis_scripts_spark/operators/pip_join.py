@@ -22,8 +22,6 @@ image bytes; polygon WKB rides the broadcast.
 
 from __future__ import annotations
 
-import hashlib
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -35,8 +33,8 @@ from gis_scripts_spark.geom import wkb as wkb_mod
 from gis_scripts_spark.index import cells as cells_mod
 from gis_scripts_spark.operators.repart import fits_broadcast
 
-# (z, polygon-content fingerprint) -> cover pandas frame; static AOI layers
-# cover once per process, not once per query
+# (z, wkb bytes, rows, content fingerprint) -> (cover pandas frame, decoded
+# polygons by id); static AOI layers cover once per process, not per query
 _COVER_CACHE: dict = {}
 
 
@@ -163,11 +161,13 @@ def pip_join(
     column is NORMALIZED to 'poly_id' in the output whatever the input
     column was named.
 
-    Regime: one aggregate job sums the layer's WKB bytes (no WKB reaches
-    the driver). Within ``repart.fits_broadcast`` the polygon rows are
-    collected, their cover is broadcast and the exact check reads the WKB
-    from its closure; past it the cover is built distributed and the WKB
-    rides the shuffle-hash cell join.
+    Regime: one aggregate job sums the layer's WKB bytes and counts and
+    fingerprints its rows (no WKB reaches the driver). Within
+    ``repart.fits_broadcast`` the cover is broadcast and the exact check
+    reads the decoded polygons from its closure; both are cached per
+    layer content and zoom, so only a cache miss collects the polygon
+    rows. Past the bound the cover is built distributed and the WKB rides
+    the shuffle-hash cell join.
 
     `salt` + `hot_cells`: replicate cover rows of hot cells `salt` ways and
     spread their points across replicas via a deterministic hash — the skew
@@ -197,24 +197,31 @@ def pip_join(
             if hot_cells else None
         )
 
-    wkb_bytes = polys_df.agg(F.sum(F.length(F.col(wkb_col)))).first()[0] or 0
-    rows = None
+    # one job: the byte sum picks the regime, and (bytes, rows, content
+    # fingerprint) keys the cover cache, so a cached layer collects nothing
+    stats = polys_df.agg(
+        F.sum(F.length(F.col(wkb_col))),
+        F.count(F.lit(1)),
+        F.sum(F.xxhash64(F.col(poly_id), F.col(wkb_col)).cast("decimal(20,0)")),
+    ).first()
+    wkb_bytes = stats[0] or 0
+    cached = None
     if fits_broadcast(spark, "pip_join.cover", wkb_bytes):
-        rows = polys_df.select(poly_id, wkb_col).collect()
-        # the AOI layer is static dimension data: build its cover ONCE per
-        # (polygon content, z) and reuse across queries — the cover is the
-        # analogue of a prepared dimension index, not per-query work. The
-        # collect above is required by the broadcast path anyway.
-        key = (z, tuple(sorted(
-            (r[0], hashlib.md5(bytes(r[1])).hexdigest() if r[1] is not None else "") for r in rows
-        )))
+        # the AOI layer is static dimension data: build its cover and decode
+        # its polygons ONCE per (polygon content, z) and reuse them across
+        # queries — the analogue of a prepared dimension index
+        key = (z, wkb_bytes, stats[1], stats[2])
         cached = _COVER_CACHE.get(key)
         if cached is None:
-            cached = _cover_frame([r[0] for r in rows], [r[1] for r in rows], z)
+            rows = polys_df.select(poly_id, wkb_col).collect()
+            cached = (
+                _cover_frame([r[0] for r in rows], [r[1] for r in rows], z),
+                {r[0]: wkb_mod.from_wkb(bytes(r[1])) for r in rows if r[1] is not None},
+            )
             if len(_COVER_CACHE) > 32:
                 _COVER_CACHE.clear()
             _COVER_CACHE[key] = cached
-        cover = spark.createDataFrame(cached, _cover_schema(polys_df, poly_id))
+        cover = spark.createDataFrame(cached[0], _cover_schema(polys_df, poly_id))
     else:
         cover = build_cover_df(spark, polys_df, z, poly_id, wkb_col)
 
@@ -246,12 +253,11 @@ def pip_join(
     else:
         join_keys = ["cell"]
 
-    if rows is not None:
-        # small-dim broadcast: the WKB rows collected above feed the
-        # exact-check closure
-        wkb_by_poly = {r[0]: wkb_mod.from_wkb(bytes(r[1])) for r in rows if r[1] is not None}
+    if cached is not None:
+        # small-dim broadcast: the decoded polygons feed the exact-check
+        # closure
         joined = pts.join(F.broadcast(cover), join_keys, "inner")
-        check = _pip_check_udf(wkb_by_poly)
+        check = _pip_check_udf(cached[1])
         joined = joined.filter(
             F.col("full") | check(F.col("poly_id"), F.col(lon), F.col(lat))
         )

@@ -35,6 +35,7 @@ cost is what bench/test gates measure.
 
 from __future__ import annotations
 
+import functools
 import re
 import struct
 
@@ -159,26 +160,31 @@ class _HuffTable:
 
     `look` is the decoder's 16-bit lookahead: entry v is
     (length << 8) | symbol for the code that prefixes the 16-bit value v,
-    or 0 when no code does."""
+    or 0 when no code does. It is built when a decoder first reads it; the
+    encoder and table writers only read `enc`."""
 
     def __init__(self, bits: list[int], vals: list[int]):
         self.bits = list(bits)
         self.vals = list(vals)
-        self.enc: dict[int, tuple[int, int]] = {}  # symbol -> (length, code)
-        self.look = [0] * 65536
+        self.codes: list[tuple[int, int, int]] = []  # (length, code, symbol)
         code = 0
         k = 0
         for length in range(1, 17):
-            span = 1 << (16 - length)
             for _ in range(bits[length - 1]):
-                sym = vals[k]
-                self.enc[sym] = (length, code)
-                if code < 1 << length:  # an overfull BITS list overflows
-                    lo = code * span
-                    self.look[lo : lo + span] = [(length << 8) | sym] * span
+                self.codes.append((length, code, vals[k]))
                 code += 1
                 k += 1
             code <<= 1
+        self.enc = {sym: (length, code) for length, code, sym in self.codes}
+
+    @functools.cached_property
+    def look(self) -> list[int]:
+        look = [0] * 65536
+        for length, code, sym in self.codes:
+            if code < 1 << length:  # an overfull BITS list overflows
+                span = 1 << (16 - length)
+                look[code * span : (code + 1) * span] = [(length << 8) | sym] * span
+        return look
 
 
 class _BitWriter:

@@ -40,10 +40,8 @@ def test_pipeline_restart_identical_output(spark, tmp_path):
 
     # simulated crash: run only through the tiles stage (fresh root), then
     # resume the full pipeline — ingest+tiles must be skipped, zonal computed
-    from gis_scripts_spark.metrics import MetricsCollector
     from gis_scripts_spark.operators import tile_assign
 
-    mc = MetricsCollector(spark)
     t_images = os.path.join(root2, "images")
     t_tiles = os.path.join(root2, "tiles")
     images = synth.images_df(spark, n)
@@ -76,6 +74,28 @@ def test_metrics_table_written(spark, tmp_path):
     # lineage: per-stage row counts sum to table row counts
     ingest_rows = m[m["stage"] == "ingest"]["rows"].sum()
     assert ingest_rows == 200
+    for stage in ("tiles", "zonal"):
+        table = snaptable.read_snapshot(spark, os.path.join(root, stage))
+        assert m[m["stage"] == stage]["rows"].sum() == table.count()
+
+
+def test_pipeline_plans_have_no_metrics_node(spark, tmp_path):
+    """The metrics come from Spark's task metrics, not from a pass-through:
+    of the four table writes (ingest, tiles, zonal, metrics) only ingest
+    holds a MapInPandas node, the synthetic image generator's."""
+    import re
+    import time
+
+    t0 = time.time() * 1000
+    pipelines.run_image_pipeline(spark, str(tmp_path / "plans"), n_images=200)
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = int(store.executionsCount())
+    execs = store.executionsList(max(0, n - 64), min(n, 64))
+    plans = [execs.apply(i).physicalPlanDescription() for i in range(execs.size())
+             if execs.apply(i).submissionTime() >= t0]
+    writes = [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p]
+    assert [len(re.findall(r"^\(\d+\) MapInPandas", p, re.M)) for p in writes] == [1, 0, 0, 0]
 
 
 def test_manifest_partition_and_stats_pruning(spark, tmp_path):

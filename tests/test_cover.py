@@ -134,3 +134,51 @@ def test_auto_zoom_skips_null_wkb(spark):
     assert pip_join.auto_zoom(spark.createDataFrame(rows_null, schema)) == pip_join.auto_zoom(
         spark.createDataFrame(rows, schema)
     )
+
+
+def _layer_jobs(spark, tag, fn):
+    from gis_scripts_spark import taskmetrics
+
+    with taskmetrics.label(spark.sparkContext, tag):
+        out = fn()
+    return len(taskmetrics.jobs(spark.sparkContext, tag)), out
+
+
+def test_pip_join_cached_layer_runs_only_its_aggregate(spark, tmp_path, monkeypatch):
+    """A second call on the same layer reuses the cached cover and decoded
+    polygons: it runs the one stats aggregate (its map-stage and result
+    jobs under AQE) and collects nothing. A one-byte WKB edit that keeps
+    every length misses the cache."""
+    monkeypatch.setattr(pip_join, "_COVER_CACHE", {})
+    src = str(tmp_path / "aoi.parquet")
+    spark.createDataFrame(synth.aoi_polygons()).write.parquet(src)
+    polys = spark.read.parquet(src)
+    pts = synth.images_df(spark, 150, parts=4).select("image_id", "lon", "lat")
+
+    def call(layer):
+        return pip_join.pip_join(pts, layer, z=7)
+
+    stats_jobs, _ = _layer_jobs(spark, "cover-stats", lambda: polys.agg(
+        F.sum(F.length("wkb")), F.count(F.lit(1)),
+        F.sum(F.xxhash64("poly_id", "wkb").cast("decimal(20,0)")),
+    ).first())
+    miss_jobs, first = _layer_jobs(spark, "cover-miss", lambda: call(polys))
+    hit_jobs, second = _layer_jobs(spark, "cover-hit", lambda: call(polys))
+    assert len(pip_join._COVER_CACHE) == 1
+    assert hit_jobs == stats_jobs
+    assert miss_jobs == stats_jobs + 1  # the collect of the polygon rows
+    want = sorted(map(tuple, first.select("image_id", "poly_id").collect()))
+    assert want and sorted(map(tuple, second.select("image_id", "poly_id").collect())) == want
+
+    # flip the low byte of the first x coordinate of one polygon: same
+    # byte count, same row count, new content
+    pdf = synth.aoi_polygons()
+    buf = bytearray(pdf.at[0, "wkb"])
+    buf[13] ^= 0x01
+    pdf.at[0, "wkb"] = bytes(buf)
+    edited_src = str(tmp_path / "aoi_edited.parquet")
+    spark.createDataFrame(pdf).write.parquet(edited_src)
+    edited = spark.read.parquet(edited_src)
+    edit_jobs, _ = _layer_jobs(spark, "cover-edit", lambda: call(edited))
+    assert edit_jobs == miss_jobs
+    assert len(pip_join._COVER_CACHE) == 2

@@ -408,8 +408,7 @@ def job_ann(spark, n: int) -> int:
     the assign's float64 sim matrix alone pushed 22 GB/run through the
     membus, and the cogroup shuffled ~650 MB of nprobe-replicated query
     vectors; the float32 coarse scoring + broadcast-queries redesign in
-    ann_ivf.py and this build/search split came out of that stage dump,
-    tools/diag_ann.py.)"""
+    ann_ivf.py and this build/search split came out of that stage dump.)"""
     import os as _os
 
     from gis_scripts_spark.operators import ann_ivf
