@@ -5,7 +5,8 @@ of a self-join, and the caller's final action read them instead of
 re-running their lineage: knn_join's eager rounds, the MinHash band join
 (minhash_lsh_pairs_sql), the banded hamming join (hamming_neardup_pairs,
 which serves simhash_pairs, both pHash widths and hamming256_neardup) and
-coverage_join's auto gate. Every such persist goes through `persist`,
+coverage_join's candidate pairs, whose byte count picks the broadcast
+regime before the join reads them. Every such persist goes through `persist`,
 inside a call decorated with `scoped`. Three rules hold for every handle:
 
 1. **Salt each plan.** Spark's CacheManager keys entries by canonicalized

@@ -50,6 +50,7 @@ from pyspark.sql.types import (
 
 from gis_scripts_spark.raster import codec
 from gis_scripts_spark.raster import ops
+from gis_scripts_spark.rowmap import map_rows
 
 C1, C2, K2 = 32, 16, 3  # conv1 filters, conv2 filters, conv2 kernel size
 
@@ -236,38 +237,23 @@ def patch_pixels(
     (seagrass_lib.py:644-646). Map-local; bytes never shuffle."""
     sel = ["image_id", "bytes", "fmt"] + ([nodata_col] if nodata_col else [])
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                img = codec.decode(bytes(row["bytes"]), row["fmt"]).astype(np.float64)
-                nd = ops.nodata_of(row, nodata_col)
-                h, w, nb = img.shape
-                ny, nx = h // dimension, w // dimension
-                if ny == 0 or nx == 0:
-                    continue
-                win = (
-                    img[: ny * dimension, : nx * dimension]
-                    .reshape(ny, dimension, nx, dimension, nb)
-                    .transpose(0, 2, 1, 3, 4)
-                )  # (ny, nx, dim, dim, nb)
-                valid = (
-                    np.ones((ny, nx), bool)
-                    if nd is None
-                    else ~(win == nd).any(axis=(2, 3, 4))
-                )
-                for yy, xx in zip(*np.nonzero(valid)):
-                    rows.append(
-                        (
-                            row["image_id"],
-                            int(yy),
-                            int(xx),
-                            win[yy, xx].ravel().tolist(),
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in PIXELS_SCHEMA.fields])
+    def fn(row):
+        img = codec.decode(bytes(row["bytes"]), row["fmt"]).astype(np.float64)
+        nd = ops.nodata_of(row, nodata_col)
+        h, w, nb = img.shape
+        ny, nx = h // dimension, w // dimension
+        if ny == 0 or nx == 0:
+            return
+        win = (
+            img[: ny * dimension, : nx * dimension]
+            .reshape(ny, dimension, nx, dimension, nb)
+            .transpose(0, 2, 1, 3, 4)
+        )  # (ny, nx, dim, dim, nb)
+        valid = np.ones((ny, nx), bool) if nd is None else ~(win == nd).any(axis=(2, 3, 4))
+        for yy, xx in zip(*np.nonzero(valid)):
+            yield (row["image_id"], int(yy), int(xx), win[yy, xx].ravel().tolist())
 
-    return images.select(*sel).mapInPandas(run, PIXELS_SCHEMA)
+    return map_rows(images.select(*sel), fn, PIXELS_SCHEMA)
 
 
 # --------------------------------------------------------------------------

@@ -43,6 +43,7 @@ from pyspark.sql.types import (
 
 from gis_scripts_spark.raster import codec
 from gis_scripts_spark.raster import ops
+from gis_scripts_spark.rowmap import map_rows
 
 PATCH_SCHEMA = StructType(
     [
@@ -60,42 +61,38 @@ def patch_features(images: DataFrame, patch: int = 8, nodata_col: str | None = N
     bytes never shuffle; the output is a narrow feature table."""
     sel = ["image_id", "bytes", "fmt"] + ([nodata_col] if nodata_col else [])
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                img = codec.decode(bytes(row["bytes"]), row["fmt"]).astype(np.float64)
-                nd = ops.nodata_of(row, nodata_col)
-                h, w, nb = img.shape
-                py, px = h // patch, w // patch
-                if py == 0 or px == 0:
-                    continue
-                # vectorized per-patch stats: (py, px, nb, patch*patch)
-                win = (
-                    img[: py * patch, : px * patch]
-                    .reshape(py, patch, px, patch, nb)
-                    .transpose(0, 2, 4, 1, 3)
-                    .reshape(py, px, nb, patch * patch)
-                )
-                mask = (win != nd) if nd is not None else np.ones(win.shape, bool)
-                cnt = mask.sum(axis=-1)
-                ok = cnt > 0
-                safe = np.maximum(cnt, 1)
-                mean = np.where(mask, win, 0.0).sum(axis=-1) / safe
-                var = (np.where(mask, win - mean[..., None], 0.0) ** 2).sum(axis=-1) / safe
-                std = np.sqrt(var)
-                mn = np.where(mask, win, np.inf).min(axis=-1)
-                mx = np.where(mask, win, -np.inf).max(axis=-1)
-                feats = np.stack(
-                    [np.where(ok, mean, 0.0), np.where(ok, std, 0.0),
-                     np.where(ok, mn, 0.0), np.where(ok, mx, 0.0)], axis=-1
-                ).reshape(py, px, nb * 4)
-                for yy in range(py):
-                    for xx in range(px):
-                        rows.append((row["image_id"], yy, xx, feats[yy, xx].tolist()))
-            yield pd.DataFrame(rows, columns=[f.name for f in PATCH_SCHEMA.fields])
+    def fn(row):
+        img = codec.decode(bytes(row["bytes"]), row["fmt"]).astype(np.float64)
+        nd = ops.nodata_of(row, nodata_col)
+        h, w, nb = img.shape
+        py, px = h // patch, w // patch
+        if py == 0 or px == 0:
+            return
+        # vectorized per-patch stats: (py, px, nb, patch*patch)
+        win = (
+            img[: py * patch, : px * patch]
+            .reshape(py, patch, px, patch, nb)
+            .transpose(0, 2, 4, 1, 3)
+            .reshape(py, px, nb, patch * patch)
+        )
+        mask = (win != nd) if nd is not None else np.ones(win.shape, bool)
+        cnt = mask.sum(axis=-1)
+        ok = cnt > 0
+        safe = np.maximum(cnt, 1)
+        mean = np.where(mask, win, 0.0).sum(axis=-1) / safe
+        var = (np.where(mask, win - mean[..., None], 0.0) ** 2).sum(axis=-1) / safe
+        std = np.sqrt(var)
+        mn = np.where(mask, win, np.inf).min(axis=-1)
+        mx = np.where(mask, win, -np.inf).max(axis=-1)
+        feats = np.stack(
+            [np.where(ok, mean, 0.0), np.where(ok, std, 0.0),
+             np.where(ok, mn, 0.0), np.where(ok, mx, 0.0)], axis=-1
+        ).reshape(py, px, nb * 4)
+        for yy in range(py):
+            for xx in range(px):
+                yield (row["image_id"], yy, xx, feats[yy, xx].tolist())
 
-    return images.select(*sel).mapInPandas(run, PATCH_SCHEMA)
+    return map_rows(images.select(*sel), fn, PATCH_SCHEMA)
 
 
 def _partials(weights: np.ndarray):

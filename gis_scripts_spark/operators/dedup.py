@@ -380,6 +380,8 @@ def _ngram_jaccard_fastpath(grams: DataFrame, id_type, threshold: float) -> Data
     cache-resident kernel. See ngram_jaccard_pairs."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
+    from gis_scripts_spark.operators.repart import slots
+
     spark = grams.sparkSession
     sc = spark.sparkContext
     # one row per distinct gram, numbered BEFORE its doc list explodes:
@@ -407,10 +409,10 @@ def _ngram_jaccard_fastpath(grams: DataFrame, id_type, threshold: float) -> Data
     iptr_g = np.searchsorted(gram_idx[order_g], np.arange(n_grams_d + 1)).astype(np.int64)
     bc = sc.broadcast((doc_ids, sizes, grams_by_doc, iptr_d, docs_by_gram, iptr_g))
 
-    # one block per core slot (defaultParallelism is 2x slots here): the
-    # kernel is one pass over the postings, extra waves only add per-task
-    # fixed cost (broadcast load, worker dispatch)
-    n_blocks = max(sc.defaultParallelism // 2, 1)
+    # one block per task slot: the kernel is one pass over the postings,
+    # extra waves only add per-task fixed cost (broadcast load, worker
+    # dispatch)
+    n_blocks = slots(spark)
     thr = float(threshold)
 
     out_schema = StructType(

@@ -1,19 +1,25 @@
 """Multimodal binary columns: image / audio / video as opaque bytes with
-typed metadata, processed by Arrow-batched mapInPandas kernels.
+typed metadata, processed row by row through rowmap.map_rows.
 
-Container formats (real, dependency-free — the sandbox has no image/audio
-libs, so images use the engine's own PNG/QNT codecs and audio/video use
-tiny deterministic containers; where a REAL external codec would be needed
-(jpeg/mp3/h264) decode raises NotImplementedError, keeping the Spark-side
-plumbing — schema, batching, partitioning, UDF signatures — fully real and
-tested):
+Every container decodes for real with the engine's own dependency-free
+codecs (the sandbox has no image/audio libraries):
+
+- images: PNG, QNT, RAW1, baseline and progressive JPEG, GIF, BMP and
+  (Geo)TIFF, dispatched by raster/codec.decode;
+- audio: RIFF/WAV (PCM and IEEE float), FLAC (raster/flac.py) and the
+  AUD1 test container;
+- video: AVI (raw DIB and MJPEG), MP4/motion-JPEG, animated GIF and the
+  VID1 test container.
+
+Perceptual and inter-coded codecs (mp3/ogg/aac, h264/vp9) raise
+NotImplementedError at the bitstream. The two test containers:
 
   AUD1: b"AUD1" | u32 sample_rate | u32 n_samples | int16 PCM samples
   VID1: b"VID1" | u32 n_frames | n x (u32 len | QNT-encoded frame)
 
 Operators: decode stats, image resize (area resample), audio features
-(rms / zero-crossings / duration), video frame sampling (explode every
-k-th frame as its own row).
+(rms / zero-crossings / duration), STFT / log-mel spectrograms, video
+frame sampling (explode every k-th frame as its own row).
 """
 
 from __future__ import annotations
@@ -23,6 +29,7 @@ import struct
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -35,6 +42,8 @@ from pyspark.sql.types import (
 )
 
 from gis_scripts_spark.raster import codec
+from gis_scripts_spark.raster.ops import _transform_bytes
+from gis_scripts_spark.rowmap import map_rows
 
 # ------------------------------------------------------------- containers
 def audio_encode(samples: np.ndarray, sample_rate: int = 16000) -> bytes:
@@ -250,33 +259,23 @@ def resize_images(df: DataFrame, out_w: int, out_h: int) -> DataFrame:
     """Area/nearest resample of the image `bytes` column to (out_w, out_h);
     updates w/h columns. Pure numpy index-math resample (nearest for
     upscale, block-mean for integer downscale)."""
-    schema = df.schema
 
-    def run(batches):
-        for pdf in batches:
-            out_bytes = []
-            for _, row in pdf.iterrows():
-                img = codec.decode(bytes(row["bytes"]), row["fmt"])
-                h, w = img.shape[:2]
-                if h % out_h == 0 and w % out_w == 0:
-                    img2 = (
-                        img.reshape(out_h, h // out_h, out_w, w // out_w, img.shape[2])
-                        .mean(axis=(1, 3))
-                        .round()
-                        .astype(np.uint8)
-                    )
-                else:
-                    ry = np.floor(np.arange(out_h) * h / out_h).astype(np.int64)
-                    rx = np.floor(np.arange(out_w) * w / out_w).astype(np.int64)
-                    img2 = img[np.ix_(ry, rx)]
-                out_bytes.append(bytearray(codec.encode(img2, row["fmt"])))
-            pdf = pdf.copy()
-            pdf["bytes"] = out_bytes
-            pdf["w"] = np.int32(out_w)
-            pdf["h"] = np.int32(out_h)
-            yield pdf[[f.name for f in schema.fields]]
+    def k(img, row):
+        h, w = img.shape[:2]
+        if h % out_h == 0 and w % out_w == 0:
+            return (
+                img.reshape(out_h, h // out_h, out_w, w // out_w, img.shape[2])
+                .mean(axis=(1, 3))
+                .round()
+                .astype(np.uint8)
+            )
+        ry = np.floor(np.arange(out_h) * h / out_h).astype(np.int64)
+        rx = np.floor(np.arange(out_w) * w / out_w).astype(np.int64)
+        return img[np.ix_(ry, rx)]
 
-    return df.mapInPandas(run, schema)
+    return _transform_bytes(df, k).withColumns(
+        {c: F.lit(v).cast(df.schema[c].dataType) for c, v in (("w", out_w), ("h", out_h))}
+    )
 
 
 IMAGE_FEATURES_SCHEMA = StructType(
@@ -295,21 +294,15 @@ def image_features(df: DataFrame) -> DataFrame:
     perceptual hash — the feature-extraction stage of a multimodal
     training-data pipeline."""
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                img = codec.decode(bytes(row["bytes"]), row["fmt"]).astype(np.float64)
-                gray = img.mean(axis=2)
-                gx = np.abs(np.diff(gray, axis=1)).mean()
-                gy = np.abs(np.diff(gray, axis=0)).mean()
-                rows.append(
-                    (row["image_id"], float(img.mean()), float(img.std()),
-                     float((gx + gy) / 2.0), codec.phash64(img))
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in IMAGE_FEATURES_SCHEMA.fields])
+    def fn(row):
+        img = codec.decode(bytes(row["bytes"]), row["fmt"]).astype(np.float64)
+        gray = img.mean(axis=2)
+        gx = np.abs(np.diff(gray, axis=1)).mean()
+        gy = np.abs(np.diff(gray, axis=0)).mean()
+        yield (row["image_id"], float(img.mean()), float(img.std()),
+               float((gx + gy) / 2.0), codec.phash64(img))
 
-    return df.select("image_id", "bytes", "fmt").mapInPandas(run, IMAGE_FEATURES_SCHEMA)
+    return map_rows(df.select("image_id", "bytes", "fmt"), fn, IMAGE_FEATURES_SCHEMA)
 
 
 def phash_neardup_pairs(df: DataFrame, max_hamming: int = 10) -> DataFrame:
@@ -343,15 +336,11 @@ def image_phash256(df: DataFrame) -> DataFrame:
     """(image_id, phash256: array<bigint>[4]) — the 256-bit perceptual
     hash in one Arrow mapInPandas pass (codec.phash256)."""
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                img = codec.decode(bytes(row["bytes"]), row["fmt"]).astype(np.float64)
-                rows.append((row["image_id"], codec.phash256(img)))
-            yield pd.DataFrame(rows, columns=["image_id", "phash256"])
+    def fn(row):
+        img = codec.decode(bytes(row["bytes"]), row["fmt"]).astype(np.float64)
+        yield (row["image_id"], codec.phash256(img))
 
-    return df.select("image_id", "bytes", "fmt").mapInPandas(run, PHASH256_SCHEMA)
+    return map_rows(df.select("image_id", "bytes", "fmt"), fn, PHASH256_SCHEMA)
 
 
 def phash256_neardup_pairs(df: DataFrame, max_hamming: int = 10) -> DataFrame:
@@ -502,21 +491,15 @@ AUDIO_FEATURES_SCHEMA = StructType(
 
 
 def audio_features(df: DataFrame, id_col: str = "clip_id", bytes_col: str = "bytes") -> DataFrame:
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                wave, sr = audio_decode(bytes(row[bytes_col]))
-                if wave.ndim == 2:  # multi-channel WAV: feature over the mixdown
-                    wave = wave.mean(axis=1)
-                zc = float(np.mean(np.abs(np.diff(np.signbit(wave).astype(np.int8))))) if len(wave) > 1 else 0.0
-                rows.append(
-                    (row[id_col], len(wave) / sr, float(np.sqrt(np.mean(wave**2))),
-                     zc, float(np.abs(wave).max(initial=0.0)))
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in AUDIO_FEATURES_SCHEMA.fields])
+    def fn(row):
+        wave, sr = audio_decode(bytes(row[bytes_col]))
+        if wave.ndim == 2:  # multi-channel WAV: feature over the mixdown
+            wave = wave.mean(axis=1)
+        zc = float(np.mean(np.abs(np.diff(np.signbit(wave).astype(np.int8))))) if len(wave) > 1 else 0.0
+        yield (row[id_col], len(wave) / sr, float(np.sqrt(np.mean(wave**2))),
+               zc, float(np.abs(wave).max(initial=0.0)))
 
-    return df.select(id_col, bytes_col).mapInPandas(run, AUDIO_FEATURES_SCHEMA)
+    return map_rows(df.select(id_col, bytes_col), fn, AUDIO_FEATURES_SCHEMA)
 
 
 def _hann(n: int) -> np.ndarray:
@@ -583,31 +566,22 @@ def audio_spectrogram(
     like sample_frames (one clip in, many frames out); bytes decode and
     the FFT stay map-local inside the Arrow batch, only (id, idx,
     energies) scalars/arrays leave the stage."""
+    fb_cache: dict[int, np.ndarray] = {}
 
-    def run(batches):
-        fb_cache: dict[int, np.ndarray] = {}
-        for pdf in batches:
-            ids, idxs, arrs = [], [], []
-            for _, row in pdf.iterrows():
-                wave, sr = audio_decode(bytes(row[bytes_col]))
-                if wave.ndim == 2:
-                    wave = wave.mean(axis=1)
-                spec = stft_mag(wave, n_fft=n_fft, hop=hop)
-                if n_mels:
-                    if sr not in fb_cache:
-                        fb_cache[sr] = mel_filterbank(sr, n_fft, n_mels)
-                    spec = np.log(spec**2 @ fb_cache[sr].T + 1e-10)
-                ids.extend([row[id_col]] * len(spec))
-                idxs.extend(range(len(spec)))
-                arrs.extend(list(spec))
-            yield pd.DataFrame(
-                {"clip_id": ids,
-                 "frame_idx": np.asarray(idxs, np.int32),
-                 "energies": arrs}
-            )
+    def fn(row):
+        wave, sr = audio_decode(bytes(row[bytes_col]))
+        if wave.ndim == 2:
+            wave = wave.mean(axis=1)
+        spec = stft_mag(wave, n_fft=n_fft, hop=hop)
+        if n_mels:
+            if sr not in fb_cache:
+                fb_cache[sr] = mel_filterbank(sr, n_fft, n_mels)
+            spec = np.log(spec**2 @ fb_cache[sr].T + 1e-10)
+        for i, energies in enumerate(spec):
+            yield (row[id_col], i, energies)
 
-    return df.select(id_col, bytes_col).mapInPandas(
-        run, _spectrogram_schema(df.schema[id_col].dataType)
+    return map_rows(
+        df.select(id_col, bytes_col), fn, _spectrogram_schema(df.schema[id_col].dataType)
     )
 
 
@@ -627,17 +601,11 @@ def sample_frames(df: DataFrame, every_k: int = 2, id_col: str = "video_id", byt
     """Explode every k-th frame of each video row into its own row — the
     UDTF-shaped frame-sampling stage (one video in, many frames out)."""
 
-    def run(batches):
-        for pdf in batches:
-            ids, idxs, frames = [], [], []
-            for _, row in pdf.iterrows():
-                for i, frame in video_iter_frames(bytes(row[bytes_col])):
-                    if i % every_k == 0:
-                        ids.append(row[id_col])
-                        idxs.append(i)
-                        frames.append(bytearray(frame))
-            yield pd.DataFrame({"video_id": ids, "frame_idx": np.asarray(idxs, np.int32), "frame_bytes": frames})
+    def fn(row):
+        for i, frame in video_iter_frames(bytes(row[bytes_col])):
+            if i % every_k == 0:
+                yield (row[id_col], i, bytearray(frame))
 
-    return df.select(id_col, bytes_col).mapInPandas(
-        run, _frame_schema(df.schema[id_col].dataType)
+    return map_rows(
+        df.select(id_col, bytes_col), fn, _frame_schema(df.schema[id_col].dataType)
     )

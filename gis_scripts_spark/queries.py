@@ -23,6 +23,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark.sql import Window
+from pyspark.sql.types import (
+    BinaryType,
+    BooleanType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from gis_scripts_spark.cachescope import persist, scoped
 from gis_scripts_spark.geom import wkb as wkb_mod
@@ -42,6 +52,7 @@ from gis_scripts_spark.operators import (
     tile_assign,
 )
 from gis_scripts_spark.operators.repart import spread
+from gis_scripts_spark.rowmap import map_rows
 
 # ---- shared derivation constants (mirrored literally in the oracle SQL) ----
 LON_MULT, LON_MOD = 2654435761, 360000
@@ -1289,8 +1300,6 @@ FROM events GROUP BY event_type
 
 
 def _bbox_wkb_udf():
-    from pyspark.sql.types import BinaryType
-
     @F.pandas_udf(BinaryType())
     def bbox_wkb(x0: pd.Series, y0: pd.Series, x1: pd.Series, y1: pd.Series) -> pd.Series:
         return pd.Series(
@@ -1423,32 +1432,23 @@ def q_audio_spectral(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ids = _pq(spark, sf_dir, "events").select("event_id").orderBy("event_id").limit(n)
 
-    def make_wavs(batches):
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                k = int(r["event_id"])
-                b1 = 5 + (k * 7) % 100  # louder tone's rFFT bin
-                b2 = 5 + (k * 13) % 110
-                t = np.arange(sr, dtype=np.float64)
-                wave = 0.5 * np.sin(2 * np.pi * (b1 * sr / n_fft) * t / sr) \
-                    + 0.2 * np.sin(2 * np.pi * (b2 * sr / n_fft) * t / sr)
-                if k % 2:  # FLAC container (same 16-bit quantization)
-                    from gis_scripts_spark.raster import flac as flac_mod
+    def make_wav(r):
+        k = int(r["event_id"])
+        b1 = 5 + (k * 7) % 100  # louder tone's rFFT bin
+        b2 = 5 + (k * 13) % 110
+        t = np.arange(sr, dtype=np.float64)
+        wave = 0.5 * np.sin(2 * np.pi * (b1 * sr / n_fft) * t / sr) \
+            + 0.2 * np.sin(2 * np.pi * (b2 * sr / n_fft) * t / sr)
+        if k % 2:  # FLAC container (same 16-bit quantization)
+            from gis_scripts_spark.raster import flac as flac_mod
 
-                    rows.append((k, flac_mod.flac_encode(wave, sr)))
-                else:
-                    rows.append((k, mm.wav_encode(wave, sr)))
-            yield pd.DataFrame(rows, columns=["clip_id", "bytes"])
+            yield (k, flac_mod.flac_encode(wave, sr))
+        else:
+            yield (k, mm.wav_encode(wave, sr))
 
-    from pyspark.sql.types import BinaryType as _Bin
-    from pyspark.sql.types import LongType as _Long
-    from pyspark.sql.types import StructField as _SF
-    from pyspark.sql.types import StructType as _ST
-
-    clips = ids.mapInPandas(
-        make_wavs, _ST([_SF("clip_id", _Long(), False), _SF("bytes", _Bin(), False)])
-    )
+    clips = map_rows(ids, make_wav, StructType(
+        [StructField("clip_id", LongType(), False), StructField("bytes", BinaryType(), False)]
+    ))
     spec = mm.audio_spectrogram(clips, n_fft=n_fft, hop=hop, id_col="clip_id")
     dom = spec.select(
         "clip_id", "frame_idx",
@@ -1495,59 +1495,40 @@ def q_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
         return np.clip(np.stack(chans, axis=-1), 0, 255).astype(np.uint8)
 
-    def make_avis(batches):
+    def make_avi(r):
         from gis_scripts_spark.raster import mp4 as mp4_mod
 
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                k = int(r["event_id"])
-                frames = [scene(k, i) for i in range(n_frames)]
-                if k % 3 == 2:  # MP4/motion-JPEG container (raster/mp4.py)
-                    buf = mp4_mod.mp4_encode(frames)
-                else:  # AVI: raw-DIB (k%3==0) or AVI1 stripped-DHT MJPEG
-                    buf = avi_mod.avi_encode(
-                        frames, compressed=bool(k % 3 == 1), strip_dht=bool(k % 3 == 1)
-                    )
-                rows.append((k, buf))
-            yield pd.DataFrame(rows, columns=["video_id", "bytes"])
+        k = int(r["event_id"])
+        frames = [scene(k, i) for i in range(n_frames)]
+        if k % 3 == 2:  # MP4/motion-JPEG container (raster/mp4.py)
+            buf = mp4_mod.mp4_encode(frames)
+        else:  # AVI: raw-DIB (k%3==0) or AVI1 stripped-DHT MJPEG
+            buf = avi_mod.avi_encode(
+                frames, compressed=bool(k % 3 == 1), strip_dht=bool(k % 3 == 1)
+            )
+        yield (k, buf)
 
-    from pyspark.sql.types import (
-        BinaryType as _Bin,
-        BooleanType as _Bool,
-        IntegerType as _Int,
-        LongType as _Long,
-        StructField as _SF,
-        StructType as _ST,
-    )
-
-    vids = ids.mapInPandas(
-        make_avis, _ST([_SF("video_id", _Long(), False), _SF("bytes", _Bin(), False)])
-    )
+    vids = map_rows(ids, make_avi, StructType(
+        [StructField("video_id", LongType(), False), StructField("bytes", BinaryType(), False)]
+    ))
     sampled = mm.sample_frames(vids, every_k=2, id_col="video_id")
 
-    def verify(batches):
-        for pdf in batches:
-            ks, idxs, oks = [], [], []
-            for _, r in pdf.iterrows():
-                k, i = int(r["video_id"]), int(r["frame_idx"])
-                img = codec_mod.decode(bytes(r["frame_bytes"]))
-                src = scene(k, i)
-                ok = (
-                    bool(np.array_equal(img, src))
-                    if k % 3 == 0  # DIB path: lossless
-                    else bool(codec_mod.psnr(src, img) >= 40.0)  # MJPEG (AVI or MP4)
-                )
-                ks.append(k)
-                idxs.append(i)
-                oks.append(ok)
-            yield pd.DataFrame({"video_id": ks, "frame_idx": idxs, "px_ok": oks})
+    def verify(r):
+        k, i = int(r["video_id"]), int(r["frame_idx"])
+        img = codec_mod.decode(bytes(r["frame_bytes"]))
+        src = scene(k, i)
+        ok = (
+            bool(np.array_equal(img, src))
+            if k % 3 == 0  # DIB path: lossless
+            else bool(codec_mod.psnr(src, img) >= 40.0)  # MJPEG (AVI or MP4)
+        )
+        yield (k, i, ok)
 
-    out_schema = _ST(
-        [_SF("video_id", _Long(), False), _SF("frame_idx", _Int(), False),
-         _SF("px_ok", _Bool(), False)]
+    out_schema = StructType(
+        [StructField("video_id", LongType(), False), StructField("frame_idx", IntegerType(), False),
+         StructField("px_ok", BooleanType(), False)]
     )
-    return sampled.mapInPandas(verify, out_schema)
+    return map_rows(sampled, verify, out_schema)
 
 
 def q_image_pipeline_zonal(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1863,16 +1844,6 @@ def q_cog_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     returned frame decodes BOTH sides executor-side and reports per-image
     pixel equality, anchor (lon/lat) roundtrip, and pyramid depth —
     a driver-visible failure if the export path ever tears."""
-    import os
-
-    from pyspark.sql.types import (
-        BooleanType,
-        IntegerType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     from gis_scripts_spark.sources import ingest, synth
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
@@ -1907,35 +1878,20 @@ def q_cog_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def compare(batches):
-        import numpy as np
-        import pandas as pd
-
+    def compare(r):
         from gis_scripts_spark.raster import codec
 
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                want = codec.decode(bytes(r["bytes"]), r["fmt"])
-                got = codec.decode(bytes(r["cog_bytes"]), "raw")
-                rows.append(
-                    {
-                        "image_id": r["image_id"],
-                        "pixels_equal": bool(
-                            np.array_equal(got[:, :, : want.shape[2]], want)
-                        ),
-                        "anchor_equal": bool(
-                            abs(r["cog_lon"] - r["lon"]) < 1e-9
-                            and abs(r["cog_lat"] - r["lat"]) < 1e-9
-                        ),
-                        "bands": int(want.shape[2]),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
+        want = codec.decode(bytes(r["bytes"]), r["fmt"])
+        got = codec.decode(bytes(r["cog_bytes"]), "raw")
+        yield (
+            r["image_id"],
+            bool(np.array_equal(got[:, :, : want.shape[2]], want)),
+            bool(abs(r["cog_lon"] - r["lon"]) < 1e-9 and abs(r["cog_lat"] - r["lat"]) < 1e-9),
+            int(want.shape[2]),
+        )
 
-    _ = os
     return (
-        joined.mapInPandas(compare, out_schema)
+        map_rows(joined, compare, out_schema)
         .join(man_df, "image_id")
         .orderBy("image_id")
     )
@@ -2043,7 +1999,6 @@ def q_mosaic_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
     level paint exactness vs numpy stays pinned in tests/test_mosaic.py.
     Fixture size scales with the events row count so the oracle follows
     the gate's sf."""
-    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
     from gis_scripts_spark.operators import mosaic as mosaic_mod
     from gis_scripts_spark.raster import codec as codec_mod
@@ -2081,30 +2036,18 @@ def q_mosaic_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def tile_checksums(batches):
-        for pdf in batches:
-            recs = []
-            for _, row in pdf.iterrows():
-                img = codec_mod.decode(bytes(row["bytes"]), row["fmt"])[:, :, 0]
-                val = img.astype(np.int64)
-                mask = val != -9999
-                gy = np.int64(row["tile_y"]) * 64 + np.arange(64, dtype=np.int64)[:, None]
-                gx = np.int64(row["tile_x"]) * 64 + np.arange(64, dtype=np.int64)[None, :]
-                pos = (gy % 32768) * 32768 + (gx % 32768)
-                wt = ((((pos * 2654435761 + 1013904223) % (1 << 32)) >> 16) % 997) + 1
-                recs.append(
-                    {
-                        "tile_x": int(row["tile_x"]),
-                        "tile_y": int(row["tile_y"]),
-                        "n_sources": int(row["n_sources"]),
-                        "n_valid_px": int(row["n_valid_px"]),
-                        "px_sum": int(val[mask].sum()),
-                        "px_chk": int((val[mask] * wt[mask]).sum()),
-                    }
-                )
-            yield pd.DataFrame(recs, columns=[f.name for f in chk_schema.fields])
+    def tile_checksums(row):
+        img = codec_mod.decode(bytes(row["bytes"]), row["fmt"])[:, :, 0]
+        val = img.astype(np.int64)
+        mask = val != -9999
+        gy = np.int64(row["tile_y"]) * 64 + np.arange(64, dtype=np.int64)[:, None]
+        gx = np.int64(row["tile_x"]) * 64 + np.arange(64, dtype=np.int64)[None, :]
+        pos = (gy % 32768) * 32768 + (gx % 32768)
+        wt = ((((pos * 2654435761 + 1013904223) % (1 << 32)) >> 16) % 997) + 1
+        yield (int(row["tile_x"]), int(row["tile_y"]), int(row["n_sources"]),
+               int(row["n_valid_px"]), int(val[mask].sum()), int((val[mask] * wt[mask]).sum()))
 
-    return out.mapInPandas(tile_checksums, chk_schema)
+    return map_rows(out, tile_checksums, chk_schema)
 
 
 SQL_MOSAIC_COMPOSITE = """
@@ -2157,7 +2100,6 @@ def q_reproject_utm(spark: SparkSession, sf_dir: str) -> DataFrame:
     kernel's evaluation order, and the emitted per-image value/position
     checksums are exact int64 sums. Warp exactness vs numpy stays pinned
     in tests/test_proj_warp.py."""
-    from pyspark.sql.types import DoubleType, IntegerType, LongType, StringType, StructField, StructType
 
     from gis_scripts_spark.raster import codec as codec_mod
     from gis_scripts_spark.raster import warp as warp_mod
@@ -2193,32 +2135,25 @@ def q_reproject_utm(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def image_checksums(batches):
-        for pdf in batches:
-            recs = []
-            for _, row in pdf.iterrows():
-                img = codec_mod.decode(bytes(row["bytes"]), row["fmt"])[:, :, 0]
-                val = img.astype(np.int64)
-                mask = val != -9999
-                r = np.arange(val.shape[0], dtype=np.int64)[:, None]
-                c = np.arange(val.shape[1], dtype=np.int64)[None, :]
-                wt = (((((r * 8191 + c) * 2654435761 + 1013904223) % (1 << 32)) >> 16) % 997) + 1
-                recs.append(
-                    {
-                        "image_id": row["image_id"],
-                        "crs": row["crs"],
-                        "w": int(row["w"]),
-                        "h": int(row["h"]),
-                        "x0": round(float(row["x0"]), 2),
-                        "y0": round(float(row["y0"]), 2),
-                        "n_valid": int(mask.sum()),
-                        "px_sum": int(val[mask].sum()),
-                        "px_chk": int((val[mask] * wt[mask]).sum()),
-                    }
-                )
-            yield pd.DataFrame(recs, columns=[f.name for f in chk_schema.fields])
+    def image_checksums(row):
+        yield (row["image_id"], row["crs"], int(row["w"]), int(row["h"]),
+               round(float(row["x0"]), 2), round(float(row["y0"]), 2), *_warp_checksums(row))
 
-    return out.mapInPandas(image_checksums, chk_schema)
+    return map_rows(out, image_checksums, chk_schema)
+
+
+def _warp_checksums(row) -> tuple[int, int, int]:
+    """(n_valid, px_sum, px_chk) of a warped image's band 0, -9999 masked,
+    with a per-pixel weight from its (row, col): the pixel checksums the
+    warp queries share with their SQL replays."""
+    from gis_scripts_spark.raster import codec as codec_mod
+
+    val = codec_mod.decode(bytes(row["bytes"]), row["fmt"])[:, :, 0].astype(np.int64)
+    mask = val != -9999
+    r = np.arange(val.shape[0], dtype=np.int64)[:, None]
+    c = np.arange(val.shape[1], dtype=np.int64)[None, :]
+    wt = (((((r * 8191 + c) * 2654435761 + 1013904223) % (1 << 32)) >> 16) % 997) + 1
+    return int(mask.sum()), int(val[mask].sum()), int((val[mask] * wt[mask]).sum())
 
 
 def _sql_reproject_utm() -> str:
@@ -2328,7 +2263,6 @@ def q_reproject_rpc(spark: SparkSession, sf_dir: str) -> DataFrame:
     the integer-mixed source. Grid origins are emitted as exact integer
     grid indices (x0k/y0k = origin / res) and pixels as value/position
     checksums."""
-    from pyspark.sql.types import DoubleType, IntegerType, LongType, StringType, StructField, StructType
 
     from gis_scripts_spark.raster import codec as codec_mod
     from gis_scripts_spark.raster import warp as warp_mod
@@ -2358,32 +2292,12 @@ def q_reproject_rpc(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def image_checksums(batches):
-        for pdf in batches:
-            recs = []
-            for _, row in pdf.iterrows():
-                img = codec_mod.decode(bytes(row["bytes"]), row["fmt"])[:, :, 0]
-                val = img.astype(np.int64)
-                mask = val != -9999
-                r = np.arange(val.shape[0], dtype=np.int64)[:, None]
-                c = np.arange(val.shape[1], dtype=np.int64)[None, :]
-                wt = (((((r * 8191 + c) * 2654435761 + 1013904223) % (1 << 32)) >> 16) % 997) + 1
-                recs.append(
-                    {
-                        "image_id": row["image_id"],
-                        "crs": row["crs"],
-                        "w": int(row["w"]),
-                        "h": int(row["h"]),
-                        "x0k": int(round(float(row["x0"]) * 1000.0)),
-                        "y0k": int(round(float(row["y0"]) * 1000.0)),
-                        "n_valid": int(mask.sum()),
-                        "px_sum": int(val[mask].sum()),
-                        "px_chk": int((val[mask] * wt[mask]).sum()),
-                    }
-                )
-            yield pd.DataFrame(recs, columns=[f.name for f in chk_schema.fields])
+    def image_checksums(row):
+        yield (row["image_id"], row["crs"], int(row["w"]), int(row["h"]),
+               int(round(float(row["x0"]) * 1000.0)), int(round(float(row["y0"]) * 1000.0)),
+               *_warp_checksums(row))
 
-    return out.mapInPandas(image_checksums, chk_schema)
+    return map_rows(out, image_checksums, chk_schema)
 
 
 def _sql_reproject_rpc() -> str:
@@ -2624,14 +2538,7 @@ def q_streaming_windowed_zonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     rectangles, same epoch-aligned 10-minute buckets. Replaces the
     reference's rebuild-the-zonal-table-per-run batch habit
     (Assess_Agreement.R) with an incremental pipeline."""
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
+    from pyspark.sql.types import TimestampType
 
     from gis_scripts_spark import streaming as streaming_mod
 

@@ -27,6 +27,7 @@ from pyspark.sql.types import (
 )
 
 from gis_scripts_spark.raster import codec
+from gis_scripts_spark.rowmap import map_rows
 from gis_scripts_spark.sources import snaptable
 
 BAND_ROW_SCHEMA = StructType(
@@ -46,20 +47,13 @@ def split_bands(images: DataFrame) -> DataFrame:
     a single-band RAW1 payload (dtype-preserving). Map-local: decode once,
     emit bands; bytes never shuffle."""
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                img = codec.decode(bytes(row["bytes"]), row["fmt"])
-                for b in range(img.shape[2]):
-                    rows.append(
-                        (row["image_id"], b,
-                         bytearray(codec.raw_encode(img[:, :, b])),
-                         img.shape[1], img.shape[0], "raw")
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in BAND_ROW_SCHEMA.fields])
+    def fn(row):
+        img = codec.decode(bytes(row["bytes"]), row["fmt"])
+        for b in range(img.shape[2]):
+            yield (row["image_id"], b, bytearray(codec.raw_encode(img[:, :, b])),
+                   img.shape[1], img.shape[0], "raw")
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(run, BAND_ROW_SCHEMA)
+    return map_rows(images.select("image_id", "bytes", "fmt"), fn, BAND_ROW_SCHEMA)
 
 
 def assemble_bands(band_rows: DataFrame, seq_col: str | None = None) -> DataFrame:

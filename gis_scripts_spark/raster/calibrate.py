@@ -20,12 +20,12 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gis_scripts_spark.raster import codec
 from gis_scripts_spark.raster.ops import _transform_bytes
+from gis_scripts_spark.rowmap import map_rows
 
 
 def earth_sun_distance_au(julian_day: float) -> float:
@@ -74,17 +74,13 @@ def dos_values(df: DataFrame, pct: float = 5.0) -> DataFrame:
         [StructField("image_id", StringType(), False), StructField("dos", DoubleType(), False)]
     )
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                img = codec.decode(bytes(row["bytes"]), row["fmt"]).astype(np.float64)
-                band = np.sort(img[:, :, 0].ravel())
-                k = max(1, int(len(band) * pct / 100.0))
-                rows.append((row["image_id"], float(np.median(band[:k]) / 2.0)))
-            yield pd.DataFrame(rows, columns=["image_id", "dos"])
+    def fn(row):
+        img = codec.decode(bytes(row["bytes"]), row["fmt"]).astype(np.float64)
+        band = np.sort(img[:, :, 0].ravel())
+        k = max(1, int(len(band) * pct / 100.0))
+        yield (row["image_id"], float(np.median(band[:k]) / 2.0))
 
-    return df.select("image_id", "bytes", "fmt").mapInPandas(run, schema)
+    return map_rows(df.select("image_id", "bytes", "fmt"), fn, schema)
 
 
 def dark_object_subtract(

@@ -168,7 +168,6 @@ def local_match(
         maps[int(band)] = (cells_arr[order], means_arr[order])
     b_maps = spark.sparkContext.broadcast(maps)
 
-    schema = images.schema
     n_grid = 1 << z
 
     def window_grid(cells_sorted, means, gx0, gx1, gy0, gy1):
@@ -185,74 +184,65 @@ def local_match(
         grid[found] = means[pos[found]]
         return grid.reshape(len(gys), len(gxs))
 
-    def run(batches):
+    def k(raw, row):
         maps_l = b_maps.value
-        for pdf in batches:
-            out_bytes = []
-            for _, row in pdf.iterrows():
-                raw = codec.decode(bytes(row["bytes"]), row["fmt"])
-                src_dtype = raw.dtype
-                # gamma domain: dtype positive max for ints (255 on uint8 —
-                # the reference's domain, local_match.py:544-573), 1.0 for
-                # floats, `scale` overrides (ops.gamma_scale rule)
-                s = ops_mod.gamma_scale(src_dtype, scale)
-                img = raw.astype(np.float64)
-                nd = ops_mod.nodata_of(row, nodata_col)
-                h, w, nb = img.shape
-                # fractional GLOBAL tile coords of each pixel center
-                xs = row["lon"] + (np.arange(w) + 0.5) * RES_DEG
-                ys = row["lat"] + h * RES_DEG - (np.arange(h) + 0.5) * RES_DEG
-                fgx = (xs + 180.0) / 360.0 * n_grid - 0.5
-                fgy = (90.0 - ys) / 180.0 * n_grid - 0.5
-                fx = np.broadcast_to(fgx[None, :], (h, w))
-                fy = np.broadcast_to(fgy[:, None], (h, w))
-                out = img.copy()
-                # this image's covered tile window (+1 for the bilinear halo)
-                wx0 = int(np.clip(np.floor(fgx.min()), 0, n_grid - 1))
-                wx1 = int(np.clip(np.floor(fgx.max()) + 1, 0, n_grid - 1))
-                wy0 = int(np.clip(np.floor(fgy.min()), 0, n_grid - 1))
-                wy1 = int(np.clip(np.floor(fgy.max()) + 1, 0, n_grid - 1))
-                for b in range(nb):
-                    if b not in maps_l:
-                        continue
-                    cells_sorted, means = maps_l[b]
-                    grid = window_grid(cells_sorted, means, wx0, wx1, wy0, wy1)
-                    m_ref = _bilinear(grid, fy - wy0, fx - wx0)
-                    # local map: this image's own tile means on the fly
-                    # (nodata pixels contribute neither sum nor count)
-                    pc = _pixel_cells(row["lon"], row["lat"], h, w, z).ravel()
-                    uniq, inv = np.unique(pc, return_inverse=True)
-                    band_flat = img[:, :, b].ravel()
-                    vmask = (band_flat != nd) if nd is not None else np.ones(band_flat.shape, bool)
-                    sums = np.bincount(inv, weights=np.where(vmask, band_flat, 0.0))
-                    cnts = np.bincount(inv, weights=vmask.astype(np.float64))
-                    zz2, lgx, lgy = cells_mod.unpack(uniq)
-                    lgx0, lgy0 = int(lgx.min()), int(lgy.min())
-                    lgrid = np.full((int(lgy.max()) - lgy0 + 1, int(lgx.max()) - lgx0 + 1), np.nan)
-                    lgrid[lgy - lgy0, lgx - lgx0] = np.where(
-                        cnts > 0, sums / np.maximum(cnts, 1.0), np.nan
-                    )
-                    m_in = _bilinear(lgrid, fy - lgy0, fx - lgx0)
-                    # gamma in the normalized [0,1] domain; guard zeros/NaNs
-                    p = np.clip(img[:, :, b] / s, 1e-6, 1.0)
-                    mr = np.clip(m_ref / s, 1e-6, 1.0)
-                    mi = np.clip(m_in / s, 1e-6, 1.0)
-                    with np.errstate(invalid="ignore", divide="ignore"):
-                        gamma = np.log(mr) / np.log(mi)
-                    gamma = np.where(np.isfinite(gamma), gamma, 1.0)
-                    adj = alpha * np.power(p, gamma) * s
-                    keep = np.isnan(m_ref) | np.isnan(m_in)
-                    if nd is not None:
-                        keep |= img[:, :, b] == nd  # sentinel pixels pass through
-                    out[:, :, b] = np.where(keep, img[:, :, b], adj)
-                out_bytes.append(
-                    bytearray(codec.encode(ops_mod.restore_dtype(out, src_dtype), row["fmt"]))
-                )
-            pdf = pdf.copy()
-            pdf["bytes"] = out_bytes
-            yield pdf[[f.name for f in schema.fields]]
+        src_dtype = raw.dtype
+        # gamma domain: dtype positive max for ints (255 on uint8 — the
+        # reference's domain, local_match.py:544-573), 1.0 for floats,
+        # `scale` overrides (ops.gamma_scale rule)
+        s = ops_mod.gamma_scale(src_dtype, scale)
+        img = raw.astype(np.float64)
+        nd = ops_mod.nodata_of(row, nodata_col)
+        h, w, nb = img.shape
+        # fractional GLOBAL tile coords of each pixel center
+        xs = row["lon"] + (np.arange(w) + 0.5) * RES_DEG
+        ys = row["lat"] + h * RES_DEG - (np.arange(h) + 0.5) * RES_DEG
+        fgx = (xs + 180.0) / 360.0 * n_grid - 0.5
+        fgy = (90.0 - ys) / 180.0 * n_grid - 0.5
+        fx = np.broadcast_to(fgx[None, :], (h, w))
+        fy = np.broadcast_to(fgy[:, None], (h, w))
+        out = img.copy()
+        # this image's covered tile window (+1 for the bilinear halo)
+        wx0 = int(np.clip(np.floor(fgx.min()), 0, n_grid - 1))
+        wx1 = int(np.clip(np.floor(fgx.max()) + 1, 0, n_grid - 1))
+        wy0 = int(np.clip(np.floor(fgy.min()), 0, n_grid - 1))
+        wy1 = int(np.clip(np.floor(fgy.max()) + 1, 0, n_grid - 1))
+        for b in range(nb):
+            if b not in maps_l:
+                continue
+            cells_sorted, means = maps_l[b]
+            grid = window_grid(cells_sorted, means, wx0, wx1, wy0, wy1)
+            m_ref = _bilinear(grid, fy - wy0, fx - wx0)
+            # local map: this image's own tile means on the fly
+            # (nodata pixels contribute neither sum nor count)
+            pc = _pixel_cells(row["lon"], row["lat"], h, w, z).ravel()
+            uniq, inv = np.unique(pc, return_inverse=True)
+            band_flat = img[:, :, b].ravel()
+            vmask = (band_flat != nd) if nd is not None else np.ones(band_flat.shape, bool)
+            sums = np.bincount(inv, weights=np.where(vmask, band_flat, 0.0))
+            cnts = np.bincount(inv, weights=vmask.astype(np.float64))
+            zz2, lgx, lgy = cells_mod.unpack(uniq)
+            lgx0, lgy0 = int(lgx.min()), int(lgy.min())
+            lgrid = np.full((int(lgy.max()) - lgy0 + 1, int(lgx.max()) - lgx0 + 1), np.nan)
+            lgrid[lgy - lgy0, lgx - lgx0] = np.where(
+                cnts > 0, sums / np.maximum(cnts, 1.0), np.nan
+            )
+            m_in = _bilinear(lgrid, fy - lgy0, fx - lgx0)
+            # gamma in the normalized [0,1] domain; guard zeros/NaNs
+            p = np.clip(img[:, :, b] / s, 1e-6, 1.0)
+            mr = np.clip(m_ref / s, 1e-6, 1.0)
+            mi = np.clip(m_in / s, 1e-6, 1.0)
+            with np.errstate(invalid="ignore", divide="ignore"):
+                gamma = np.log(mr) / np.log(mi)
+            gamma = np.where(np.isfinite(gamma), gamma, 1.0)
+            adj = alpha * np.power(p, gamma) * s
+            keep = np.isnan(m_ref) | np.isnan(m_in)
+            if nd is not None:
+                keep |= img[:, :, b] == nd  # sentinel pixels pass through
+            out[:, :, b] = np.where(keep, img[:, :, b], adj)
+        return ops_mod.restore_dtype(out, src_dtype)
 
-    return images.mapInPandas(run, schema)
+    return ops_mod._transform_bytes(images, k)
 
 
 def local_match_mosaic(

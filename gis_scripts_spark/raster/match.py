@@ -37,6 +37,7 @@ from pyspark.sql.types import (
 from gis_scripts_spark.operators import overlap_join
 from gis_scripts_spark.raster import codec
 from gis_scripts_spark.raster import ops as ops_mod
+from gis_scripts_spark.rowmap import map_rows
 
 RES_DEG = 0.001  # degrees per pixel of the synthetic footprint model
 
@@ -123,30 +124,25 @@ def overlap_pair_stats(images: DataFrame, z: int = 10, nodata_col: str | None = 
     sel = ["image_id", "bytes", "fmt", "lon", "lat", "h"] + ([nodata_col] if nodata_col else [])
     joined = images.select(*sel).join(F.broadcast(wins), "image_id", "inner")
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                img = codec.decode(bytes(row["bytes"]), row["fmt"]).astype(np.float64)
-                nodata = ops_mod.nodata_of(row, nodata_col)
-                for wrec in row["_wins"]:
-                    win = _window(img, row["lon"], row["lat"], int(row["h"]),
-                                  wrec["ix_min"], wrec["iy_min"], wrec["ix_max"], wrec["iy_max"])
-                    if win.shape[0] == 0 or win.shape[1] == 0:
-                        continue
-                    for band in range(win.shape[2]):
-                        v = win[:, :, band].ravel()
-                        if nodata is not None:
-                            v = v[v != nodata]
-                        if v.size == 0:
-                            rows.append((wrec["id_i"], wrec["id_j"], int(wrec["side"]),
-                                         band, 0.0, 0.0, 0))
-                        else:
-                            rows.append((wrec["id_i"], wrec["id_j"], int(wrec["side"]),
-                                         band, float(v.mean()), float(v.std()), int(v.size)))
-            yield pd.DataFrame(rows, columns=[f.name for f in _SIDE_STATS_SCHEMA.fields])
+    def fn(row):
+        img = codec.decode(bytes(row["bytes"]), row["fmt"]).astype(np.float64)
+        nodata = ops_mod.nodata_of(row, nodata_col)
+        for wrec in row["_wins"]:
+            win = _window(img, row["lon"], row["lat"], int(row["h"]),
+                          wrec["ix_min"], wrec["iy_min"], wrec["ix_max"], wrec["iy_max"])
+            if win.shape[0] == 0 or win.shape[1] == 0:
+                continue
+            for band in range(win.shape[2]):
+                v = win[:, :, band].ravel()
+                if nodata is not None:
+                    v = v[v != nodata]
+                if v.size == 0:
+                    yield (wrec["id_i"], wrec["id_j"], int(wrec["side"]), band, 0.0, 0.0, 0)
+                else:
+                    yield (wrec["id_i"], wrec["id_j"], int(wrec["side"]),
+                           band, float(v.mean()), float(v.std()), int(v.size))
 
-    side_stats = joined.mapInPandas(run, _SIDE_STATS_SCHEMA)
+    side_stats = map_rows(joined, fn, _SIDE_STATS_SCHEMA)
     si = side_stats.filter(F.col("side") == 0).select(
         "id_i", "id_j", "band",
         F.col("mean").alias("mean_i"), F.col("std").alias("std_i"),
@@ -193,25 +189,19 @@ def overlap_pair_stats_joint(
     sel = ["image_id", "bytes", "fmt", "lon", "lat", "h", nodata_col]
     joined = images.select(*sel).join(F.broadcast(wins), "image_id", "inner")
 
-    def crops(batches):
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                img = codec.decode(bytes(row["bytes"]), row["fmt"]).astype(np.float32)
-                nd = ops_mod.nodata_of(row, nodata_col)
-                for wrec in row["_wins"]:
-                    win = _window(img, row["lon"], row["lat"], int(row["h"]),
-                                  wrec["ix_min"], wrec["iy_min"], wrec["ix_max"], wrec["iy_max"])
-                    if win.shape[0] == 0 or win.shape[1] == 0:
-                        continue
-                    rows.append(
-                        (wrec["id_i"], wrec["id_j"], int(wrec["side"]),
-                         win.shape[0], win.shape[1], win.shape[2],
-                         bytearray(np.ascontiguousarray(win).tobytes()), nd)
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in crop_schema.fields])
+    def crops(row):
+        img = codec.decode(bytes(row["bytes"]), row["fmt"]).astype(np.float32)
+        nd = ops_mod.nodata_of(row, nodata_col)
+        for wrec in row["_wins"]:
+            win = _window(img, row["lon"], row["lat"], int(row["h"]),
+                          wrec["ix_min"], wrec["iy_min"], wrec["ix_max"], wrec["iy_max"])
+            if win.shape[0] == 0 or win.shape[1] == 0:
+                continue
+            yield (wrec["id_i"], wrec["id_j"], int(wrec["side"]),
+                   win.shape[0], win.shape[1], win.shape[2],
+                   bytearray(np.ascontiguousarray(win).tobytes()), nd)
 
-    crop_df = joined.mapInPandas(crops, crop_schema)
+    crop_df = map_rows(joined, crops, crop_schema)
 
     def joint(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         rows = []

@@ -18,14 +18,11 @@ Reference parity (file:line cited per function):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     DoubleType,
     IntegerType,
     LongType,
@@ -35,6 +32,7 @@ from pyspark.sql.types import (
 )
 
 from gis_scripts_spark.raster import codec
+from gis_scripts_spark.rowmap import map_rows
 
 STATS_SCHEMA = StructType(
     [
@@ -49,24 +47,16 @@ STATS_SCHEMA = StructType(
 )
 
 
-def _transform_bytes(df: DataFrame, kernel, extra_cols: list[str] | None = None) -> DataFrame:
-    """Decode -> kernel(img, row) -> re-encode, preserving all columns.
-    kernel: (np.ndarray, pd.Series) -> np.ndarray (uint8)."""
-    schema = df.schema
-    cols = df.columns
+def _transform_bytes(df: DataFrame, kernel) -> DataFrame:
+    """Decode -> kernel(img, row) -> re-encode, preserving all columns: the
+    engine's one decode->kernel->re-encode stage. kernel: (np.ndarray, row
+    dict) -> np.ndarray."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_bytes = []
-            for _, row in pdf.iterrows():
-                img = codec.decode(bytes(row["bytes"]), row["fmt"])
-                img2 = kernel(img, row)
-                out_bytes.append(bytearray(codec.encode(img2, row["fmt"])))
-            pdf = pdf.copy()
-            pdf["bytes"] = out_bytes
-            yield pdf[cols]
+    def fn(row):
+        img = codec.decode(bytes(row["bytes"]), row["fmt"])
+        yield {**row, "bytes": bytearray(codec.encode(kernel(img, row), row["fmt"]))}
 
-    return df.mapInPandas(run, schema)
+    return map_rows(df, fn, df.schema)
 
 
 # ------------------------------------------------------------- transforms
@@ -145,39 +135,30 @@ def apply_linear(df: DataFrame, params: DataFrame, nodata_col: str | None = None
         )
     )
     joined = df.join(F.broadcast(p), "image_id", "left")
-    schema = df.schema
 
-    def run(batches):
-        for pdf in batches:
-            out_bytes = []
-            for _, row in pdf.iterrows():
-                img = codec.decode(bytes(row["bytes"]), row["fmt"])
-                ab = row["_ab"]
-                if ab is not None:
-                    nd = nodata_of(row, nodata_col)
-                    src = img
-                    out = img.astype(np.float64)
-                    for entry in ab:
-                        b_idx = int(entry["band"])
-                        if b_idx < out.shape[2]:
-                            band = out[:, :, b_idx]
-                            adj = entry["a"] * band + entry["b"]
-                            if nd is not None:
-                                adj = np.where(band == nd, band, adj)
-                            out[:, :, b_idx] = adj
-                    img = restore_dtype(out, src.dtype)
-                    if nd is not None:
-                        # integer clip must never eat the sentinel itself;
-                        # compare in FLOAT — casting an out-of-range sentinel
-                        # into src.dtype wraps (uint8(-9999) == 241) and would
-                        # alias a valid pixel value
-                        img = np.where(src.astype(np.float64) == nd, src, img)
-                out_bytes.append(bytearray(codec.encode(img, row["fmt"])))
-            pdf = pdf.copy()
-            pdf["bytes"] = out_bytes
-            yield pdf[[f.name for f in schema.fields]]
+    def k(img, row):
+        ab = row["_ab"]
+        if ab is None:
+            return img
+        nd = nodata_of(row, nodata_col)
+        out = img.astype(np.float64)
+        for entry in ab:
+            b_idx = int(entry["band"])
+            if b_idx < out.shape[2]:
+                band = out[:, :, b_idx]
+                adj = entry["a"] * band + entry["b"]
+                if nd is not None:
+                    adj = np.where(band == nd, band, adj)
+                out[:, :, b_idx] = adj
+        out = restore_dtype(out, img.dtype)
+        if nd is not None:
+            # integer clip must never eat the sentinel itself; compare in
+            # FLOAT — casting an out-of-range sentinel into img.dtype wraps
+            # (uint8(-9999) == 241) and would alias a valid pixel value
+            out = np.where(img.astype(np.float64) == nd, img, out)
+        return out
 
-    return joined.mapInPandas(run, schema)
+    return _transform_bytes(joined, k).select(*df.columns)
 
 
 def apply_gamma(
@@ -192,29 +173,21 @@ def apply_gamma(
     upstream). S = `scale` or the dtype default (gamma_scale). Source dtype
     preserved; nodata sentinels pass through."""
     joined = df.join(F.broadcast(gamma_by_image.select("image_id", "gamma")), "image_id", "left")
-    schema = df.schema
 
-    def run(batches):
-        for pdf in batches:
-            out_bytes = []
-            for _, row in pdf.iterrows():
-                img = codec.decode(bytes(row["bytes"]), row["fmt"])
-                g = row["gamma"]
-                if g is not None and not pd.isna(g):
-                    nd = nodata_of(row, nodata_col)
-                    s = gamma_scale(img.dtype, scale)
-                    f = img.astype(np.float64)
-                    with np.errstate(invalid="ignore"):
-                        scaled = alpha * np.power(np.maximum(f, 0.0) / s, float(g)) * s
-                    if nd is not None:
-                        scaled = np.where(f == nd, f, scaled)
-                    img = restore_dtype(scaled, img.dtype)
-                out_bytes.append(bytearray(codec.encode(img, row["fmt"])))
-            pdf = pdf.copy()
-            pdf["bytes"] = out_bytes
-            yield pdf[[f.name for f in schema.fields]]
+    def k(img, row):
+        g = row["gamma"]
+        if g is None or pd.isna(g):
+            return img
+        nd = nodata_of(row, nodata_col)
+        s = gamma_scale(img.dtype, scale)
+        f = img.astype(np.float64)
+        with np.errstate(invalid="ignore"):
+            scaled = alpha * np.power(np.maximum(f, 0.0) / s, float(g)) * s
+        if nd is not None:
+            scaled = np.where(f == nd, f, scaled)
+        return restore_dtype(scaled, img.dtype)
 
-    return joined.mapInPandas(run, schema)
+    return _transform_bytes(joined, k).select(*df.columns)
 
 
 def stretch_percentile(df: DataFrame, breakpoints: list[tuple[float, float]]) -> DataFrame:
@@ -270,7 +243,6 @@ def stretch_spectral(
     gaussian_filter step, here a separable symmetric-pad convolution since
     scipy is absent); `offset` added to valid pixels last. Nodata pixels
     keep their sentinel."""
-    sel_extra = [nodata_col] if nodata_col else []
 
     def gauss1d(arr, sigma, axis):
         radius = int(4.0 * sigma + 0.5)  # scipy truncate=4.0 convention
@@ -289,10 +261,7 @@ def stretch_spectral(
 
     def k(img, row):
         f = img.astype(np.float64)
-        nd = None
-        if nodata_col is not None:
-            v = row[nodata_col]
-            nd = float(v) if v is not None and not pd.isna(v) else None
+        nd = nodata_of(row, nodata_col)
         out = np.empty_like(f)
         for b in range(f.shape[2]):
             band = f[:, :, b]
@@ -317,7 +286,6 @@ def stretch_spectral(
             return np.clip(np.rint(out), info.min, info.max).astype(img.dtype)
         return out.astype(img.dtype)
 
-    _ = sel_extra  # nodata column rides the full-row passthrough
     return _transform_bytes(df, k)
 
 
@@ -362,28 +330,20 @@ def mask_by_binary_image(
         F.col("fmt").alias("_mask_fmt"),
     )
     joined = df.join(F.broadcast(m), "image_id", "left")
-    schema = df.schema
 
-    def run(batches):
-        for pdf in batches:
-            out_bytes = []
-            for _, row in pdf.iterrows():
-                img = codec.decode(bytes(row["bytes"]), row["fmt"])
-                if row["_mask_bytes"] is not None:
-                    mask = codec.decode(bytes(row["_mask_bytes"]), row["_mask_fmt"])[:, :, 0]
-                    hh = min(img.shape[0], mask.shape[0])
-                    ww = min(img.shape[1], mask.shape[1])
-                    out = img.copy()
-                    keep = mask[:hh, :ww] == np.asarray(mask_true, mask.dtype)
-                    region = out[:hh, :ww]
-                    region[~keep] = np.asarray(nodata, img.dtype)
-                    img = out
-                out_bytes.append(bytearray(codec.encode(img, row["fmt"])))
-            pdf = pdf.copy()
-            pdf["bytes"] = out_bytes
-            yield pdf[[f.name for f in schema.fields]]
+    def k(img, row):
+        if row["_mask_bytes"] is None:
+            return img
+        mask = codec.decode(bytes(row["_mask_bytes"]), row["_mask_fmt"])[:, :, 0]
+        hh = min(img.shape[0], mask.shape[0])
+        ww = min(img.shape[1], mask.shape[1])
+        out = img.copy()
+        keep = mask[:hh, :ww] == np.asarray(mask_true, mask.dtype)
+        region = out[:hh, :ww]
+        region[~keep] = np.asarray(nodata, img.dtype)
+        return out
 
-    return joined.mapInPandas(run, schema)
+    return _transform_bytes(joined, k).select(*df.columns)
 
 
 def replace_connected(df: DataFrame, find: int, replace: int, min_size: int, connectivity: int = 4) -> DataFrame:
@@ -532,28 +492,19 @@ def band_stats(
     parity with ``mask_i = band_data_i != nodata_i``."""
     sel = ["image_id", "bytes", "fmt"] + ([nodata_col] if nodata_col else [])
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                img = codec.decode(bytes(row["bytes"]), row["fmt"]).astype(np.float64)
-                nd = nodata
-                if nodata_col is not None:
-                    v = row[nodata_col]
-                    nd = float(v) if v is not None and not pd.isna(v) else None
-                for b in range(img.shape[2]):
-                    band = img[:, :, b]
-                    valid = band[band != nd] if nd is not None else band.ravel()
-                    if valid.size == 0:
-                        rows.append((row["image_id"], b, 0.0, 0.0, 0.0, 0.0, 0))
-                    else:
-                        rows.append(
-                            (row["image_id"], b, float(valid.mean()), float(valid.std()),
-                             float(valid.min()), float(valid.max()), int(valid.size))
-                        )
-            yield pd.DataFrame(rows, columns=["image_id", "band", "mean", "std", "min", "max", "n_valid"])
+    def fn(row):
+        img = codec.decode(bytes(row["bytes"]), row["fmt"]).astype(np.float64)
+        nd = nodata if nodata_col is None else nodata_of(row, nodata_col)
+        for b in range(img.shape[2]):
+            band = img[:, :, b]
+            valid = band[band != nd] if nd is not None else band.ravel()
+            if valid.size == 0:
+                yield (row["image_id"], b, 0.0, 0.0, 0.0, 0.0, 0)
+            else:
+                yield (row["image_id"], b, float(valid.mean()), float(valid.std()),
+                       float(valid.min()), float(valid.max()), int(valid.size))
 
-    return df.select(*sel).mapInPandas(run, STATS_SCHEMA)
+    return map_rows(df.select(*sel), fn, STATS_SCHEMA)
 
 
 PRED_SCHEMA = StructType(
@@ -589,25 +540,19 @@ def predicate_counts(df: DataFrame, conditions: list) -> DataFrame:
     names = ["&".join(c) for c in norm]
     preds = [[parse_predicate(x) for x in c] for c in norm]
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                img = codec.decode(bytes(row["bytes"]), row["fmt"]).astype(np.float64)
-                for b in range(img.shape[2]):
-                    band = img[:, :, b].ravel()
-                    for name, plist in zip(names, preds):
-                        m = np.ones(band.shape, bool)
-                        for p in plist:
-                            m &= p(band)
-                        sel = band[m]
-                        rows.append(
-                            (row["image_id"], b, name, int(m.sum()),
-                             float(sel.std()) if sel.size else 0.0, int(band.size))
-                        )
-            yield pd.DataFrame(rows, columns=["image_id", "band", "condition", "n_match", "std_match", "n_total"])
+    def fn(row):
+        img = codec.decode(bytes(row["bytes"]), row["fmt"]).astype(np.float64)
+        for b in range(img.shape[2]):
+            band = img[:, :, b].ravel()
+            for name, plist in zip(names, preds):
+                m = np.ones(band.shape, bool)
+                for p in plist:
+                    m &= p(band)
+                sel = band[m]
+                yield (row["image_id"], b, name, int(m.sum()),
+                       float(sel.std()) if sel.size else 0.0, int(band.size))
 
-    return df.select("image_id", "bytes", "fmt").mapInPandas(run, PRED_SCHEMA)
+    return map_rows(df.select("image_id", "bytes", "fmt"), fn, PRED_SCHEMA)
 
 
 def predicate_rollup(stats: DataFrame) -> DataFrame:

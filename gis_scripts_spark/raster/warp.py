@@ -13,7 +13,6 @@ treating geometry as relational data.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BinaryType,
@@ -28,6 +27,7 @@ from gis_scripts_spark.index import proj
 from gis_scripts_spark.raster import codec
 from gis_scripts_spark.raster import ops as ops_mod
 from gis_scripts_spark.raster.match import RES_DEG
+from gis_scripts_spark.rowmap import map_rows
 
 WARP_SCHEMA = StructType(
     [
@@ -161,33 +161,22 @@ def reproject_raster(
     meters/pixel. Output bytes are RAW1 (dtype-preserving)."""
     sel = ["image_id", "bytes", "fmt", "lon", "lat"] + ([nodata_col] if nodata_col else [])
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                img = codec.decode(bytes(row["bytes"]), row["fmt"])
-                nd = ops_mod.nodata_of(row, nodata_col)
-                warped, x0, y1 = _warp_one(
-                    img, float(row["lon"]), float(row["lat"]), crs, res_m, nd, method
-                )
-                rows.append(
-                    {
-                        "image_id": row["image_id"],
-                        "bytes": bytearray(codec.raw_encode(warped)),
-                        "w": warped.shape[1],
-                        "h": warped.shape[0],
-                        "fmt": "raw",
-                        "crs": crs,
-                        "x0": x0,
-                        "y0": y1,
-                        "res": float(res_m),
-                        "nodata": nd,
-                        "bands": warped.shape[2],
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in WARP_SCHEMA.fields])
+    def fn(row):
+        img = codec.decode(bytes(row["bytes"]), row["fmt"])
+        nd = ops_mod.nodata_of(row, nodata_col)
+        warped, x0, y1 = _warp_one(
+            img, float(row["lon"]), float(row["lat"]), crs, res_m, nd, method
+        )
+        yield _warped_row(row["image_id"], warped, crs, x0, y1, res_m, nd)
 
-    return images.select(*sel).mapInPandas(run, WARP_SCHEMA)
+    return map_rows(images.select(*sel), fn, WARP_SCHEMA)
+
+
+def _warped_row(image_id, warped: np.ndarray, crs: str, x0: float, y1: float,
+                res: float, nd: float | None) -> tuple:
+    """One WARP_SCHEMA row: the RAW1 warped image and its geotransform."""
+    return (image_id, bytearray(codec.raw_encode(warped)), warped.shape[1],
+            warped.shape[0], "raw", crs, x0, y1, float(res), nd, warped.shape[2])
 
 
 def reproject_raster_rpc(
@@ -207,29 +196,11 @@ def reproject_raster_rpc(
     mapInPandas, bytes never shuffle."""
     sel = ["image_id", "bytes", "fmt", rpc_col] + ([nodata_col] if nodata_col else [])
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                img = codec.decode(bytes(row["bytes"]), row["fmt"])
-                nd = ops_mod.nodata_of(row, nodata_col)
-                rpc = proj.rpc_unpack(np.asarray(row[rpc_col], np.float64))
-                warped, x0, y1 = _warp_one_rpc(img, rpc, res_deg, height, nd, method)
-                rows.append(
-                    {
-                        "image_id": row["image_id"],
-                        "bytes": bytearray(codec.raw_encode(warped)),
-                        "w": warped.shape[1],
-                        "h": warped.shape[0],
-                        "fmt": "raw",
-                        "crs": "lonlat",
-                        "x0": x0,
-                        "y0": y1,
-                        "res": float(res_deg),
-                        "nodata": nd,
-                        "bands": warped.shape[2],
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in WARP_SCHEMA.fields])
+    def fn(row):
+        img = codec.decode(bytes(row["bytes"]), row["fmt"])
+        nd = ops_mod.nodata_of(row, nodata_col)
+        rpc = proj.rpc_unpack(np.asarray(row[rpc_col], np.float64))
+        warped, x0, y1 = _warp_one_rpc(img, rpc, res_deg, height, nd, method)
+        yield _warped_row(row["image_id"], warped, "lonlat", x0, y1, res_deg, nd)
 
-    return images.select(*sel).mapInPandas(run, WARP_SCHEMA)
+    return map_rows(images.select(*sel), fn, WARP_SCHEMA)

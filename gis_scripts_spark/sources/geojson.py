@@ -44,6 +44,7 @@ from pyspark.sql.types import (
 )
 
 from gis_scripts_spark.geom import wkb as wkb_mod
+from gis_scripts_spark.rowmap import map_rows
 
 _RS = "\x1e"  # RFC 8142 record separator, optional per spec
 
@@ -167,28 +168,21 @@ def read_geojson_seq(spark: SparkSession, path_glob: str) -> DataFrame:
     under a parallel scan; identify features by their properties.
     """
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for line in pdf["value"]:
-                line = line.strip().lstrip(_RS)
-                if not line:
-                    continue
-                doc = json.loads(line)
-                if doc.get("type") == "Feature":
-                    geom, props = doc.get("geometry"), doc.get("properties") or {}
-                else:
-                    geom, props = doc, {}
-                if geom is None:
-                    raise ValueError("feature has null geometry")
-                gtype, buf = geometry_to_wkb(geom)
-                rows.append((gtype, buf, json.dumps(props, sort_keys=True)))
-            yield pd.DataFrame(
-                rows, columns=["geom_type", "wkb", "properties"]
-            ) if rows else pd.DataFrame({f.name: [] for f in _SEQ_SCHEMA.fields})
+    def fn(row):
+        line = row["value"].strip().lstrip(_RS)
+        if not line:
+            return
+        doc = json.loads(line)
+        if doc.get("type") == "Feature":
+            geom, props = doc.get("geometry"), doc.get("properties") or {}
+        else:
+            geom, props = doc, {}
+        if geom is None:
+            raise ValueError("feature has null geometry")
+        gtype, buf = geometry_to_wkb(geom)
+        yield (gtype, buf, json.dumps(props, sort_keys=True))
 
-    lines = spark.read.text(path_glob)
-    return lines.mapInPandas(run, _SEQ_SCHEMA)
+    return map_rows(spark.read.text(path_glob), fn, _SEQ_SCHEMA)
 
 
 # ------------------------------------------------------------------- write
@@ -213,19 +207,15 @@ def write_geojson_seq(
 
     out_schema = StructType([StructField("value", StringType(), False)])
 
-    def run(batches):
-        for pdf in batches:
-            lines = []
-            for _, row in pdf.iterrows():
-                feat = {
-                    "type": "Feature",
-                    "geometry": wkb_to_geometry(bytes(row[geometry_col])),
-                    "properties": {c: _jsonable(row[c]) for c in prop_cols},
-                }
-                lines.append(json.dumps(feat, sort_keys=True))
-            yield pd.DataFrame({"value": lines})
+    def fn(row):
+        feat = {
+            "type": "Feature",
+            "geometry": wkb_to_geometry(bytes(row[geometry_col])),
+            "properties": {c: _jsonable(row[c]) for c in prop_cols},
+        }
+        yield (json.dumps(feat, sort_keys=True),)
 
-    df.mapInPandas(run, out_schema).write.mode(mode).text(path)
+    map_rows(df, fn, out_schema).write.mode(mode).text(path)
 
 
 def _jsonable(v):

@@ -16,6 +16,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gis_scripts_spark.rowmap import map_rows
+
 
 def manifest_scan(spark: SparkSession, path_glob: str, suffix: str | None = None) -> DataFrame:
     """(path, modificationTime, length) manifest of files under a glob —
@@ -65,10 +67,8 @@ def ingest_geotiffs(spark: SparkSession, path_glob: str) -> DataFrame:
     parses the header (pure-numpy geotiff codec — no GDAL in the sandbox),
     re-encodes pixels as RAW1 (dtype-preserving) and lifts the geo tags
     (ModelTiepoint origin -> lon/lat, GDAL nodata) into ordinary columns.
-    Files the codec cannot parse are skipped with a `decode_error` row kept
-    in the errors frame semantics of the reference's try/except loops."""
-    import numpy as np
-    import pandas as pd
+    Files the codec cannot parse are skipped, as the reference's
+    try/except loops skip them; no error row is kept."""
     from pyspark.sql.types import (
         BinaryType,
         DoubleType,
@@ -96,39 +96,25 @@ def ingest_geotiffs(spark: SparkSession, path_glob: str) -> DataFrame:
         ]
     )
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                try:
-                    img, meta = geotiff.tiff_decode(bytes(row["bytes"]))
-                except (ValueError, NotImplementedError):
-                    continue
-                h, w = img.shape[:2]
-                tp = meta.get("tiepoint")
-                scale = meta.get("pixel_scale", (RES_DEG, RES_DEG, 0.0))
-                if tp is not None:
-                    # tiepoint anchors raster (i,j) -> model (x,y); origin is
-                    # the TOP-left corner, footprint model wants BOTTOM-left
-                    lon = float(tp[3]) - float(tp[0]) * float(scale[0])
-                    lat = float(tp[4]) - (h - float(tp[1])) * float(scale[1])
-                else:
-                    lon, lat = 0.0, 0.0
-                rows.append(
-                    {
-                        "image_id": os.path.basename(str(row["path"])),
-                        "bytes": bytearray(codec_mod.raw_encode(img)),
-                        "w": w, "h": h, "fmt": "raw",
-                        "lon": lon, "lat": lat,
-                        "nodata": meta.get("nodata"),
-                        "bands": img.shape[2],
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+    def fn(row):
+        try:
+            img, meta = geotiff.tiff_decode(bytes(row["bytes"]))
+        except (ValueError, NotImplementedError):
+            return
+        h, w = img.shape[:2]
+        tp = meta.get("tiepoint")
+        scale = meta.get("pixel_scale", (RES_DEG, RES_DEG, 0.0))
+        if tp is not None:
+            # tiepoint anchors raster (i,j) -> model (x,y); origin is the
+            # TOP-left corner, footprint model wants BOTTOM-left
+            lon = float(tp[3]) - float(tp[0]) * float(scale[0])
+            lat = float(tp[4]) - (h - float(tp[1])) * float(scale[1])
+        else:
+            lon, lat = 0.0, 0.0
+        yield (os.path.basename(str(row["path"])), bytearray(codec_mod.raw_encode(img)),
+               w, h, "raw", lon, lat, meta.get("nodata"), img.shape[2])
 
-    files = read_binary_files(spark, path_glob)
-    _ = np
-    return files.mapInPandas(run, schema)
+    return map_rows(read_binary_files(spark, path_glob), fn, schema)
 
 
 def export_cog(
@@ -147,7 +133,6 @@ def export_cog(
     carrying lon/lat become the ModelTiepoint origin; a nodata column is
     written as the GDAL nodata tag. Bytes never touch the driver — the
     encode+write runs inside mapInPandas, one image per call."""
-    import pandas as pd
     from pyspark.sql.types import (
         IntegerType,
         LongType,
@@ -158,6 +143,7 @@ def export_cog(
 
     from gis_scripts_spark.raster import codec as codec_mod
     from gis_scripts_spark.raster import geotiff
+    from gis_scripts_spark.raster.ops import nodata_of
 
     has_geo = "lon" in df.columns and "lat" in df.columns
     has_nodata = "nodata" in df.columns
@@ -175,38 +161,24 @@ def export_cog(
         ]
     )
 
-    def run(batches):
+    def fn(r):
+        img = codec_mod.decode(bytes(r["bytes"]), r["fmt"])
+        tp = None
+        if has_geo:
+            # engine rows anchor at the BOTTOM-left (see ingest_geotiffs);
+            # the TIFF tiepoint is the TOP-left
+            top_lat = float(r["lat"]) + img.shape[0] * pixel_scale[1]
+            tp = (0.0, 0.0, 0.0, float(r["lon"]), top_lat, 0.0)
+        buf = geotiff.cog_encode(
+            img, tile=tile, compress=compress, pixel_scale=pixel_scale, tiepoint=tp,
+            nodata=nodata_of(r, "nodata" if has_nodata else None),
+        )
         os.makedirs(out_dir, exist_ok=True)
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                img = codec_mod.decode(bytes(r["bytes"]), r["fmt"])
-                tp = None
-                if has_geo:
-                    # engine rows anchor at the BOTTOM-left (see
-                    # ingest_geotiffs); the TIFF tiepoint is the TOP-left
-                    top_lat = float(r["lat"]) + img.shape[0] * pixel_scale[1]
-                    tp = (0.0, 0.0, 0.0, float(r["lon"]), top_lat, 0.0)
-                nd = None
-                if has_nodata and r["nodata"] == r["nodata"] and r["nodata"] is not None:
-                    nd = float(r["nodata"])
-                buf = geotiff.cog_encode(
-                    img, tile=tile, compress=compress,
-                    pixel_scale=pixel_scale, tiepoint=tp, nodata=nd,
-                )
-                path = os.path.join(out_dir, f"{r['image_id']}.tif")
-                tmp = path + "._tmp"
-                with open(tmp, "wb") as f:
-                    f.write(buf)
-                os.replace(tmp, path)
-                rows.append(
-                    {
-                        "image_id": r["image_id"],
-                        "path": path,
-                        "n_levels": len(geotiff.tiff_levels(buf)),
-                        "bytes_written": len(buf),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        path = os.path.join(out_dir, f"{r['image_id']}.tif")
+        tmp = path + "._tmp"
+        with open(tmp, "wb") as f:
+            f.write(buf)
+        os.replace(tmp, path)
+        yield (r["image_id"], path, len(geotiff.tiff_levels(buf)), len(buf))
 
-    return df.select(*cols).mapInPandas(run, schema)
+    return map_rows(df.select(*cols), fn, schema)

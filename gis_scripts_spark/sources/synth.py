@@ -31,6 +31,7 @@ from pyspark.sql.types import (
 
 from gis_scripts_spark.geom import wkb as wkb_mod
 from gis_scripts_spark.raster import codec
+from gis_scripts_spark.rowmap import map_rows
 
 IMAGE_SCHEMA = StructType(
     [
@@ -163,15 +164,10 @@ def images_df(
 ) -> DataFrame:
     """Distributed deterministic image table of n rows."""
 
-    def gen(batches):
-        for pdf in batches:
-            rows = [make_image_row(int(i), seed, sizes, fmts, dup_every) for i in pdf["id"]]
-            out = pd.DataFrame(rows)
-            out["bytes"] = out["bytes"].map(bytearray)
-            yield out
+    def gen(row):
+        yield make_image_row(int(row["id"]), seed, sizes, fmts, dup_every)
 
-    rng_df = spark.range(0, n, 1, parts or max(8, n // 2000))
-    return rng_df.mapInPandas(gen, IMAGE_SCHEMA)
+    return map_rows(spark.range(0, n, 1, parts or max(8, n // 2000)), gen, IMAGE_SCHEMA)
 
 
 # ------------------------------------------------------------- AOI polygons

@@ -54,6 +54,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from gis_scripts_spark.rowmap import map_rows
+
 _EOCD = b"PK\x05\x06"
 _Z64_EOCD = b"PK\x06\x06"
 _Z64_LOC = b"PK\x06\x07"
@@ -345,18 +347,10 @@ def worldview_manifest(spark: SparkSession, zip_path: str,
 
     xmls = zip_extract(zip_manifest(spark, zip_path), zip_path, pattern=xml_glob)
 
-    def parse(batches):
-        for pdf in batches:
-            rows = {k: [] for k in ("directory", "satid", "tlctime", "cloudcover")}
-            coords = {t.lower(): [] for t in _WV_TAGS[3:]}
-            for _, r in pdf.iterrows():
-                root = ET.fromstring(bytes(r["content"]).decode("utf-8"))
-                rows["directory"].append(posixpath.dirname(r["name"]))
-                rows["satid"].append(_first_tag(root, "SATID"))
-                rows["tlctime"].append(_first_tag(root, "TLCTIME"))
-                rows["cloudcover"].append(float(_first_tag(root, "CLOUDCOVER")))
-                for t in _WV_TAGS[3:]:
-                    coords[t.lower()].append(float(_first_tag(root, t)))
-            yield pd.DataFrame({**rows, **coords})
+    def parse(r):
+        root = ET.fromstring(bytes(r["content"]).decode("utf-8"))
+        yield (posixpath.dirname(r["name"]), _first_tag(root, "SATID"),
+               _first_tag(root, "TLCTIME"),
+               *(float(_first_tag(root, t)) for t in _WV_TAGS[2:]))
 
-    return xmls.mapInPandas(parse, _WV_SCHEMA)
+    return map_rows(xmls, parse, _WV_SCHEMA)

@@ -126,7 +126,13 @@ def _metric_ms(text: str | None) -> float:
 def python_worker_s(spark, job_list: list[dict]) -> float:
     """Seconds of `time to run Python workers` in the SQL executions that
     ran `job_list`'s jobs. Executions are paged newest first and the walk
-    stops at a page that ended before the first job started."""
+    stops at a page that ended before the first job started.
+
+    The metric nests: within one stage, each Python node's time includes
+    that of the Python nodes upstream of it, which it waits on for its
+    input. A chain of k equally costly nodes in one stage therefore sums
+    to about k(k+1)/2 times their own work, and can exceed the tasks' run
+    time."""
     if not job_list:
         return 0.0
     sc = spark.sparkContext

@@ -103,6 +103,16 @@ def test_knn_haversine_plan_has_no_python(spark, images_parquet):
     assert not re.findall(r"\w*(?:Python|Pandas|Arrow)\w*", plans)
 
 
+def test_image_features_plans_one_mapinpandas(spark, images_parquet):
+    """A map_rows stage is one mapInPandas: image_features plans exactly
+    one MapInPandas node and no other Python node."""
+    from gis_scripts_spark.operators import multimodal as mm
+
+    out = mm.image_features(spark.read.parquet(images_parquet))
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert re.findall(r"\w*(?:Python|Pandas|Arrow)\w*", plan) == ["MapInPandas"], plan
+
+
 def test_bbox_overlap_join_plan_has_no_python(spark):
     """The box cover is Column math: no Python node anywhere in the
     bbox_overlap_join plan, from the parsed plan to the executed one."""

@@ -1,7 +1,9 @@
 """Per-task metrics read from Spark's status store under a job tag."""
 
 import glob
+import importlib.util
 import os
+import time
 
 from pyspark.sql import functions as F
 
@@ -87,3 +89,35 @@ def test_skipped_stage_and_retried_attempt(spark):
     assert any(r["status"] != "SUCCESS" for r in rows)
     done = [(r["stage_id"], r["partition_id"]) for r in rows if r["status"] == "SUCCESS"]
     assert len(done) == len(set(done))
+
+
+def test_chained_python_nodes_nest_and_leave_jvm_time_unknown(spark):
+    """Within one stage each mapInPandas node's `time to run Python
+    workers` includes the nodes upstream of it, so three chained nodes
+    read more than the tasks' run time; the layer record then has no JVM
+    share instead of a clipped 0."""
+    spec = importlib.util.spec_from_file_location(
+        "layers_tool", os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools", "layers.py")
+    )
+    layers = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(layers)
+
+    def slow(batches):
+        import time
+
+        for pdf in batches:
+            time.sleep(0.4)
+            yield pdf
+
+    sc = spark.sparkContext
+    df = spark.range(0, 100, 1, 2)
+    for _ in range(3):
+        df = df.mapInPandas(slow, df.schema)
+    with taskmetrics.label(sc, "tm-chain") as tag:
+        t0 = time.time()
+        df.agg(F.sum("id")).collect()
+        t1 = time.time()
+    rec = layers.leaf_record(spark, tag, t0, t1)
+    assert rec["python_worker_s"] > rec["executor_run_s"]
+    assert rec["jvm_s"] is None
+    assert layers.diff({"leaves": {"q": rec}}, {"leaves": {"q": rec}})["q"]["jvm_s"] is None

@@ -35,6 +35,12 @@ QUERIES = [
     "phash_neardup_pairs",  # bytes pipeline: DCT pHash bit-for-bit
     "streaming_windowed_zonal",  # micro-batched stream: event-time result is parallelism-invariant
     "simhash_pairs",      # one-word band join: refine inside the join stage
+    # per-row rowmap.map_rows stages: warp, decode/encode, sampling, STFT
+    "reproject_utm",
+    "image_pipeline_zonal",
+    "cog_roundtrip",
+    "video_frames",
+    "audio_spectral",
 ]
 
 

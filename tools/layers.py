@@ -15,9 +15,10 @@ Per leaf the record holds, from Spark's own status store
   jobs, stages, tasks           what ran (stages that ran at least one task)
   executor_run_s/_cpu_s, gc_s   summed over the tasks
   python_worker_s               the SQL metric `time to run Python workers`
-  jvm_s                         executor_run_s - python_worker_s, at least 0
-                                (the SQL metric can exceed the tasks' run
-                                time when a stage holds several Python nodes)
+  jvm_s                         executor_run_s - python_worker_s, or null
+                                when the SQL metric exceeds the tasks' run
+                                time (chained Python nodes in one stage each
+                                count the nodes upstream of them)
   shuffle_read_mb/_write_mb, spill_mb
   wall_s                        the forced run, measured on the driver
   job_s, stage_s                union of the job / stage-attempt intervals
@@ -30,7 +31,7 @@ Writes BENCH/layers_<tag>.json, the tag being the sf directory's name;
 a run of every leaf also records bench.py's host_calibration probe.
 Leaves named on the command line also get their formatted plan written to
 plans/<tag>/<leaf>.txt. ``--diff`` prints NEW minus OLD for every numeric
-field of every leaf both records hold.
+field of every leaf both records hold (null where either side is null).
 """
 
 from __future__ import annotations
@@ -86,7 +87,7 @@ def leaf_record(spark, tag: str, t0: float, t1: float) -> dict:
         "executor_cpu_s": sum(t["cpu_s"] for t in tasks),
         "gc_s": sum(t["gc_s"] for t in tasks),
         "python_worker_s": py_s,
-        "jvm_s": max(0.0, run_s - py_s),
+        "jvm_s": run_s - py_s if py_s <= run_s else None,
         "shuffle_read_mb": sum(t["shuffle_read_bytes"] for t in tasks) / _MB,
         "shuffle_write_mb": sum(t["shuffle_write_bytes"] for t in tasks) / _MB,
         "spill_mb": sum(t["spill_bytes"] for t in tasks) / _MB,
@@ -123,7 +124,8 @@ def run(leaves: list[str], sf_dir: str, plans_dir: str | None) -> dict:
             bench.force(fn(spark, sf_dir))
             t1 = time.time()
         out[leaf] = leaf_record(spark, tag, t0, t1)
-        print(leaf, json.dumps({k: round(v, 3) for k, v in out[leaf].items()}), flush=True)
+        print(leaf, json.dumps({k: v if v is None else round(v, 3)
+                                for k, v in out[leaf].items()}), flush=True)
     idle = [(r["wall_s"] - r["stage_s"] - r["driver_gap_s"], r["wall_s"]) for r in out.values()]
     return {
         "sf_dir": sf_dir,
@@ -136,9 +138,13 @@ def run(leaves: list[str], sf_dir: str, plans_dir: str | None) -> dict:
     }
 
 
+def _sub(a, b):
+    return None if a is None or b is None else a - b
+
+
 def diff(old: dict, new: dict) -> dict:
     return {
-        leaf: {k: v - old["leaves"][leaf][k] for k, v in rec.items() if k in old["leaves"][leaf]}
+        leaf: {k: _sub(v, old["leaves"][leaf][k]) for k, v in rec.items() if k in old["leaves"][leaf]}
         for leaf, rec in new["leaves"].items()
         if leaf in old["leaves"]
     }
