@@ -9,24 +9,32 @@ Replaces the reference's zonal containment (``Assess_Agreement.R:45-57``
      inside the polygon; a NULL WKB covers no cell. ``build_cover_df`` is
      the engine's one WKB->cover path (coverage_join covers footprints with
      it). Points get the same cell key as one SQL expression.
-     The join is then a cell equi-join — broadcast-hash when the layer's
-     WKB bytes fit ``repart.fits_broadcast`` (AOI/admin layers),
-     shuffle-hash otherwise.
-  2. EXACT: boundary cells (`full = false`) run the exact ray-casting test
-     inside an Arrow-batched pandas UDF; `full = true` cells skip it
-     entirely (the dominant fraction for large polygons).
+     When the layer's WKB bytes fit ``repart.fits_broadcast`` (AOI/admin
+     layers) this phase is a closure lookup, not a join: one Arrow UDF
+     holds the cover sorted by cell and finds each point's cover range
+     with a binary search, in the same ArrowEvalPython node as any
+     upstream Arrow UDF (assign_tiles' S2/hex7 encodes), and an explode
+     turns its hits into rows. Past the bound it is a shuffle-hash cell
+     equi-join.
+  2. EXACT: boundary cells (`full = false`) run the exact ray-casting test,
+     in the lookup itself once per polygon per batch, or in an
+     Arrow-batched pandas UDF after the shuffle join; `full = true` cells
+     skip it entirely (the dominant fraction for large polygons).
 
-At 100 TB the only shuffled payload is (point key, lon, lat, cell) — never
-image bytes; polygon WKB rides the broadcast.
+At 100 TB the lookup ships (cell, lon, lat) of every point to Python,
+24 bytes a row, and nothing is shuffled; the shuffle regime's only
+shuffled payload is (point key, lon, lat, cell) — never image bytes.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType, LongType, StructField, StructType
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import ArrayType, BooleanType, LongType, StructField, StructType
 
 from gis_scripts_spark.geom import core as geom
 from gis_scripts_spark.geom import wkb as wkb_mod
@@ -87,24 +95,55 @@ def build_cover_df(
     return polys_df.select(poly_id, wkb_col).mapInPandas(gen, _cover_schema(polys_df, poly_id))
 
 
-def _pip_check_udf(wkb_by_poly: dict):
-    """Exact-containment pandas UDF over (poly_id, lon, lat) with the WKB
-    dict captured in the closure (small AOI layers; the generic path carries
-    a wkb column instead — see exact_check_with_wkb)."""
+def _sorted_cover(ids, wkbs, z: int):
+    """The broadcast-regime lookup table of a layer: its cover sorted by
+    cell (cells, polygon index, `full` flags), then the polygon ids and
+    the decoded polygons, both by polygon index."""
+    cover = _cover_frame(range(len(ids)), wkbs, z).sort_values("cell", kind="stable")
+    return (
+        cover["cell"].to_numpy(np.int64),
+        cover["poly_id"].to_numpy(np.int64),
+        cover["full"].to_numpy(bool),
+        ids,
+        [wkb_mod.from_wkb(bytes(b)) if b is not None else [] for b in wkbs],
+    )
 
-    @F.pandas_udf(BooleanType())
-    def pip_check(poly_id: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Series:
-        out = np.zeros(len(poly_id), dtype=bool)
-        px = lon.to_numpy(np.float64)
-        py = lat.to_numpy(np.float64)
-        # group rows by polygon so each polygon is decoded + tested once
-        for pid, idx in pd.Series(range(len(poly_id))).groupby(poly_id.values).groups.items():
-            polys = wkb_by_poly[pid]
-            ii = np.asarray(idx)
-            out[ii] = geom.points_in_multipolygon(px[ii], py[ii], polys)
-        return pd.Series(out)
 
-    return pip_check
+def _pip_hits_udf(table, id_type):
+    """Arrow UDF (cell, lon, lat) -> array<poly_id> over one layer's
+    `_sorted_cover` table held in the closure: each row's candidates are
+    its cell's cover range, a `full` cell is a hit without a test, and
+    each polygon runs the exact test once per batch on its boundary
+    candidates.
+
+    Marked nondeterministic only so the optimizer keeps the explode's
+    `size(hits) > 0` filter above the projection: pushed below it, the
+    filter re-derives the lookup and the plan runs it in a second
+    ArrowEvalPython."""
+    cells, poly_idx, full, ids, polys = table
+    id_arr = pa.array(ids, type=to_arrow_type(id_type))
+
+    def pip_hits(cell: pa.Array, lon: pa.Array, lat: pa.Array) -> pa.Array:
+        c = cell.fill_null(-1).to_numpy()
+        lo = np.searchsorted(cells, c, "left")
+        n = np.searchsorted(cells, c, "right") - lo
+        # one (row, cover index) pair per candidate, rows in order
+        row = np.repeat(np.arange(len(c)), n)
+        cand = np.arange(len(row)) - np.repeat(np.cumsum(n) - n, n) + np.repeat(lo, n)
+        hit = full[cand]
+        check = np.nonzero(~hit)[0]
+        if len(check):
+            px = lon.to_numpy(zero_copy_only=False)[row[check]]
+            py = lat.to_numpy(zero_copy_only=False)[row[check]]
+            pid = poly_idx[cand[check]]
+            order = np.argsort(pid, kind="stable")
+            for grp in np.split(order, np.flatnonzero(np.diff(pid[order])) + 1):
+                hit[check[grp]] = geom.points_in_multipolygon(px[grp], py[grp], polys[pid[grp[0]]])
+        offsets = np.zeros(len(c) + 1, np.int32)
+        np.cumsum(np.bincount(row[hit], minlength=len(c)), out=offsets[1:])
+        return pa.ListArray.from_arrays(pa.array(offsets), id_arr.take(poly_idx[cand[hit]]))
+
+    return F.arrow_udf(pip_hits, ArrayType(id_type)).asNondeterministic()
 
 
 @F.pandas_udf(BooleanType())
@@ -163,15 +202,16 @@ def pip_join(
 
     Regime: one aggregate job sums the layer's WKB bytes and counts and
     fingerprints its rows (no WKB reaches the driver). Within
-    ``repart.fits_broadcast`` the cover is broadcast and the exact check
-    reads the decoded polygons from its closure; both are cached per
-    layer content and zoom, so only a cache miss collects the polygon
-    rows. Past the bound the cover is built distributed and the WKB rides
-    the shuffle-hash cell join.
+    ``repart.fits_broadcast`` the cover, sorted by cell, and the decoded
+    polygons ride the lookup UDF's closure; both are cached per layer
+    content and zoom, so only a cache miss collects the polygon rows.
+    Past the bound the cover is built distributed and the WKB rides the
+    shuffle-hash cell join.
 
-    `salt` + `hot_cells`: replicate cover rows of hot cells `salt` ways and
-    spread their points across replicas via a deterministic hash — the skew
-    escape hatch when one cell dwarfs AQE's skew-join splitting
+    `salt` + `hot_cells` (shuffle regime only; the lookup has no shuffle,
+    so it has nothing to skew): replicate cover rows of hot cells `salt`
+    ways and spread their points across replicas via a deterministic hash
+    — the skew escape hatch when one cell dwarfs AQE's skew-join splitting
     (SURVEY.md §7.4). Measured guidance (BENCH/skew_salting.json):
     pick salt WELL ABOVE spark.sql.shuffle.partitions — salt buckets hash
     into reduce partitions like balls into bins, and 32 buckets over 64
@@ -181,21 +221,18 @@ def pip_join(
     pandas-UDF work makes it a CPU straggler (AQE detection is byte-based;
     measure_hot_cells counts rows).
 
-    `salt="auto"`: measure the hot cells (one groupBy job) and, if any
-    exist, size the salt at 4x spark.sql.shuffle.partitions per the
-    measured grain rule; with no hot cells the join is unsalted (zero
-    overhead beyond the detection job).
+    `salt="auto"`: in the shuffle regime, measure the hot cells (one
+    groupBy job) and, if any exist, size the salt at 4x
+    spark.sql.shuffle.partitions per the measured grain rule; with no hot
+    cells the join is unsalted (zero overhead beyond the detection job).
+    The regime is decided first, so a broadcast layer runs no detection.
+
+    A point whose lon or lat is NULL or NaN matches nothing; a polygon
+    whose id is NULL matches as any other, with a NULL `poly_id`.
     """
     spark = points_df.sparkSession
     if z == "auto":
         z = auto_zoom(polys_df, wkb_col)
-    if salt == "auto":
-        if hot_cells is None:
-            hot_cells = measure_hot_cells(points_df, z=z, lon=lon, lat=lat)
-        salt = (
-            4 * int(spark.conf.get("spark.sql.shuffle.partitions"))
-            if hot_cells else None
-        )
 
     # one job: the byte sum picks the regime, and (bytes, rows, content
     # fingerprint) keys the cover cache, so a cached layer collects nothing
@@ -205,26 +242,32 @@ def pip_join(
         F.sum(F.xxhash64(F.col(poly_id), F.col(wkb_col)).cast("decimal(20,0)")),
     ).first()
     wkb_bytes = stats[0] or 0
-    cached = None
     if fits_broadcast(spark, "pip_join.cover", wkb_bytes):
-        # the AOI layer is static dimension data: build its cover and decode
-        # its polygons ONCE per (polygon content, z) and reuse them across
-        # queries — the analogue of a prepared dimension index
+        # the AOI layer is static dimension data: build its sorted cover and
+        # decode its polygons ONCE per (polygon content, z) and reuse them
+        # across queries — the analogue of a prepared dimension index
         key = (z, wkb_bytes, stats[1], stats[2])
-        cached = _COVER_CACHE.get(key)
-        if cached is None:
+        table = _COVER_CACHE.get(key)
+        if table is None:
             rows = polys_df.select(poly_id, wkb_col).collect()
-            cached = (
-                _cover_frame([r[0] for r in rows], [r[1] for r in rows], z),
-                {r[0]: wkb_mod.from_wkb(bytes(r[1])) for r in rows if r[1] is not None},
-            )
+            table = _sorted_cover([r[0] for r in rows], [r[1] for r in rows], z)
             if len(_COVER_CACHE) > 32:
                 _COVER_CACHE.clear()
-            _COVER_CACHE[key] = cached
-        cover = spark.createDataFrame(cached[0], _cover_schema(polys_df, poly_id))
-    else:
-        cover = build_cover_df(spark, polys_df, z, poly_id, wkb_col)
+            _COVER_CACHE[key] = table
+        # a projection, not the explode's argument: the optimizer collapses
+        # it into the projection of any upstream Arrow UDFs (assign_tiles'
+        # S2/hex7 encodes), so one ArrowEvalPython runs them all
+        hits = _pip_hits_udf(table, polys_df.schema[poly_id].dataType)
+        pts = points_df.drop("cell").withColumn(
+            "_pip_hits", hits(cell_expr(lon, lat, z), F.col(lon), F.col(lat))
+        )
+        return pts.withColumn("poly_id", F.explode("_pip_hits")).drop("_pip_hits")
 
+    if salt == "auto":
+        if hot_cells is None:
+            hot_cells = measure_hot_cells(points_df, z=z, lon=lon, lat=lat)
+        salt = 4 * int(spark.conf.get("spark.sql.shuffle.partitions")) if hot_cells else None
+    cover = build_cover_df(spark, polys_df, z, poly_id, wkb_col)
     pts = points_df.withColumn("cell", cell_expr(lon, lat, z))
 
     if salt and hot_cells:
@@ -253,30 +296,25 @@ def pip_join(
     else:
         join_keys = ["cell"]
 
-    if cached is not None:
-        # small-dim broadcast: the decoded polygons feed the exact-check
-        # closure
-        joined = pts.join(F.broadcast(cover), join_keys, "inner")
-        check = _pip_check_udf(cached[1])
-        joined = joined.filter(
-            F.col("full") | check(F.col("poly_id"), F.col(lon), F.col(lat))
-        )
-    else:
-        # cover normalizes the id column name to 'poly_id'; alias the source
-        # table to match so custom poly_id column names join correctly
-        wkb_side = polys_df.select(F.col(poly_id).alias("poly_id"), F.col(wkb_col))
-        cover = cover.join(wkb_side, "poly_id")
-        joined = pts.join(cover, join_keys, "inner")
-        joined = joined.filter(
-            F.col("full") | exact_check_with_wkb(F.col(wkb_col), F.col(lon), F.col(lat))
-        ).drop(wkb_col)
-
-    drop = ["cell", "full"] + (["_salt"] if salt and hot_cells else [])
-    return joined.drop(*drop)
+    # the cover names its id column 'poly_id' whatever the input called it;
+    # the null-safe match keeps a polygon whose id is NULL, as the lookup does
+    wkb_side = polys_df.select(F.col(poly_id).alias("_wkb_id"), F.col(wkb_col))
+    cover = cover.join(wkb_side, cover["poly_id"].eqNullSafe(wkb_side["_wkb_id"]))
+    cover = cover.drop("_wkb_id")
+    joined = pts.join(cover, join_keys, "inner")
+    joined = joined.filter(
+        F.col("full") | exact_check_with_wkb(F.col(wkb_col), F.col(lon), F.col(lat))
+    )
+    return joined.drop(wkb_col, "cell", "full", *(["_salt"] if salt and hot_cells else []))
 
 
 def cell_expr(lon: str, lat: str, z: int):
-    return cells_mod.cell_col(lon, lat, z)
+    """A point's cell key at zoom z; NULL when lon or lat is NULL or NaN,
+    so the point meets no cover cell (the clamped grid key would put it
+    in an edge cell)."""
+    s = f"({lon} + {lat})"
+    cell = cells_mod.cell_sql(lon, lat, z)
+    return F.expr(f"CASE WHEN {s} IS NULL OR isnan({s}) THEN NULL ELSE {cell} END")
 
 
 def measure_hot_cells(

@@ -11,7 +11,7 @@ coordinates only, never from partition index).
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
@@ -23,9 +23,11 @@ from gis_scripts_spark.index import tiles as tiles_mod
 
 
 def s2_cell_udf(level: int):
-    @F.pandas_udf(LongType())
-    def enc(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        return pd.Series(s2_mod.cell_id(lat.to_numpy(), lon.to_numpy(), level))
+    """Arrow-vectorized S2 cell encode."""
+
+    @F.arrow_udf(LongType())
+    def enc(lat: pa.Array, lon: pa.Array) -> pa.Array:
+        return pa.array(s2_mod.cell_id(_np(lat), _np(lon), level))
 
     return enc
 
@@ -33,11 +35,16 @@ def s2_cell_udf(level: int):
 def hex7_cell_udf(res: int):
     """Arrow-vectorized hex7 (H3-structure aperture-7 hex) cell encode."""
 
-    @F.pandas_udf(LongType())
-    def enc(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        return pd.Series(hex7_mod.encode(lon.to_numpy(), lat.to_numpy(), res))
+    @F.arrow_udf(LongType())
+    def enc(lon: pa.Array, lat: pa.Array) -> pa.Array:
+        return pa.array(hex7_mod.encode(_np(lon), _np(lat), res))
 
     return enc
+
+
+def _np(a: pa.Array):
+    """numpy copy of an Arrow column; a float NULL reads as NaN, as in pandas."""
+    return a.to_numpy(zero_copy_only=False)
 
 
 def assign_tiles(
@@ -51,7 +58,7 @@ def assign_tiles(
 ) -> DataFrame:
     """Append cell/tile id columns: `cell` (grid), `tile_x/tile_y/tile_z`
     + `quadkey` (XYZ Web Mercator), `s2_cell` / `hex_cell` (optional,
-    Arrow pandas UDFs — the north rule's "encoded to H3 (and S2) cells").
+    Arrow UDFs — the north rule's "encoded to H3 (and S2) cells").
 
     Two projections: the cell and tile x/y, then the tile id, quadkey and
     UDF cells. Each key is one SQL expression (`cells`, `tiles`)."""

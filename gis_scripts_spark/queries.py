@@ -1074,7 +1074,7 @@ def q_hex_zonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hierarchical hex-cell zonal rollup on the hex7 index (the from-scratch
     H3-structure aperture-7 icosahedral index, `index/hex7.py` — the north
     rule's "encoded to H3 (and S2) cells"): events are encoded to hex cells
-    via ONE Arrow pandas UDF (no per-row Python), then a map-side-combinable
+    via ONE Arrow UDF (no per-row Python), then a map-side-combinable
     groupBy rolls up count / mean / distinct users per cell. The DuckDB
     oracle recomputes the ids bit-for-bit through hex7.sql_cell_ctes."""
     ev = derived_lonlat(_pq(spark, sf_dir, "events"), "event_id")

@@ -4,7 +4,8 @@ Local-mode sandbox stands in for a multi-executor cluster; all settings are
 chosen so the same code runs unchanged under ``spark-submit --py-files`` on a
 real cluster (nothing here is local-only).
 
-Every Python UDF task (the S2 and hex7 encodes, pip_join's exact check,
+Every Python UDF task (the S2 and hex7 encodes and pip_join's polygon
+lookup, which share one Arrow node; the shuffle regime's exact check;
 image decode) pays a fixed worker cost before it reads a row. On Python
 3.11 PySpark's worker calls ``importlib.invalidate_caches()`` per task,
 and each of the 16 zip importers cached for pyspark.zip re-read the

@@ -1,6 +1,7 @@
 """Physical-plan quality gates (SURVEY.md §7.4): column pruning keeps the
 fat `bytes` column out of metadata-only plans and out of every shuffle;
-filters push down to the parquet scan; the AOI cover join broadcasts."""
+filters push down to the parquet scan; an AOI layer's cover is looked up
+in the one Python node that also encodes S2/hex7 cells."""
 
 import re
 
@@ -44,7 +45,11 @@ def test_filter_pushdown_reaches_scan(spark, images_parquet):
     assert m and "w" in m.group(1), plan[:2000]
 
 
-def test_pip_join_broadcasts_cover_and_keeps_bytes_out_of_shuffle(spark, images_parquet):
+def test_pip_join_looks_cover_up_in_one_python_node_and_keeps_bytes_out_of_shuffle(
+    spark, images_parquet
+):
+    """A broadcast-regime layer is a closure lookup: no join and no
+    BroadcastExchange under the aggregate, one ArrowEvalPython."""
     images = spark.read.parquet(images_parquet)
     polys = synth.aoi_polygons_df(spark)
     keys = tile_assign.assign_tiles(images, s2_level=None).select(
@@ -53,12 +58,44 @@ def test_pip_join_broadcasts_cover_and_keeps_bytes_out_of_shuffle(spark, images_
     joined = pip_join.pip_join(keys, polys, z=7)
     agg = joined.groupBy("poly_id").agg(F.count(F.lit(1)).alias("n"))
     plan = _plan(agg)
-    assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
+    executed = agg._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in executed and "BroadcastExchange" not in executed, executed
+    assert re.findall(r"\w*(?:Python|Pandas|Arrow)\w*", executed) == ["ArrowEvalPython"], executed
     # every Exchange in the plan must be bytes-free
     for ex in re.findall(r"Exchange [^\n]*", plan):
         assert "bytes" not in ex, ex
     scan_schema = re.search(r"ReadSchema: (.*)", plan).group(1)
     assert "bytes" not in scan_schema  # pruned at the source too
+
+
+@pytest.mark.parametrize("deterministic", [False, True])
+def test_pip_join_after_assign_tiles_plans_one_python_node(
+    spark, images_parquet, monkeypatch, deterministic
+):
+    """The S2 and hex7 encodes and the polygon lookup are Arrow UDFs in one
+    projection, so one ArrowEvalPython runs all three. The lookup is
+    nondeterministic for this: a deterministic one lets the optimizer
+    push the explode's `size(hits) > 0` filter below the projection, and
+    the lookup runs again in a second Python node."""
+    if deterministic:
+        make = pip_join._pip_hits_udf
+
+        def deterministic_hits(*args):
+            hits = make(*args)._unwrapped
+            hits.deterministic = True
+            return hits._wrapped()
+
+        monkeypatch.setattr(pip_join, "_pip_hits_udf", deterministic_hits)
+    images = spark.read.parquet(images_parquet)
+    tiles = tile_assign.assign_tiles(images, s2_level=12, hex_res=7)
+    joined = pip_join.pip_join(tiles, synth.aoi_polygons_df(spark), z=7)
+    plan = joined._jdf.queryExecution().executedPlan().toString()
+    nodes = [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln]
+    if deterministic:
+        assert len(nodes) == 2, plan
+    else:
+        assert len(nodes) == 1, plan
+        assert nodes[0].count("enc(") == 2 and "pip_hits(" in nodes[0], nodes[0]
 
 
 def test_match_pair_stats_bytes_free(spark, images_parquet):

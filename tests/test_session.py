@@ -115,17 +115,17 @@ def test_lazy_zip_invalidation_changes_nothing_on_python_3_13(tmp_path):
 
 
 def test_engine_workers_invalidate_zip_caches_lazily(spark):
-    import pandas as pd
+    import pyarrow as pa
     from pyspark.sql import functions as F
 
     from gis_scripts_spark.operators import tile_assign
 
     # defined here, so it is pickled by value and does not import the engine
-    @F.pandas_udf("boolean")
-    def lazy(lat: pd.Series) -> pd.Series:
+    @F.arrow_udf("boolean")
+    def lazy(lat: pa.Array) -> pa.Array:
         import zipimport
 
-        return pd.Series([zipimport.zipimporter.invalidate_caches.__module__ == "gis_scripts_spark"] * len(lat))
+        return pa.array([zipimport.zipimporter.invalidate_caches.__module__ == "gis_scripts_spark"] * len(lat))
 
     pts = spark.createDataFrame([(float(i), float(i)) for i in range(4)], "lon double, lat double")
     # one ArrowEvalPython node runs all three UDFs in one worker per task;

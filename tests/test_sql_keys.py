@@ -3,6 +3,7 @@ SQL against its numpy twin, the literal types it analyzes to, and the
 number of Py4J round trips the flagship operator costs to build."""
 
 import gc
+import threading
 import warnings
 
 import numpy as np
@@ -122,9 +123,14 @@ def test_assign_tiles_builds_in_few_round_trips(spark, monkeypatch):
     pts = spark.range(10).select((F.col("id") * 1.0).alias("lon"), (F.col("id") * 0.5).alias("lat"))
     sent = []
     send = ClientServerConnection.send_command
+    this_thread = threading.get_ident()
 
     def counting(self, command):
-        sent.append(command)
+        # py4j's finalizer thread sends the deletes of collected JavaObjects
+        # (earlier tests' garbage among them) while the count runs: only
+        # this thread's commands build assign_tiles
+        if threading.get_ident() == this_thread:
+            sent.append(command)
         return send(self, command)
 
     monkeypatch.setattr(ClientServerConnection, "send_command", counting)

@@ -19,6 +19,11 @@ sys.path.insert(0, REPO)
 QUERIES = [
     "tile_assign",
     "pip_counts",
+    # pip_join on its own and after a source or an aggregate
+    "pip_pairs",
+    "geojson_pip",
+    "geoparquet_pip",
+    "zonal_event_stats",
     "knn_k5",
     "grid_agg_mean_of_means",
     "minhash_lsh_pairs",
